@@ -33,11 +33,24 @@ filter + partial agg happen map-side before the first shuffle (the
 reference's combiner, for free via HashAggregateExec). The two big joins
 shuffle on (lang, decade, word) — high cardinality, well distributed
 after stopword removal. N (≈ langs × decades rows) is broadcast. The
-unigram-count subtree feeds three consumers (c1, c2, N); callers running
-the full pipeline should pass ``cache_counts=True`` so it computes once.
+unigram-count subtree feeds three consumers (c1, c2, N); AQE reads its
+shuffle once (the c2 and N consumers run as ReusedExchange).
+
+Plan memo: building the flagship's Column trees is ~1,900 py4j
+round-trips (~0.7 s of driver time on a 4-core host) per call, for a
+plan that depends only on (sf_dir, k, quirk_mode) and the documents
+input's state. The whole-pipeline builders (``q_scored``, ``q_topk``, ``q_topk_quirk``,
+``q_hebrew_topk``) therefore serve their constructed DataFrame from
+``_COLLOC_MEMO`` (a ``plans.cache.PlanMemo``): a warm call costs one
+stat, one ``applicationId`` read and the session-conf re-pin. A new
+session, a restarted context or an in-place rewrite of
+``documents.parquet`` rebuilds. ``q_topk`` builds on the memoized
+``q_scored``, so the ``operators.ngrams`` composers reuse it too.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
@@ -47,13 +60,14 @@ from ..constants import LLR_ROUND, TOP_K
 from ..functions.exact import ieee_round
 from ..functions.llr import llr, llr_named
 from ..functions.text import clean_token, decade
+from ..plans.cache import PlanMemo, corpus_state
 from ..sources.ngram_source import (
     bigram_records,
     hebrew_bigram_records,
     hebrew_unigram_records,
     unigram_records,
 )
-from ..sources.tables import stopwords_df
+from ..sources.tables import _ensure_session_confs, stopwords_df
 
 
 # --- record-level transforms (DataFrame -> DataFrame) -------------------
@@ -326,35 +340,54 @@ def q_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return totals(uni)
 
 
+# One memo for the family; keys are (builder, sf_dir, k, quirk_mode),
+# None where the builder has no such parameter. At most 8 handles: the
+# registry's four flagship plans at two corpora.
+_COLLOC_MEMO = PlanMemo(max_entries=8)
+
+
+def _memoized(builder: str, spark: SparkSession, sf_dir: str,
+              k: int | None, quirk_mode: bool | None,
+              build: Callable[[], DataFrame]) -> DataFrame:
+    """``build()``'s plan, served from ``_COLLOC_MEMO`` while the
+    session and the documents input's state are unchanged. The session
+    confs are re-applied on every call, hit or miss: a caller-built
+    session may have reset the time zone since the plan was built."""
+    _ensure_session_confs(spark)
+    return _COLLOC_MEMO.get((builder, sf_dir, k, quirk_mode), spark,
+                            corpus_state(sf_dir, spark),
+                            lambda: (build(), None))
+
+
 def q_scored(spark: SparkSession, sf_dir: str,
-             cache_counts: bool = False,
              quirk_mode: bool = False) -> DataFrame:
     """``quirk_mode=True`` opts into bit-parity with the reference's
     two bugs (SURVEY.md §4 quirks 1-2): fragmented c12 partials and a
     single-reducer N, via ``bigram_counts_quirk`` / ``totals_quirk``.
     Default is the intended-exact semantics."""
-    uni, big = _cleaned_inputs(spark, sf_dir)
-    c1_df = unigram_counts(uni)
-    if cache_counts:
-        # c1 feeds three consumers (J1 probe, J2 probe as c2, N);
-        # at scale, computing the unigram-count subtree once matters.
-        c1_df = c1_df.persist()
-    if quirk_mode:
-        c12_df = bigram_counts_quirk(big)
-        totals_df = totals_quirk(c1_df)
-    else:
-        c12_df = bigram_counts(big)
-        # N = Σ c1 — rolls up from the (possibly cached) counts instead
-        # of re-scanning the raw unigram stream (algebraically identical).
-        totals_df = (c1_df.groupBy("lang", "decade")
-                     .agg(F.sum("c1").alias("n_total")))
-    return score_collocations(c12_df, c1_df, totals_df)
+    def build() -> DataFrame:
+        uni, big = _cleaned_inputs(spark, sf_dir)
+        c1_df = unigram_counts(uni)
+        if quirk_mode:
+            c12_df = bigram_counts_quirk(big)
+            totals_df = totals_quirk(c1_df)
+        else:
+            c12_df = bigram_counts(big)
+            # N = Σ c1 — rolls up from the counts instead of re-scanning
+            # the raw unigram stream (algebraically identical).
+            totals_df = (c1_df.groupBy("lang", "decade")
+                         .agg(F.sum("c1").alias("n_total")))
+        return score_collocations(c12_df, c1_df, totals_df)
+
+    return _memoized("scored", spark, sf_dir, None, quirk_mode, build)
 
 
 def q_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K,
            quirk_mode: bool = False) -> DataFrame:
-    return top_collocations(q_scored(spark, sf_dir,
-                                     quirk_mode=quirk_mode), k)
+    return _memoized(
+        "topk", spark, sf_dir, k, quirk_mode,
+        lambda: top_collocations(
+            q_scored(spark, sf_dir, quirk_mode=quirk_mode), k))
 
 
 def q_topk_quirk(spark: SparkSession, sf_dir: str,
@@ -373,16 +406,20 @@ def q_topk_quirk(spark: SparkSession, sf_dir: str,
     that fidelity for a cross-engine-reproducible surrogate."""
     from ..sources.ngram_source import _docs_with_tokens
 
-    stop = stopwords_df(spark)
-    docs = _docs_with_tokens(spark, sf_dir)   # shared subtree (r10)
-    uni = clean_unigrams(unigram_records(spark, sf_dir, docs=docs), stop)
-    big = clean_bigrams(bigram_records(spark, sf_dir, keep_doc=True,
-                                       docs=docs),
-                        stop, carry=("doc_id",))
-    c1_df = unigram_counts(uni)
-    scored = score_collocations(bigram_counts_quirk_det(big), c1_df,
-                                totals_quirk_det(c1_df))
-    return top_collocations(scored, k)
+    def build() -> DataFrame:
+        stop = stopwords_df(spark)
+        docs = _docs_with_tokens(spark, sf_dir)   # shared subtree (r10)
+        uni = clean_unigrams(unigram_records(spark, sf_dir, docs=docs),
+                             stop)
+        big = clean_bigrams(bigram_records(spark, sf_dir, keep_doc=True,
+                                           docs=docs),
+                            stop, carry=("doc_id",))
+        c1_df = unigram_counts(uni)
+        scored = score_collocations(bigram_counts_quirk_det(big), c1_df,
+                                    totals_quirk_det(c1_df))
+        return top_collocations(scored, k)
+
+    return _memoized("topk_quirk", spark, sf_dir, k, None, build)
 
 
 def q_hebrew_topk(spark: SparkSession, sf_dir: str,
@@ -396,13 +433,17 @@ def q_hebrew_topk(spark: SparkSession, sf_dir: str,
     from ..sources.ngram_source import (_docs_with_tokens,
                                         HEBREW_TEXT_SQL, HEBREW_WHERE_SQL)
 
-    stop = stopwords_df(spark)
-    docs = _docs_with_tokens(spark, sf_dir, HEBREW_TEXT_SQL, "'he'",
-                             HEBREW_WHERE_SQL)   # shared subtree (r10)
-    uni = clean_unigrams(unigram_records(spark, sf_dir, docs=docs), stop)
-    big = clean_bigrams(bigram_records(spark, sf_dir, docs=docs), stop)
-    c1_df = unigram_counts(uni)
-    totals_df = (c1_df.groupBy("lang", "decade")
-                 .agg(F.sum("c1").alias("n_total")))
-    scored = score_collocations(bigram_counts(big), c1_df, totals_df)
-    return top_collocations(scored, k)
+    def build() -> DataFrame:
+        stop = stopwords_df(spark)
+        docs = _docs_with_tokens(spark, sf_dir, HEBREW_TEXT_SQL, "'he'",
+                                 HEBREW_WHERE_SQL)   # shared subtree (r10)
+        uni = clean_unigrams(unigram_records(spark, sf_dir, docs=docs),
+                             stop)
+        big = clean_bigrams(bigram_records(spark, sf_dir, docs=docs), stop)
+        c1_df = unigram_counts(uni)
+        totals_df = (c1_df.groupBy("lang", "decade")
+                     .agg(F.sum("c1").alias("n_total")))
+        scored = score_collocations(bigram_counts(big), c1_df, totals_df)
+        return top_collocations(scored, k)
+
+    return _memoized("hebrew_topk", spark, sf_dir, k, None, build)

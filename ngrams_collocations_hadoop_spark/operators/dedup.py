@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from ..sources.tables import (attach_pk_gate, fan_out, load_table,
                               require_unique_ids)
 from ..functions.exact import ieee_round
-from ..plans.cache import TrackedCache
+from ..plans.cache import TrackedCache, corpus_state
 
 # MinHash parameters: 64 permutations = 4 bands × 16 rows. Wide bands
 # (many rows) because the banding must PRUNE: candidate probability is
@@ -70,7 +70,7 @@ def _tokens_persisted(toks: DataFrame,
     plan and track the handle for release — the ``TrackedCache``
     policy (bounded FIFO of distinct plans, clearCache re-persist,
     state-keyed eviction). Callers pass ``state`` =
-    ``_corpus_stat(sf_dir, spark)`` so a rewritten-in-place corpus
+    ``corpus_state(sf_dir, spark)`` so a rewritten-in-place corpus
     re-persists fresh tokens instead of feeding stale cached ones to a
     freshly built state-keyed index (ADVICE r09)."""
     return _TOK_LIVE.get(toks, state)
@@ -334,7 +334,7 @@ def _minhash_lsh_pair_rows(spark: SparkSession, sf_dir: str,
     3.2 s → 2.6 s with it)."""
     docs = _tokens_persisted(
         _tokens(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "toks"), state=_corpus_stat(sf_dir, spark))
+        .select("doc_id", "toks"), state=corpus_state(sf_dir, spark))
     sigs = minhash_signatures(docs).select("doc_id", "sig")
     banded = sigs.select(
         "doc_id", "sig",
@@ -558,7 +558,7 @@ def q_dedup_incremental_lsh(spark: SparkSession, sf_dir: str,
         docs = load_table(spark, sf_dir, "documents")
     docs = _tokens_persisted(
         _tokens(docs).select("doc_id", "toks"),
-        state=_corpus_stat(sf_dir, spark))
+        state=corpus_state(sf_dir, spark))
     banded = _banded_signatures(docs)
     new_side = (banded.filter(F.col("doc_id") % NEW_BATCH_MOD == 0)
                 .select(F.col("doc_id").alias("doc_new"),
@@ -646,58 +646,6 @@ LSH_BUCKET_BYTES = 75_000
 LSH_INDEX_MAX_BUCKETS = 4096
 
 
-def _corpus_stat(sf_dir: str, spark: SparkSession | None = None,
-                 fname: str = "documents.parquet"
-                 ) -> tuple[int, int] | None:
-    """(mtime_ns, size_bytes) of the corpus' ``fname`` input
-    (documents by default; the PQ index keys on embeddings). Driver-
-    local ``os.stat`` first; on OSError (the input is not on a local
-    filesystem — HDFS/S3 in production) fall back to the Hadoop
-    FileSystem API through the JVM when a session is available, and
-    otherwise WARN loudly (ADVICE r06): a silent None would reinstate
-    the stale-index aliasing this stat exists to prevent."""
-    import os
-    import warnings
-
-    path = f"{sf_dir}/{fname}"
-    try:
-        st = os.stat(path)
-        if not os.path.isdir(path):
-            return st.st_mtime_ns, st.st_size
-        # Directory-of-parts corpora — the PRODUCTION shape, and what
-        # Spark writers produce: the directory inode's own stat is
-        # ~4 KB and its mtime misses in-place part rewrites, which
-        # would floor the bucket policy at 8 forever AND alias a
-        # rewritten corpus to its stale index (found by the r07
-        # factor-axis probe rerun: the 9.6 MB 16x corpus got 8
-        # buckets). Aggregate over the part files instead.
-        mtime, size = st.st_mtime_ns, 0
-        for root, _, files in os.walk(path):
-            for f in files:
-                fst = os.stat(os.path.join(root, f))
-                mtime = max(mtime, fst.st_mtime_ns)
-                size += fst.st_size
-        return mtime, size
-    except OSError:
-        pass
-    if spark is not None:
-        try:
-            jvm = spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(path)
-            fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-            st = fs.getFileStatus(p)
-            size = fs.getContentSummary(p).getLength()
-            return st.getModificationTime() * 1_000_000, size
-        except Exception:
-            pass
-    warnings.warn(
-        f"cannot stat {path} (local or Hadoop FS): state-keyed table "
-        f"names (LSH/PQ index, components) degrade to path-only "
-        f"keying — a rewritten corpus at the same path WILL alias a "
-        f"stale table", stacklevel=2)
-    return None
-
-
 def lsh_index_buckets(sf_dir: str, spark: SparkSession | None = None
                       ) -> int:
     """The corpus-scaled bucket count a BUILD applies by default:
@@ -706,7 +654,7 @@ def lsh_index_buckets(sf_dir: str, spark: SparkSession | None = None
     [LSH_INDEX_BUCKETS, LSH_INDEX_MAX_BUCKETS]."""
     import math
 
-    st = _corpus_stat(sf_dir, spark)
+    st = corpus_state(sf_dir, spark)
     if st is None:
         return LSH_INDEX_BUCKETS
     raw = max(1.0, st[1] / LSH_BUCKET_BYTES)
@@ -731,7 +679,7 @@ def lsh_index_table(sf_dir: str, spark: SparkSession | None = None,
     import hashlib
 
     dirh = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    st = _corpus_stat(sf_dir, spark)
+    st = corpus_state(sf_dir, spark)
     state = sf_dir if st is None else f"{sf_dir}|{st[0]}|{st[1]}"
     h = hashlib.md5(state.encode()).hexdigest()[:8]
     name = f"{LSH_INDEX_TABLE}_{dirh}_{h}"
@@ -792,7 +740,7 @@ def build_lsh_index(spark: SparkSession, sf_dir: str,
     # GATE reading a cacheable plan, not the write side.
     docs = _tokens_persisted(
         _tokens(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "toks"), state=_corpus_stat(sf_dir, spark))
+        .select("doc_id", "toks"), state=corpus_state(sf_dir, spark))
     if old_only:
         docs = docs.filter(F.col("doc_id") % NEW_BATCH_MOD != 0)
     # fail-loud PK gate: a band index built over duplicate ids would
@@ -879,7 +827,7 @@ def match_lsh_index(spark: SparkSession, sf_dir: str,
         docs = load_table(spark, sf_dir, "documents")
     docs = _tokens_persisted(
         _tokens(docs).select("doc_id", "toks"),
-        state=_corpus_stat(sf_dir, spark))
+        state=corpus_state(sf_dir, spark))
     index_side = read_table(spark, table).select(
         F.col("doc_id").alias("doc_match"),
         F.col("sig").alias("sig_b"), "band_id", "band_hash")
@@ -1581,7 +1529,7 @@ def q_dedup_components_incremental(spark: SparkSession,
     find r08) — the cache holds the ~true-near-dup set, tiny next to
     the candidate stream that produced it."""
     pairs = _INC_CC_LIVE.get(_minhash_lsh_pair_rows(spark, sf_dir),
-                             state=_corpus_stat(sf_dir, spark))
+                             state=corpus_state(sf_dir, spark))
     new_a = F.col("doc_a") % NEW_BATCH_MOD == 0
     new_b = F.col("doc_b") % NEW_BATCH_MOD == 0
     old_pairs = pairs.filter(~new_a & ~new_b)
@@ -1615,7 +1563,7 @@ def components_table(sf_dir: str,
     import hashlib
 
     dirh = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    st = _corpus_stat(sf_dir, spark)
+    st = corpus_state(sf_dir, spark)
     state = sf_dir if st is None else f"{sf_dir}|{st[0]}|{st[1]}"
     h = hashlib.md5(state.encode()).hexdigest()[:8]
     return f"{COMPONENTS_TABLE}_{dirh}_{h}"
@@ -1695,10 +1643,10 @@ def update_components_table(spark: SparkSession, sf_dir: str,
         # but only ever ADDS batch rows to an existing gated build —
         # batch identity is the ingest resolve step's contract.) The
         # trust holds ONLY while the state key is real: when
-        # ``_corpus_stat`` fails and the name degraded to path-only
+        # ``corpus_state`` fails and the name degraded to path-only
         # keying (ADVICE r09), a rewritten corpus aliases a stale index
         # AND would silently skip the audit — keep the gate there.
-        trusted = _corpus_stat(sf_dir, spark) is not None
+        trusted = corpus_state(sf_dir, spark) is not None
         docs = load_table(spark, sf_dir, "documents") if trusted else None
         batch_pairs = match_lsh_index(spark, sf_dir, lsh_table,
                                       docs=docs)

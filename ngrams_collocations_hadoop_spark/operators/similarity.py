@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import ieee_round, ieee_round_sql, uavg, uavg_sql
 
-from ..plans.cache import PlanMemo, TrackedCache
+from ..plans.cache import PlanMemo, TrackedCache, corpus_state
 from ..sources.tables import load_table
 from .dedup import cosine_expr
 
@@ -1068,9 +1068,7 @@ _PQ_CENT_LIVE = TrackedCache(max_live=3)
 def _emb_state(sf_dir: str, spark: SparkSession) -> object:
     """The embeddings input's corpus state — the tracked-cache state
     key for every embedding-derived pinned frame."""
-    from .dedup import _corpus_stat
-
-    return _corpus_stat(sf_dir, spark, fname="embeddings.parquet")
+    return corpus_state(sf_dir, spark, fname="embeddings.parquet")
 
 
 def _pq_parts(spark: SparkSession, sf_dir: str,
@@ -1297,10 +1295,8 @@ def pq_index_table(sf_dir: str, spark: SparkSession | None = None) -> str:
     change can never alias codes built under the old scheme."""
     import hashlib
 
-    from .dedup import _corpus_stat
-
     dirh = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    st = _corpus_stat(sf_dir, spark, fname="embeddings.parquet")
+    st = corpus_state(sf_dir, spark, fname="embeddings.parquet")
     state = sf_dir if st is None else f"{sf_dir}|{st[0]}|{st[1]}"
     h = hashlib.md5(f"{state}|{PQ_CB_SCHEME}".encode()).hexdigest()[:8]
     return f"{PQ_INDEX_TABLE}_{dirh}_{h}"

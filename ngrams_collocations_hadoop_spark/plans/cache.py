@@ -21,18 +21,73 @@ session-lifetime hazards this helper centralizes the fix for:
    about to build a fresh state-keyed table from it, undermining the
    no-stale-aliasing guarantee those names exist for. Each tracked
    handle therefore records the input's corpus state (the
-   ``_corpus_stat`` (mtime_ns, size) pair); a same-plan request whose
+   ``corpus_state`` (mtime_ns, size) pair); a same-plan request whose
    state changed evicts the stale handle and re-persists the caller's
    FRESH frame (fresh blocks AND a fresh scan/file listing).
 
 A ``state`` of None (the stat failed — non-local FS without a session)
 degrades to plan-only keying, matching the loud warning
-``_corpus_stat`` already emits for exactly that situation.
+``corpus_state`` already emits for exactly that situation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+import threading
+import warnings
+
+from pyspark.sql import DataFrame, SparkSession
+
+
+def corpus_state(sf_dir: str, spark: SparkSession | None = None,
+                 fname: str = "documents.parquet"
+                 ) -> tuple[int, int] | None:
+    """(mtime_ns, size_bytes) of the corpus' ``fname`` input
+    (documents by default; the PQ index keys on embeddings) — the
+    state key of every state-keyed table name, ``TrackedCache`` entry
+    and ``PlanMemo`` entry. Driver-local ``os.stat`` first; on OSError
+    (the input is not on a local filesystem — HDFS/S3 in production)
+    fall back to the Hadoop FileSystem API through the JVM when a
+    session is available, and otherwise WARN loudly (ADVICE r06): a
+    silent None would reinstate the stale-index aliasing this stat
+    exists to prevent."""
+    path = f"{sf_dir}/{fname}"
+    try:
+        st = os.stat(path)
+        if not os.path.isdir(path):
+            return st.st_mtime_ns, st.st_size
+        # Directory-of-parts corpora — the PRODUCTION shape, and what
+        # Spark writers produce: the directory inode's own stat is
+        # ~4 KB and its mtime misses in-place part rewrites, which
+        # would floor the bucket policy at 8 forever AND alias a
+        # rewritten corpus to its stale index (found by the r07
+        # factor-axis probe rerun: the 9.6 MB 16x corpus got 8
+        # buckets). Aggregate over the part files instead.
+        mtime, size = st.st_mtime_ns, 0
+        for root, _, files in os.walk(path):
+            for f in files:
+                fst = os.stat(os.path.join(root, f))
+                mtime = max(mtime, fst.st_mtime_ns)
+                size += fst.st_size
+        return mtime, size
+    except OSError:
+        pass
+    if spark is not None:
+        try:
+            jvm = spark._jvm
+            p = jvm.org.apache.hadoop.fs.Path(path)
+            fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+            st = fs.getFileStatus(p)
+            size = fs.getContentSummary(p).getLength()
+            return st.getModificationTime() * 1_000_000, size
+        except Exception:
+            pass
+    warnings.warn(
+        f"cannot stat {path} (local or Hadoop FS): state-keyed table "
+        f"names (LSH/PQ index, components) degrade to path-only "
+        f"keying — a rewritten corpus at the same path WILL alias a "
+        f"stale table", stacklevel=2)
+    return None
 
 
 class TrackedCache:
@@ -90,8 +145,19 @@ class PlanMemo:
     py4j round-trips per invocation, paid by every warm re-run at any
     corpus scale, for a plan that is a pure function of (inputs,
     corpus state). This is NOT result caching: the memo stores the
-    DataFrame HANDLE (an unresolved plan); every action against it
-    still executes the full DAG from the parquet inputs.
+    DataFrame HANDLE, and every write, ``count`` or derived frame
+    plans and executes the full DAG from the parquet inputs. One
+    caveat: ``collect``/``toPandas`` reuse the handle's own
+    QueryExecution, so a repeated one skips the shuffle map stages
+    whose outputs Spark still holds and runs only the last stage.
+    Those outputs came from the same corpus state the hit was keyed
+    on, and they stay on local disk while the entry lives — at most
+    ``max_entries`` plans' shuffle files.
+
+    Users: the PQ ANN family (``similarity._PQ_QUERY_MEMO``, the
+    trained codebook's ``_PQ_CB_MEMO``) and the flagship collocation
+    family (``collocations._COLLOC_MEMO``: ``q_scored``, ``q_topk``,
+    ``q_topk_quirk``, ``q_hebrew_topk``).
 
     Guards, centralizing the ADVICE r10 fixes on the r10 ad-hoc memo:
 
@@ -100,14 +166,14 @@ class PlanMemo:
       under a reused session object must rebuild, not hand back
       Columns wrapping dead JavaObjects.
     - corpus state: a hit requires the builder-supplied ``state``
-      (the ``_corpus_stat`` (mtime_ns, size) pair) to be unchanged;
+      (the ``corpus_state`` (mtime_ns, size) pair) to be unchanged;
       an in-place input rewrite rebuilds. A state of None (stat
       unavailable — non-local FS without a fallback) DISABLES
       memoization for that call instead of treating None == None as
       a valid hit.
-    - recency: reinsert deletes the key first, so the FIFO eviction
-      order tracks recency (an overwritten hot entry is not evicted
-      before cold ones); bounded at ``max_entries``.
+    - recency: a hit or a rebuild moves the key to the recent end, so
+      eviction drops the least recently used entry past
+      ``max_entries`` (a hot entry is not evicted before cold ones).
 
     Only memoize builders that are PURE PLAN CONSTRUCTION: no eager
     materialization (localCheckpoint, eager index/table builds), no
@@ -122,6 +188,9 @@ class PlanMemo:
         self.max_entries = max_entries
         # key -> (session, app_id, state, repin, df), oldest first
         self._memo: dict = {}
+        # serving threads may share one session; the builds and repins
+        # run outside the lock (a builder may re-enter this memo)
+        self._lock = threading.Lock()
 
     def get(self, key, spark, state, build):
         """The memoized plan for ``key``, rebuilding via ``build()``
@@ -132,19 +201,24 @@ class PlanMemo:
             app = spark.sparkContext.applicationId
         except Exception:   # stopped/stopping context — never memoize
             return build()[0]
-        hit = self._memo.get(key)
+        with self._lock:
+            hit = self._memo.pop(key, None)
+            if hit is not None:
+                self._memo[key] = hit   # reinsert = move to recent end
         if (hit is not None and hit[0] is spark and hit[1] == app
                 and hit[2] == state):
             if hit[3] is not None:
                 hit[3]()
             return hit[4]
         df, repin = build()
-        self._memo.pop(key, None)   # reinsert = move to recent end
-        self._memo[key] = (spark, app, state, repin, df)
-        while len(self._memo) > self.max_entries:
-            self._memo.pop(next(iter(self._memo)))
+        with self._lock:
+            self._memo.pop(key, None)
+            self._memo[key] = (spark, app, state, repin, df)
+            while len(self._memo) > self.max_entries:
+                self._memo.pop(next(iter(self._memo)))
         return df
 
     def clear(self) -> None:
         """Drop every memoized plan (test harness hook)."""
-        self._memo.clear()
+        with self._lock:
+            self._memo.clear()

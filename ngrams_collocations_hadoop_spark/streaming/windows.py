@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import usum, usum_sql
 
+from ..plans.cache import corpus_state
 from ..sources.tables import _ensure_session_confs, normalize_timestamps
 
 SESSION_GAP_SECONDS = 1800
@@ -1237,15 +1238,15 @@ def _ingest_batch_dir(spark: SparkSession, sf_dir: str) -> str:
     per corpus STATE: the directory name carries the documents input's
     (mtime_ns, size), so a rewritten fixture gets a fresh layout
     instead of streaming stale files (the ``_schema_cache_key``
-    staleness discipline; on stat failure ``_corpus_stat`` already
+    staleness discipline; on stat failure ``corpus_state`` already
     warns about path-only degradation)."""
     import os
 
-    from ..operators.dedup import NEW_BATCH_MOD, _corpus_stat
+    from ..operators.dedup import NEW_BATCH_MOD
     from ..sources.tables import load_table
 
     sf_abs = os.path.abspath(sf_dir)
-    st = _corpus_stat(sf_abs, spark)
+    st = corpus_state(sf_abs, spark)
     state = "" if st is None else f"_{st[0]}_{st[1]}"
     d = f"/tmp/ncs_stream/{_dir_slug(sf_abs)}_docbatch{state}"
     if not os.path.exists(f"{d}/_SUCCESS"):
@@ -1416,8 +1417,7 @@ def q_stream_components_maintain(spark: SparkSession,
               .parquet(batch_dir))
 
     def tick(batch: DataFrame, batch_id: int) -> None:
-        from ..operators.dedup import (_corpus_stat, _tokens,
-                                       _tokens_persisted)
+        from ..operators.dedup import _tokens, _tokens_persisted
 
         sess = batch.sparkSession
         append_lsh_index(sess, lsh_table, batch)
@@ -1431,7 +1431,7 @@ def q_stream_components_maintain(spark: SparkSession,
         toks = _tokens_persisted(
             _tokens(load_table(sess, sf_dir, "documents"))
             .select("doc_id", "toks"),
-            state=_corpus_stat(sf_dir, sess))
+            state=corpus_state(sf_dir, sess))
         pairs = match_index_pairs_for_tick(sess, lsh_table, batch, toks)
         refresh_components_table(sess, sf_dir, cc_table,
                                  batch_pairs=pairs)

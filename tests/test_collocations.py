@@ -244,6 +244,9 @@ def test_deterministic_quirk_topk_diverges_and_is_stable(spark):
              for r in co.q_topk(spark, SF_SMALL).collect()}
     q1 = {(r.lang, r.decade, r.bigram, r.rank): r.llr
           for r in co.q_topk_quirk(spark, SF_SMALL).collect()}
+    # a fresh plan, not the memoized handle: re-collecting that one
+    # would reuse its shuffle outputs instead of running again
+    co._COLLOC_MEMO.clear()
     q2 = {(r.lang, r.decade, r.bigram, r.rank): r.llr
           for r in co.q_topk_quirk(spark, SF_SMALL).collect()}
     assert q1 == q2                       # deterministic
@@ -289,3 +292,103 @@ def test_quirk_det_aggregation_invariants(spark):
     assert set(qn) == set(en)
     assert all(0 < qn[k] <= en[k] for k in qn)
     assert any(qn[k] < en[k] for k in qn)   # genuinely partial somewhere
+
+
+# --- plan memo (co._COLLOC_MEMO) ------------------------------------------
+
+def _memo_entry(key):
+    """The stored (session, app_id, state, repin, df) entry for ``key``."""
+    return co._COLLOC_MEMO._memo[key]
+
+
+def test_topk_plan_memo_hit_is_identical_and_matches_oracle(spark):
+    """A warm q_topk call returns the very handle the first call built
+    (no Column-tree rebuild), and that handle still matches the oracle."""
+    from .conftest import SF_SMALL
+    from .util_diff import assert_query_matches_oracle
+
+    co._COLLOC_MEMO.clear()
+    a = co.q_topk(spark, SF_SMALL)
+    assert co.q_topk(spark, SF_SMALL) is a
+    # the scored prefix is memoized too, so the ngrams composers share it
+    assert co.q_scored(spark, SF_SMALL) is co.q_scored(spark, SF_SMALL)
+    assert_query_matches_oracle(spark, "colloc_topk", SF_SMALL)
+    assert co.q_topk(spark, SF_SMALL) is a
+
+
+def test_topk_plan_memo_keys_on_k_and_quirk_mode(spark):
+    from .conftest import SF_SMALL
+
+    co._COLLOC_MEMO.clear()
+    base = co.q_topk(spark, SF_SMALL)
+    k5 = co.q_topk(spark, SF_SMALL, k=5)
+    quirk = co.q_topk(spark, SF_SMALL, quirk_mode=True)
+    assert len({id(base), id(k5), id(quirk)}) == 3
+    assert not k5.sameSemantics(base) and not quirk.sameSemantics(base)
+    assert co.q_topk(spark, SF_SMALL, k=5) is k5
+    assert co.q_topk(spark, SF_SMALL, quirk_mode=True) is quirk
+    keys = set(co._COLLOC_MEMO._memo)
+    assert {("topk", SF_SMALL, co.TOP_K, False), ("topk", SF_SMALL, 5, False),
+            ("topk", SF_SMALL, co.TOP_K, True),
+            ("scored", SF_SMALL, None, False),
+            ("scored", SF_SMALL, None, True)} <= keys
+
+
+def test_topk_plan_memo_rebuilds_on_in_place_rewrite(spark, tmp_path):
+    """Rewriting documents.parquet in place moves the corpus state: the
+    next call misses, builds a fresh plan over the new file, and that
+    plan matches the oracle on the NEW data."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from .conftest import SF_SMALL
+    from .util_diff import assert_query_matches_oracle
+
+    d = str(tmp_path)
+    for f in os.listdir(SF_SMALL):
+        shutil.copyfile(os.path.join(SF_SMALL, f), os.path.join(d, f))
+    co._COLLOC_MEMO.clear()
+    a = co.q_topk(spark, d)
+    old_rows = sorted(map(tuple, a.collect()))
+    assert co.q_topk(spark, d) is a
+
+    docs = f"{d}/documents.parquet"
+    t = pq.read_table(docs)
+    pq.write_table(t.slice(0, t.num_rows // 2), docs)   # same path
+    b = co.q_topk(spark, d)
+    assert b is not a
+    assert sorted(map(tuple, b.collect())) != old_rows
+    assert_query_matches_oracle(spark, "colloc_topk", d)
+    assert co.q_topk(spark, d) is b
+
+
+def test_topk_plan_memo_misses_on_new_application_id(spark):
+    """An entry stored under another applicationId (a stopped and
+    recreated context behind the same session object) is never served."""
+    from .conftest import SF_SMALL
+
+    co._COLLOC_MEMO.clear()
+    a = co.q_topk(spark, SF_SMALL)
+    key = ("topk", SF_SMALL, co.TOP_K, False)
+    sess, _, state, repin, df = _memo_entry(key)
+    co._COLLOC_MEMO._memo[key] = (sess, "app-stopped", state, repin, df)
+    b = co.q_topk(spark, SF_SMALL)
+    assert b is not a and b.sameSemantics(a)
+    assert _memo_entry(key)[1] == spark.sparkContext.applicationId
+
+
+def test_topk_plan_memo_hit_restores_session_confs(spark):
+    """A hit skips the builder, so it must still pin the correctness
+    confs a caller-built session may have reset between calls."""
+    from .conftest import SF_SMALL
+
+    co._COLLOC_MEMO.clear()
+    a = co.q_topk(spark, SF_SMALL)
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        assert co.q_topk(spark, SF_SMALL) is a
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")

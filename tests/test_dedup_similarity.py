@@ -489,18 +489,19 @@ def test_lsh_bucket_policy_on_directory_corpus(tmp_path):
     import os
 
     from ngrams_collocations_hadoop_spark.operators.dedup import (
-        _corpus_stat, lsh_index_buckets)
+        lsh_index_buckets)
+    from ngrams_collocations_hadoop_spark.plans.cache import corpus_state
 
     d = tmp_path / "documents.parquet"
     d.mkdir()
     for i in range(3):
         (d / f"part-{i}.parquet").write_bytes(b"x" * 800_000)
-    mtime, size = _corpus_stat(str(tmp_path))
+    mtime, size = corpus_state(str(tmp_path))
     assert size == 2_400_000
     assert lsh_index_buckets(str(tmp_path)) == 32
     # an in-place part rewrite must move the state key
     os.utime(d / "part-1.parquet", ns=(mtime + 10**9, mtime + 10**9))
-    assert _corpus_stat(str(tmp_path))[0] > mtime
+    assert corpus_state(str(tmp_path))[0] > mtime
 
 
 def test_lsh_bucket_policy_and_match_parallelism(spark):
@@ -766,27 +767,35 @@ def test_pq_trained_codebook_plan_memo(spark):
     from ngrams_collocations_hadoop_spark.operators import similarity as S
     from .conftest import SF_SMALL
 
+    # PlanMemo entries: key -> (session, app_id, state, repin, df)
+    memo = S._PQ_CB_MEMO._memo
+    key = (SF_SMALL, None)
     S._PQ_CB_MEMO.clear()
+    S._PQ_TRAIN_LIVE.clear()   # so it tracks exactly this chain's rounds
     a = S._pq_trained_codebook(spark, SF_SMALL)
     assert S._pq_trained_codebook(spark, SF_SMALL) is a  # memo hit
+    assert memo[key][4] is a
+    assert len(S._PQ_TRAIN_LIVE.handles) == S.PQ_TRAIN_ITERS
     # hit path re-pins the per-round handles after a clearCache
     spark.catalog.clearCache()
     assert S._pq_trained_codebook(spark, SF_SMALL) is a
-    lvls = [h.storageLevel for h in S._PQ_CB_MEMO[(SF_SMALL, None)][2]]
-    assert lvls and all(lvl.useMemory or lvl.useDisk for lvl in lvls)
+    lvls = [h.storageLevel for h in S._PQ_TRAIN_LIVE.handles]
+    assert len(lvls) == S.PQ_TRAIN_ITERS
+    assert all(lvl.useMemory or lvl.useDisk for lvl in lvls)
     # a corpus-state move (in-place embeddings rewrite) must miss and
     # rebuild — same plan, fresh construction
-    sess, _, rounds, final = S._PQ_CB_MEMO[(SF_SMALL, None)]
-    S._PQ_CB_MEMO[(SF_SMALL, None)] = (sess, ("moved",), rounds, final)
+    sess, app, _, repin, final = memo[key]
+    memo[key] = (sess, app, ("moved",), repin, final)
     d = S._pq_trained_codebook(spark, SF_SMALL)
     assert d is not a and d.sameSemantics(a)
+    assert memo[key][4] is d
     # the e-override path (append test's epoch-slice training) bypasses
     # the memo entirely
-    n0 = len(S._PQ_CB_MEMO)
+    n0 = len(memo)
     e = S.load_finite_embeddings(spark, SF_SMALL).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v"))
     S._pq_trained_codebook(spark, SF_SMALL, e=e)
-    assert len(S._PQ_CB_MEMO) == n0
+    assert len(memo) == n0 and memo[key][4] is d
 
 
 def test_incremental_components_merge_old_clusters(spark):
@@ -979,6 +988,86 @@ def test_tracked_cache_state_eviction(spark):
     finally:
         cache.clear()
         spark.catalog.clearCache()
+
+
+def test_plan_memo_guards_and_recency():
+    """PlanMemo without Spark: a hit needs the same session object,
+    applicationId and state; a None state never memoizes; and a hit
+    refreshes recency, so eviction drops the least recently used key."""
+    from types import SimpleNamespace
+
+    from ngrams_collocations_hadoop_spark.plans.cache import PlanMemo
+
+    sess = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="a1"))
+    built = []
+
+    def build(tag):
+        def b():
+            built.append(tag)
+            return object(), None
+        return b
+
+    memo = PlanMemo(max_entries=2)
+    x = memo.get("x", sess, 1, build("x"))
+    assert memo.get("x", sess, 1, build("x")) is x and built == ["x"]
+    assert memo.get("x", sess, 2, build("x")) is not x   # state moved
+    x = memo._memo["x"][4]
+    other = SimpleNamespace(sparkContext=sess.sparkContext)
+    assert memo.get("x", other, 2, build("x")) is not x   # new session
+    x = memo.get("x", sess, 2, build("x"))
+    sess.sparkContext.applicationId = "a2"                # restarted
+    assert memo.get("x", sess, 2, build("x")) is not x
+    n = len(built)
+    memo.get("n", sess, None, build("n"))
+    memo.get("n", sess, None, build("n"))
+    assert len(built) == n + 2 and "n" not in memo._memo
+    # recency: x hit after y was inserted, so z evicts y, not x
+    x = memo.get("x", sess, 2, build("x"))
+    memo.get("y", sess, 2, build("y"))
+    assert memo.get("x", sess, 2, build("x")) is x
+    memo.get("z", sess, 2, build("z"))
+    assert list(memo._memo) == ["x", "z"]
+
+
+def test_plan_memo_concurrent_callers():
+    """Serving threads sharing one session hit the memo at once: with
+    more threads than cores and a short switch interval, no get() may
+    raise, each returns a plan built for its own key, and the bound
+    holds."""
+    import os
+    import sys
+    import threading
+    from types import SimpleNamespace
+
+    from ngrams_collocations_hadoop_spark.plans.cache import PlanMemo
+
+    sess = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="a"))
+    memo = PlanMemo(max_entries=3)
+    errors: list = []
+
+    def worker(tid: int) -> None:
+        try:
+            for i in range(400):
+                key = (tid + i) % 7
+                got = memo.get(key, sess, 1, lambda: ((key,), None))
+                assert got == (key,), (got, key)
+        except BaseException as exc:   # reported by the main thread
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,))
+                   for t in range(4 * (os.cpu_count() or 2))]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[0]
+    assert len(memo._memo) <= 3
 
 
 def test_pq_sampled_equals_trained_at_fixture_scale(spark):

@@ -109,14 +109,6 @@ def test_empty_corpus_yields_empty_result(spark):
     assert out.columns == ["lang", "decade", "bigram", "llr", "rank"]
 
 
-def test_cache_counts_variant_identical(spark):
-    a = co.q_scored(spark, "/root/testdata/sf0.001")
-    b = co.q_scored(spark, "/root/testdata/sf0.001", cache_counts=True)
-    rows_a = sorted(map(tuple, a.collect()))
-    rows_b = sorted(map(tuple, b.collect()))
-    assert rows_a == rows_b
-
-
 def test_ingest_pipeline_accounting(spark):
     """The shard summary's doc count must equal: quality-passing new
     docs minus (exact-dropped ∪ near-dropped) quality-passers — i.e.

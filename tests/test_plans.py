@@ -522,7 +522,15 @@ def test_bench_queries_shuffle_budget(spark):
     # their exchanges) once per occurrence, and live exchange reuse
     # can no longer collapse repeated subtrees — inflating the count
     # for reasons that have nothing to do with the query's own shape.
+    # The plan memos are dropped too: a memoized handle an earlier test
+    # executed prints its FINAL adaptive plan (re-planned stages under
+    # new plan_ids), not the initial plan these budgets measure.
+    from ngrams_collocations_hadoop_spark.operators import similarity
+
     spark.catalog.clearCache()
+    for memo in (co._COLLOC_MEMO, similarity._PQ_QUERY_MEMO,
+                 similarity._PQ_CB_MEMO):
+        memo.clear()
 
     budget = {
         "colloc_topk": 10,
