@@ -25,7 +25,7 @@ tests additionally pin known near-dup constructions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import (attach_pk_gate, fan_out, load_table,
@@ -1156,11 +1156,93 @@ WHERE cosine >= {COSINE_DUP_THRESHOLD}
 """
 
 
+# --- shared scaffold of the iterative graph operators -------------------
+
+EDGES_PER_PARTITION = 500_000   # iterative-loop shuffle sizing target
+JUMP_HOPS = 3                   # pointer jumps per round (path compression)
+
+
+def _graph_edges(edges: DataFrame, src: str, dst: str
+                 ) -> tuple[DataFrame, int]:
+    """Setup shared by the iterative graph operators (components, star
+    contraction, label propagation, PageRank, k-core). Returns
+    ``(e, parts)``: the checkpointed DIRECTED edge list ``e`` as
+    (n, m), and the shuffle width ``parts`` that a sized loop places in
+    its own plan through ``_sized`` ahead of its per-round aggregations
+    (and with ``coalesce(parts)`` on its edge view). PageRank and k-core
+    do not size their loops.
+
+    Loops derive their bidirectional view with ``_both_ways(e)`` over
+    the checkpoint, never over the raw ``edges``: a
+    union-of-two-selects over the raw edges would embed the edge SOURCE
+    subtree (at scale, the whole LSH pipeline) in both union branches
+    and compute it twice in one job (measured: the sf0.1 LSH source ran
+    2x inside a bi checkpoint). The union over the checkpoint is a
+    narrow op, recomputed per round for free.
+
+    Sizing: the graph is orders of magnitude smaller than the corpus
+    that produced it (pairs that SURVIVED an LSH/jaccard gate), yet the
+    session's shuffle partitioning is sized for the corpus, so every
+    round would pay corpus-scale task counts on a graph-scale dataset
+    (measured sf0.1: ~1.6 s/round of pure scheduling overhead). The
+    width follows the EDGE COUNT instead, observed for free on the
+    checkpoint job and capped at the cluster's parallelism so a 100 TB
+    edge set still fans out fully. It lives in the plan, not in the
+    session conf, so concurrent callers on one session never see each
+    other's width."""
+    obs = Observation()
+    e = (edges.select(F.col(src).alias("n"), F.col(dst).alias("m"))
+         .observe(obs, F.count(F.lit(1)).alias("n_edges"))
+         .localCheckpoint(eager=True))
+    parts = int(max(2, min(
+        edges.sparkSession.sparkContext.defaultParallelism,
+        2 * (obs.get["n_edges"] or 0) // EDGES_PER_PARTITION + 1)))
+    return e, parts
+
+
+def _sized(df: DataFrame, parts: int, *keys: str) -> DataFrame:
+    """``df`` hash-partitioned on ``keys`` into the loop's width
+    ``parts``, when the session's shuffle width is above the cluster's
+    parallelism (a corpus-scale setting); otherwise ``df`` unchanged.
+
+    Placed under an aggregation, the repartition satisfies it, so the
+    aggregation's exchange runs at ``parts``, and a sort-merge join on
+    the aggregate's key follows that width. Joins are not sized: at
+    graph scale the planner broadcasts one side, and a repartition
+    under a broadcast join is one more shuffle. The price is the
+    map-side partial aggregate, which an aggregation over a
+    repartition does not get. Measured on the sf0.1 LSH graph
+    (190,777 edges, local[4], median of 9 warm calls): on a 4-partition
+    session the plain components loop takes 4.45 s and the
+    repartitioned one 5.75 s, so a width within one wave of tasks
+    stays as it is; on a 200-partition session the repartitioned loop
+    takes 6.1 s and the plain one 7.0 s (median of 5 warm calls)."""
+    spark = df.sparkSession
+    if (int(spark.conf.get("spark.sql.shuffle.partitions"))
+            <= spark.sparkContext.defaultParallelism):
+        return df
+    return df.repartition(parts, *keys)
+
+
+def _both_ways(e: DataFrame) -> DataFrame:
+    """Every (n, m) edge row plus its reverse (m, n)."""
+    return e.union(e.select(F.col("m").alias("n"), F.col("n").alias("m")))
+
+
+def _bounded_rounds(op: str, max_rounds: int):
+    """Round numbers 1..max_rounds for a loop that breaks at its
+    fixpoint. Asking for one more round raises instead of silently
+    looping the driver."""
+    yield from range(1, max_rounds + 1)
+    raise RuntimeError(f"{op}: no fixpoint after {max_rounds} rounds "
+                       f"(raise max_rounds)")
+
+
 # --- dedup clusters: connected components over near-dup pairs -----------
 
 def connected_components(edges: DataFrame, src: str = "src",
-                         dst: str = "dst",
-                         max_rounds: int = 25) -> DataFrame:
+                         dst: str = "dst", max_rounds: int = 25
+                         ) -> tuple[DataFrame, int]:
     """Connected components by min-label propagation WITH pointer
     jumping: every node starts as its own label; each round a node
     adopts the minimum of (its label, its neighbors' labels, and its
@@ -1176,76 +1258,28 @@ def connected_components(edges: DataFrame, src: str = "src",
     so the oracle SQL is untouched.
 
     Scale notes: each round is two shuffles (neighbor join + label
-    self-join) feeding one groupBy — all on (node/label) keys.
-    `localCheckpoint` truncates the lineage each round, without which
-    the plan doubles per iteration and the driver re-executes the
-    whole prefix every round. Deterministic throughout.
+    self-join) feeding one groupBy — all on (node/label) keys, sized
+    to the edge count by ``_graph_edges``/``_sized`` (the groupBy input
+    carries the width and the jump joins follow it). `localCheckpoint`
+    truncates the lineage each round, without which the plan doubles
+    per iteration and the driver re-executes the whole prefix every
+    round.
+    Deterministic throughout.
 
     This is the one operator whose round count is data-dependent, so
     it is bounded: a graph that has not converged after ``max_rounds``
     raises instead of silently looping the driver (with pointer
     jumping, exceeding ``max_rounds`` = 25 would need a diameter
-    around 2^25 — pathological input, not a workload). The realized
-    round count is recorded on the function as
-    ``connected_components.last_rounds`` and surfaced in the result
-    via an ``observe`` metric (``cc_rounds``) so monitoring sees it
-    per-run.
+    around 2^25 — pathological input, not a workload).
 
-    Returns (node, component) with component = min node id reachable.
+    Returns ``(components, rounds)``: components is (node, component)
+    with component = min node id reachable, and rounds is the number
+    of rounds this call ran.
     """
-    from pyspark.sql import Observation
-
-    # Iterative-phase sizing: the component graph is orders of magnitude
-    # smaller than the corpus that produced it (pairs that SURVIVED an
-    # LSH/jaccard gate), yet the session's shuffle partitioning is sized
-    # for the corpus — so every round would pay corpus-scale task counts
-    # on a graph-scale dataset (measured sf0.1: ~1.6 s/round of pure
-    # scheduling overhead). Size the loop's shuffles to the EDGE COUNT
-    # instead, observed for free on the checkpoint job, capped at the
-    # cluster's parallelism so a 100 TB edge set still fans out fully.
-    # Checkpoint the DIRECTED edge list first and derive the
-    # bidirectional view from the materialized rows: a
-    # union-of-two-selects over the raw `edges` would embed the edge
-    # SOURCE subtree (at scale, the whole LSH pipeline) in BOTH union
-    # branches and compute it twice in one job (measured: the sf0.1
-    # LSH source ran 2x inside the old bi checkpoint). The union +
-    # coalesce over the checkpoint are narrow ops, recomputed per
-    # round for free.
-    obs_edges = Observation()
-    e = (edges.select(F.col(src).alias("ea"), F.col(dst).alias("eb"))
-         .observe(obs_edges, F.count(F.lit(1)).alias("n_edges"))
-         .localCheckpoint(eager=True))
-    spark = edges.sparkSession
-    parts = int(max(2, min(
-        spark.sparkContext.defaultParallelism,
-        2 * (obs_edges.get["n_edges"] or 0) // EDGES_PER_PARTITION + 1)))
-    bi = (e.select(F.col("ea").alias("n"), F.col("eb").alias("m"))
-          .union(e.select(F.col("eb").alias("n"), F.col("ea").alias("m")))
-          .coalesce(parts))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        return _components_loop(bi, max_rounds)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-
-EDGES_PER_PARTITION = 500_000   # iterative-loop shuffle sizing target
-JUMP_HOPS = 3                   # pointer jumps per round (path compression)
-
-
-def _components_loop(bi: DataFrame, max_rounds: int) -> DataFrame:
-    from pyspark.sql import Observation
-
+    e, parts = _graph_edges(edges, src, dst)
+    bi = _both_ways(e).coalesce(parts)
     label_type = bi.schema["n"].dataType
-    labels = None
-    rounds = 0
-    while True:
-        if rounds >= max_rounds:
-            raise RuntimeError(
-                f"connected_components: no fixpoint after {max_rounds} "
-                f"rounds (graph diameter exceeds the cap; raise "
-                f"max_rounds or switch to star-contraction)")
+    for rounds in _bounded_rounds("connected_components", max_rounds):
         # Convergence detection is FOLDED INTO the update pass: the old
         # label rides through the min-label aggregation as a second
         # column (each n appears exactly once in `labels`, so min(old)
@@ -1253,7 +1287,7 @@ def _components_loop(bi: DataFrame, max_rounds: int) -> DataFrame:
         # Observation on the same plan — the eager localCheckpoint is
         # the round's ONE job, versus the join-then-count formulation
         # which ran a second full pass per round.
-        if labels is None:
+        if rounds == 1:
             # Round 1 FOLDED (r10, guide §2.4): before any round,
             # label(m) == m, so the first neighbor-min needs no label
             # table at all — the messages are the edge view itself and
@@ -1276,7 +1310,7 @@ def _components_loop(bi: DataFrame, max_rounds: int) -> DataFrame:
             cand = (labels.select("n", "label",
                                   F.col("label").alias("old"))
                     .unionByName(msgs))
-        half = (cand.groupBy("n")
+        half = (_sized(cand, parts, "n").groupBy("n")
                 .agg(F.min("label").alias("label"),
                      F.min("old").alias("old")))
         # pointer jumps on the FRESH labels: adopt label(label(n)),
@@ -1300,29 +1334,24 @@ def _components_loop(bi: DataFrame, max_rounds: int) -> DataFrame:
                               F.least("label", "jlabel").alias("label"),
                               "old"))
         obs = Observation()
-        new_labels = (
+        labels = (
             jumped
             .withColumn("chg", (F.col("label") != F.col("old")).cast("long"))
             .observe(obs, F.sum("chg").alias("changed"))
             .select("n", "label")
             .localCheckpoint(eager=True))
-        labels = new_labels
-        rounds += 1
         # F.sum over ZERO rows observes NULL, not 0 — an empty edge set
         # (e.g. a quality filter that drops every LSH pair) must read
         # as converged, not burn max_rounds and raise.
         if (obs.get["changed"] or 0) == 0:
             break
-    connected_components.last_rounds = rounds
     return (labels.select(F.col("n").alias("node"),
-                          F.col("label").alias("component"))
-            .observe(f"cc_rounds_{id(labels)}",
-                     F.max(F.lit(rounds)).alias("rounds")))
+                          F.col("label").alias("component")), rounds)
 
 
 def connected_components_star(edges: DataFrame, src: str = "src",
-                              dst: str = "dst",
-                              max_rounds: int = 50) -> DataFrame:
+                              dst: str = "dst", max_rounds: int = 50
+                              ) -> tuple[DataFrame, int]:
     """Connected components by alternating large-star / small-star
     contraction (the MapReduce-native formulation from the public
     Kiveris et al. 'Connected Components in MapReduce and Beyond'
@@ -1345,84 +1374,65 @@ def connected_components_star(edges: DataFrame, src: str = "src",
     long arithmetic and is only probabilistically correct.)
 
     Same fixpoint as ``connected_components`` (node → min reachable
-    id), pinned by an equivalence test; shares the edge-count-sized
-    shuffle partitioning rationale."""
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .filter(F.col("u") != F.col("v"))
-         .localCheckpoint(eager=True))
-    spark = edges.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    parts = int(max(2, min(
-        spark.sparkContext.defaultParallelism,
-        2 * e.count() // EDGES_PER_PARTITION + 1)))
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        rounds = 0
-        while True:
-            if rounds >= max_rounds:
-                raise RuntimeError(
-                    f"connected_components_star: no fixpoint after "
-                    f"{max_rounds} rounds")
-            # large-star on the bidirectional view
-            bi = e.union(e.select(F.col("v").alias("u"),
-                                  F.col("u").alias("v")))
-            mins = (bi.groupBy("u")
-                    .agg(F.least(F.min("v"), F.first("u")).alias("m")))
-            large = (bi.join(mins, on="u")
-                     .filter(F.col("v") > F.col("u"))
-                     .select(F.col("v").alias("u"),
-                             F.col("m").alias("v"))
-                     .filter(F.col("u") != F.col("v"))
-                     .distinct())
-            # small-star on the (larger -> smaller) orientation
-            onted = large.select(
-                F.greatest("u", "v").alias("u"),
-                F.least("u", "v").alias("v"))
-            smins = onted.groupBy("u").agg(F.min("v").alias("m"))
-            small = (onted.join(smins, on="u")
-                     .select(F.col("v").alias("u"),
-                             F.col("m").alias("v"))
-                     .filter(F.col("u") != F.col("v"))
-                     .unionByName(smins.select(
-                         F.col("u"), F.col("m").alias("v")))
-                     .distinct())
-            e = small.localCheckpoint(eager=True)
-            rounds += 1
-            # exact star-forest test — BOTH properties are required:
-            # (a) no target is also a child (no chains), AND (b) every
-            # child has exactly ONE parent. (a) alone is NOT
-            # termination: edges (1,3),(3,4),(4,5),(2,5) contract in
-            # one round to {(3,1),(4,1),(3,2),(5,2)} where targets
-            # {1,2} and children {3,4,5} are disjoint but node 3 still
-            # has two parents — stopping there splits one component in
-            # two and emits node 3 twice (found by adversarial review:
-            # 143/20,000 random graphs hit it; the fixtures never did).
-            # One more round merges the parents, so only the test was
-            # wrong, not the contraction.
-            nonstar = (e.select("v").distinct()
-                       .join(e.select(F.col("u").alias("v")).distinct(),
-                             on="v")
-                       .count()
-                       + e.groupBy("u").count()
-                          .filter(F.col("count") > 1).count())
-            if nonstar == 0:
-                break
-        connected_components_star.last_rounds = rounds
-        children = e.select(F.col("u").alias("node"),
-                            F.col("v").alias("component"))
-        roots = (e.select(F.col("v").alias("node")).distinct()
-                 .join(e.select(F.col("u").alias("node")).distinct(),
-                       on="node", how="left_anti")
-                 .withColumn("component", F.col("node")))
-        return children.unionByName(roots)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    id), pinned by an equivalence test; same setup, edge-count shuffle
+    sizing and max-rounds guard. Returns ``(components, rounds)`` like
+    ``connected_components``."""
+    e, parts = _graph_edges(edges.filter(F.col(src) != F.col(dst)),
+                            src, dst)
+    for rounds in _bounded_rounds("connected_components_star", max_rounds):
+        # large-star on the bidirectional view
+        bi = _both_ways(e)
+        mins = (_sized(bi, parts, "n").groupBy("n")
+                .agg(F.least(F.min("m"), F.first("n")).alias("p")))
+        large = _sized(bi.join(mins, on="n")
+                       .filter(F.col("m") > F.col("n"))
+                       .select(F.col("m").alias("n"), F.col("p").alias("m"))
+                       .filter(F.col("n") != F.col("m")),
+                       parts, "n").distinct()
+        # small-star on the (larger -> smaller) orientation
+        onted = large.select(F.greatest("n", "m").alias("n"),
+                             F.least("n", "m").alias("m"))
+        smins = (_sized(onted, parts, "n").groupBy("n")
+                 .agg(F.min("m").alias("p")))
+        small = _sized(onted.join(smins, on="n")
+                       .select(F.col("m").alias("n"), F.col("p").alias("m"))
+                       .filter(F.col("n") != F.col("m"))
+                       .unionByName(smins.select("n",
+                                                 F.col("p").alias("m"))),
+                       parts, "n").distinct()
+        e = small.localCheckpoint(eager=True)
+        # exact star-forest test — BOTH properties are required:
+        # (a) no target is also a child (no chains), AND (b) every
+        # child has exactly ONE parent. (a) alone is NOT
+        # termination: edges (1,3),(3,4),(4,5),(2,5) contract in
+        # one round to {(3,1),(4,1),(3,2),(5,2)} where targets
+        # {1,2} and children {3,4,5} are disjoint but node 3 still
+        # has two parents — stopping there splits one component in
+        # two and emits node 3 twice (found by a randomized search:
+        # 143/20,000 random graphs hit it; the fixtures never did).
+        # One more round merges the parents, so only the test was
+        # wrong, not the contraction.
+        nonstar = (_sized(e.select("m"), parts, "m").distinct()
+                   .join(_sized(e.select(F.col("n").alias("m")),
+                                parts, "m").distinct(), on="m")
+                   .count()
+                   + _sized(e, parts, "n").groupBy("n").count()
+                      .filter(F.col("count") > 1).count())
+        if nonstar == 0:
+            break
+    children = e.select(F.col("n").alias("node"),
+                        F.col("m").alias("component"))
+    roots = (e.select(F.col("m").alias("node")).distinct()
+             .join(e.select(F.col("n").alias("node")).distinct(),
+                   on="node", how="left_anti")
+             .withColumn("component", F.col("node")))
+    return children.unionByName(roots), rounds
 
 
 def _components_over(edges: DataFrame, engine=None) -> DataFrame:
     """(doc_a, doc_b) pair list → (doc_id, component_id,
     component_size). Shared tail of both cluster queries."""
-    comp = (engine or connected_components)(
+    comp, _ = (engine or connected_components)(
         edges.select(F.col("doc_a").alias("src"),
                      F.col("doc_b").alias("dst")))
     w_size = Window.partitionBy("component")
@@ -1540,7 +1550,7 @@ def q_dedup_components_incremental(spark: SparkSession,
     new_edges = (pairs.filter(new_a | new_b)
                  .select(F.col("doc_a").alias("src"),
                          F.col("doc_b").alias("dst")))
-    comp = connected_components(star.unionByName(new_edges))
+    comp, _ = connected_components(star.unionByName(new_edges))
     w_size = Window.partitionBy("component")
     return (comp.withColumn("component_size",
                             F.count(F.lit(1)).over(w_size).cast("long"))
@@ -1631,9 +1641,7 @@ def update_components_table(spark: SparkSession, sf_dir: str,
     # test_persisted_lsh_matches_incremental and re-pinned for this
     # composition in test_components_update_prefers_lsh_index)
     lsh_table = lsh_index_table(sf_dir, spark)
-    if batch_pairs is not None:
-        update_components_table.last_pair_source = "caller"
-    elif spark.catalog.tableExists(lsh_table):
+    if batch_pairs is None and spark.catalog.tableExists(lsh_table):
         # trusted docs: the index table's name is keyed on the corpus
         # STATE (path+mtime+size), and the only writer that can CREATE
         # that name is the gated build — its existence proves
@@ -1650,14 +1658,12 @@ def update_components_table(spark: SparkSession, sf_dir: str,
         docs = load_table(spark, sf_dir, "documents") if trusted else None
         batch_pairs = match_lsh_index(spark, sf_dir, lsh_table,
                                       docs=docs)
-        update_components_table.last_pair_source = "index"
-    else:
+    elif batch_pairs is None:
         batch_pairs = q_dedup_incremental_lsh(spark, sf_dir)
-        update_components_table.last_pair_source = "in-dag"
     batch = (batch_pairs
              .select(F.col("doc_new").alias("src"),
                      F.col("doc_match").alias("dst")))
-    comp = connected_components(star.unionByName(batch))
+    comp, _ = connected_components(star.unionByName(batch))
     w_size = Window.partitionBy("component")
     return (comp.withColumn("component_size",
                             F.count(F.lit(1)).over(w_size).cast("long"))
@@ -2018,13 +2024,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     Scale shape: one shuffle per iteration (contribution groupBy), the
     same iterative skeleton as connected_components — lineage truncated
     per round, round count fixed (not data-dependent)."""
-    # directed list checkpointed FIRST so the (possibly LSH-pipeline)
-    # edge source computes once, not twice inside the union
-    e0 = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-          .localCheckpoint(eager=True))
-    bi = (e0.select(F.col("s").alias("n"), F.col("d").alias("m"))
-          .union(e0.select(F.col("d").alias("n"), F.col("s").alias("m"))))
-    bi = bi.localCheckpoint(eager=True)
+    e, _ = _graph_edges(edges, src, dst)
+    bi = _both_ways(e)
     deg = bi.groupBy("n").agg(F.count(F.lit(1)).alias("deg"))
     state = deg.withColumn("ru", F.expr("CAST(1000000 AS BIGINT)")) \
         .localCheckpoint(eager=True)
@@ -2313,42 +2314,26 @@ def label_propagation(edges: DataFrame, src: str = "src",
     Scale shape: one neighbor-label join + two key-bounded aggregations
     per round (counts are degree-bounded), lineage truncated per round
     like pagerank/components; round count is fixed, not data-dependent.
-    Loop shuffles are sized to the GRAPH (edge count observed on the
-    setup checkpoint), not the session's corpus-sized partitioning —
-    the same sizing rule as connected_components, for the same reason:
-    the dup graph is orders of magnitude smaller than the corpus, and
-    corpus-scale task scheduling per round is pure overhead.
+    Loop shuffles are sized to the GRAPH by ``_graph_edges`` (edge
+    count observed on the setup checkpoint), not the session's
+    corpus-sized partitioning: the dup graph is orders of magnitude
+    smaller than the corpus, and corpus-scale task scheduling per round
+    is pure overhead. Where ``_sized`` sizes, one repartition on n
+    serves both aggregations, which key on n.
     """
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    e = (edges.select(F.col(src).alias("ea"), F.col(dst).alias("eb"))
-         .observe(obs, F.count(F.lit(1)).alias("n_edges"))
-         .localCheckpoint(eager=True))
-    spark = edges.sparkSession
-    parts = int(max(2, min(
-        spark.sparkContext.defaultParallelism,
-        2 * (obs.get["n_edges"] or 0) // EDGES_PER_PARTITION + 1)))
-    bi = (e.select(F.col("ea").alias("n"), F.col("eb").alias("m"))
-          .union(e.select(F.col("eb").alias("n"), F.col("ea").alias("m")))
-          .coalesce(parts))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        state = (bi.select("n").distinct()
-                 .withColumn("lbl", F.col("n")).localCheckpoint(eager=True))
-        for _ in range(iters):
-            nbr = (bi.join(state.select(F.col("n").alias("m"), "lbl"),
-                           on="m")
-                   .select("n", "lbl"))
-            cnt = nbr.groupBy("n", "lbl").agg(
-                F.count(F.lit(1)).alias("cnt"))
-            state = (cnt.groupBy("n")
-                     .agg(F.expr(f"max_by(lbl, cnt * {LP_KEY}L - lbl)")
-                          .alias("lbl"))
-                     .localCheckpoint(eager=True))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    e, parts = _graph_edges(edges, src, dst)
+    bi = _both_ways(e).coalesce(parts)
+    state = (bi.select("n").distinct()
+             .withColumn("lbl", F.col("n")).localCheckpoint(eager=True))
+    for _ in range(iters):
+        nbr = (bi.join(state.select(F.col("n").alias("m"), "lbl"), on="m")
+               .select("n", "lbl"))
+        cnt = (_sized(nbr, parts, "n").groupBy("n", "lbl")
+               .agg(F.count(F.lit(1)).alias("cnt")))
+        state = (cnt.groupBy("n")
+                 .agg(F.expr(f"max_by(lbl, cnt * {LP_KEY}L - lbl)")
+                      .alias("lbl"))
+                 .localCheckpoint(eager=True))
     return state
 
 
@@ -2491,15 +2476,8 @@ def k_core(edges: DataFrame, k: int = KCORE_K,
     (checkpointed, shrinking) node set plus a degree aggregation —
     O(rounds) passes over edges, no lineage growth, node set always
     the small side. Returns (n, core_degree) for surviving nodes."""
-    # checkpoint the DIRECTED list first, then derive the
-    # bidirectional view from the materialized rows — union-of-selects
-    # over a lazy source computes the (possibly LSH-pipeline) source
-    # twice inside the one checkpoint job
-    e0 = edges.select("a", "b").localCheckpoint(eager=True)
-    bi = (e0.select(F.col("a").alias("n"), F.col("b").alias("m"))
-          .union(e0.select(F.col("b").alias("n"),
-                           F.col("a").alias("m")))
-          .localCheckpoint())
+    e, _ = _graph_edges(edges, "a", "b")
+    bi = _both_ways(e)
     nodes = bi.select("n").distinct().localCheckpoint()
     for _ in range(rounds):
         alive = (bi.join(nodes, on="n", how="left_semi")

@@ -68,9 +68,6 @@ def q_trigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("occ").alias("c")))
 
 
-ORACLE_TRIGRAM_COUNTS = None  # assembled in oracle.py (needs clean CTEs)
-
-
 def q_assoc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every association measure side by side over the bigram
     contingency counts: llr, pmi, t_score, chi_square."""

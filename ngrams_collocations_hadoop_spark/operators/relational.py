@@ -1501,7 +1501,6 @@ FROM m
 # --- robust outlier detection (median absolute deviation) ----------------
 
 MAD_K = 3.0          # |x - median| > K * MAD flags an outlier
-MAD_SIGMA = 1.4826   # normal-consistency constant for reporting
 
 
 def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,7 +11,8 @@ embeddings) and hash-compares against the Spark results.
 from __future__ import annotations
 
 from .functions.exact import uavg_sql
-from .constants import LLR_ROUND, TOP_K, stopword_values_sql
+from .constants import (LLR_ROUND, OCC_EXPR_SQL, TOP_K, YEAR_EXPR_SQL,
+                        stopword_values_sql)
 from .functions.assoc import chi_square_sql, pmi_sql, t_score_sql
 from .functions.exact import ieee_round_sql
 from .functions.llr import llr_sql
@@ -188,8 +189,8 @@ WITH tri_raw AS (
     SELECT lang, year, occurrences, ts[i] AS t1, ts[i+1] AS t2, ts[i+2] AS t3
     FROM (
         SELECT lang,
-               CAST(2000 + doc_id % 30 AS BIGINT) AS year,
-               CAST(1 + doc_id % 5 AS BIGINT) AS occurrences,
+               CAST({YEAR_EXPR_SQL} AS BIGINT) AS year,
+               CAST({OCC_EXPR_SQL} AS BIGINT) AS occurrences,
                string_split(text, ' ') AS ts
         FROM documents
     ) t, UNNEST(range(1, len(ts) - 1)) AS u(i)),
@@ -272,7 +273,7 @@ docbg AS (
     SELECT doc_id, lang, {decade_sql('year')} AS decade,
            {w1} AS w1, {w2} AS w2
     FROM (SELECT doc_id, lang,
-                 CAST(2000 + doc_id % 30 AS BIGINT) AS year,
+                 CAST({YEAR_EXPR_SQL} AS BIGINT) AS year,
                  string_split(text, ' ') AS ts
           FROM documents) t,
          UNNEST(range(1, len(ts))) AS u(i)),

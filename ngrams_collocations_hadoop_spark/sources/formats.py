@@ -21,13 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-NGRAM_TSV_SCHEMA = T.StructType([
-    T.StructField("ngram", T.StringType()),
-    T.StructField("year", T.StringType()),        # try_cast later
-    T.StructField("occurrences", T.StringType()),
-])
-
-
 def _parse_ngram_lines(lines: DataFrame, value_col: str) -> DataFrame:
     """TSV line → (ngram, year, occurrences) with the reference's
     silent-drop semantics: short rows, unparseable numbers, and

@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..constants import TRANSLIT_HEBREW, TRANSLIT_LATIN
+from ..constants import (OCC_EXPR_SQL, TRANSLIT_HEBREW, TRANSLIT_LATIN,
+                         YEAR_EXPR_SQL)
 from ..sources.tables import fan_out as _fan_out, load_table
 
 # The Hebrew corpus derivation (reference second corpus,
@@ -50,8 +51,8 @@ def _docs_with_tokens(spark: SparkSession, sf_dir: str,
     docs = _fan_out(load_table(spark, sf_dir, "documents"))
     return docs.filter(F.expr(where_sql)).select(
         "doc_id", F.expr(lang_sql).alias("lang"),
-        (F.lit(2000) + F.col("doc_id") % 30).cast("long").alias("year"),
-        (F.lit(1) + F.col("doc_id") % 5).cast("long").alias("occurrences"),
+        F.expr(YEAR_EXPR_SQL).cast("long").alias("year"),
+        F.expr(OCC_EXPR_SQL).cast("long").alias("occurrences"),
         F.split(F.expr(text_sql), " ").alias("ts"),
     )
 
@@ -133,8 +134,8 @@ def unigram_records_sql(text_sql: str = "text",
                         where_sql: str = "TRUE") -> str:
     return f"""
     SELECT {lang_sql} AS lang,
-           CAST(2000 + doc_id % 30 AS BIGINT) AS year,
-           CAST(1 + doc_id % 5 AS BIGINT) AS occurrences,
+           CAST({YEAR_EXPR_SQL} AS BIGINT) AS year,
+           CAST({OCC_EXPR_SQL} AS BIGINT) AS occurrences,
            unnest(string_split({text_sql}, ' ')) AS token
     FROM documents WHERE {where_sql}
 """
@@ -155,8 +156,8 @@ def bigram_records_sql(text_sql: str = "text",
     FROM (
         SELECT doc_id,
                {lang_sql} AS lang,
-               CAST(2000 + doc_id % 30 AS BIGINT) AS year,
-               CAST(1 + doc_id % 5 AS BIGINT) AS occurrences,
+               CAST({YEAR_EXPR_SQL} AS BIGINT) AS year,
+               CAST({OCC_EXPR_SQL} AS BIGINT) AS occurrences,
                string_split({text_sql}, ' ') AS ts
         FROM documents WHERE {where_sql}
     ) t, UNNEST(range(1, len(ts))) AS u(i)

@@ -57,16 +57,14 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df
 
 
-import functools
-
-
-@functools.lru_cache(maxsize=None)
 def _footer_ts_unit(path: str, col: str) -> str:
     """The parquet footer's logical-type unit ('ns'/'us'/'ms'/'s') for a
     timestamp column that Spark surfaced as a raw int64. Footer-only
-    read (pyarrow) — no Spark job, cached per (path, column). A plain
-    unannotated INT64 under a timestamp column name raises instead of
-    being silently mis-scaled (it has no declared unit to trust)."""
+    read (pyarrow, well under a millisecond) — no Spark job. Read on
+    every call, not cached: a file rewritten in place at the same path
+    may carry another unit. A plain unannotated INT64 under a
+    timestamp column name raises instead of being silently mis-scaled
+    (it has no declared unit to trust)."""
     import glob
     import os
 
@@ -105,7 +103,7 @@ def normalize_timestamps(df: DataFrame, path: str | None = None) -> DataFrame:
     source ``path`` is known, the parquet footer's logical-type
     annotation picks the divisor (ns/µs/ms/s), and an unannotated
     int64 fails loudly rather than being mis-scaled 1000× — the
-    footer read is metadata-only and cached, no extra Spark job.
+    footer read is metadata-only, no extra Spark job.
     Without a path (non-file DataFrames) the historical nanos
     assumption applies, since that is the only encoding that reaches
     LongType via our own session confs.
@@ -166,10 +164,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             F.when(F.isnan(v) | (F.abs(v) == F.lit(float("inf"))),
                    F.lit(None).cast("double")).otherwise(v))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}
 
 
 # ``doc_id`` is the documents table's PRIMARY KEY — a precondition, not

@@ -22,7 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .constants import LLR_ROUND, TOP_K, stopword_values_sql
+from .constants import (LLR_ROUND, OCC_EXPR_SQL, TOP_K, YEAR_EXPR_SQL,
+                        stopword_values_sql)
 from .functions.assoc import chi_square_sql, pmi_sql, t_score_sql
 from .functions.exact import ieee_round_sql
 from .functions.llr import llr_sql
@@ -54,8 +55,8 @@ def register_sql_functions(spark: SparkSession) -> None:
 FLAGSHIP_SQL = f"""
 WITH toks AS (
     SELECT doc_id, lang,
-           CAST(2000 + doc_id % 30 AS BIGINT) AS year,
-           CAST(1 + doc_id % 5 AS BIGINT) AS occ,
+           CAST({YEAR_EXPR_SQL} AS BIGINT) AS year,
+           CAST({OCC_EXPR_SQL} AS BIGINT) AS occ,
            split(text, ' ') AS ts
     FROM documents
 ),

@@ -177,15 +177,15 @@ def test_connected_components_chain_rounds_and_cap(spark):
     chain = spark.sql(
         "SELECT col1 AS src, col2 AS dst FROM VALUES "
         "(1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)")
-    out = connected_components(chain)
+    out, rounds = connected_components(chain)
     assert {r["component"] for r in out.collect()} == {1}
-    assert 2 <= connected_components.last_rounds <= 4
+    assert 2 <= rounds <= 4
     chain19 = spark.sql(
         "SELECT CAST(id AS LONG) AS src, CAST(id + 1 AS LONG) AS dst "
         "FROM range(1, 20)")
-    assert ({r["component"] for r in connected_components(chain19).collect()}
-            == {1})
-    assert connected_components.last_rounds <= 7  # vs 19-20 without jumping
+    out, rounds = connected_components(chain19)
+    assert {r["component"] for r in out.collect()} == {1}
+    assert rounds <= 7  # vs 19-20 without jumping
     with pytest.raises(RuntimeError, match="no fixpoint"):
         connected_components(chain19, max_rounds=2)
 
@@ -201,9 +201,107 @@ def test_connected_components_empty_edges(spark):
     empty = spark.sql(
         "SELECT col1 AS src, col2 AS dst FROM VALUES (1L, 2L)").filter(
         "src > 100")
-    out = connected_components(empty, max_rounds=3)
+    out, rounds = connected_components(empty, max_rounds=3)
     assert out.count() == 0
-    assert connected_components.last_rounds <= 1
+    assert rounds <= 1
+
+
+def test_graph_loops_never_write_session_shuffle_partitions(spark,
+                                                            monkeypatch):
+    """The iterative graph operators size their shuffles inside their
+    own plans: none of them may write spark.sql.shuffle.partitions on
+    the caller's session, not even to restore it afterwards (a
+    save/restore pair on a shared session races concurrent callers)."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from ngrams_collocations_hadoop_spark.operators.dedup import (
+        connected_components, connected_components_star, label_propagation)
+    written = []
+    orig_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        written.append(key)
+        return orig_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)], ["src", "dst"])
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    connected_components(edges)
+    connected_components_star(edges)
+    label_propagation(edges).collect()
+    assert "spark.sql.shuffle.partitions" not in written, written
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_graph_loops_sized_plans_match_unsized(spark):
+    """On a session whose shuffle width is above the cluster's
+    parallelism, the loops carry their own width as REPARTITION_BY_NUM
+    exchanges, and each returns exactly what it returns unsized."""
+    from ngrams_collocations_hadoop_spark.operators.dedup import (
+        _sized, connected_components, connected_components_star,
+        label_propagation)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (22, 20)],
+        ["src", "dst"])
+
+    def run():
+        return (sorted(connected_components(edges)[0].collect()),
+                sorted(connected_components_star(edges)[0].collect()),
+                sorted(label_propagation(edges).collect()))
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    wide = str(4 * spark.sparkContext.defaultParallelism)
+    assert "REPARTITION_BY_NUM" not in plan(_sized(edges, 2, "src"))
+    plain = run()
+    spark.conf.set("spark.sql.shuffle.partitions", wide)
+    try:
+        assert "REPARTITION_BY_NUM" in plan(_sized(edges, 2, "src"))
+        sized = run()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", width)
+    assert sized == plain and all(plain)
+
+
+def test_connected_components_concurrent_callers(spark):
+    """Two threads on ONE session run connected_components on different
+    graphs at once: each gets its own components and its own round
+    count (returned per call, never read from a shared global), and
+    the session's shuffle width is left as it was."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from ngrams_collocations_hadoop_spark.operators.dedup import (
+        connected_components)
+    chain19 = spark.sql(
+        "SELECT CAST(id AS LONG) AS src, CAST(id + 1 AS LONG) AS dst "
+        "FROM range(1, 20)")
+    multi = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)],
+        ["src", "dst"])
+    want = {
+        "chain19": {n: 1 for n in range(1, 21)},
+        "multi": {1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
+                  20: 20, 21: 20, 22: 20},
+    }
+    graphs = {"chain19": chain19, "multi": multi}
+
+    def run(name):
+        comp, rounds = connected_components(graphs[name])
+        return {r.node: r.component for r in comp.collect()}, rounds
+
+    serial = {name: run(name)[1] for name in graphs}
+    assert serial["chain19"] > serial["multi"]
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with ThreadPoolExecutor(2) as pool:
+        futs = {name: pool.submit(run, name)
+                for name in ("chain19", "multi")}
+        got = {name: f.result(timeout=600) for name, f in futs.items()}
+    for name in graphs:
+        assert got[name] == (want[name], serial[name]), name
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_filtered_ann_gates_before_ranking(spark):
@@ -266,13 +364,14 @@ def test_star_contraction_equivalent_to_pointer_jumping(spark):
         ["src", "dst"])
     for edges in (chain19, multi):
         a = {(r["node"], r["component"]) for r in
-             connected_components(edges).collect()}
+             connected_components(edges)[0].collect()}
         b = {(r["node"], r["component"]) for r in
-             connected_components_star(edges).collect()}
+             connected_components_star(edges)[0].collect()}
         assert a == b and a
     empty = chain19.filter("src > 100")
-    assert connected_components_star(empty).count() == 0
-    assert connected_components_star.last_rounds <= 2
+    out, rounds = connected_components_star(empty)
+    assert out.count() == 0
+    assert rounds <= 2
 
 
 def test_components_lsh_consistent_with_edges(spark):
@@ -563,7 +662,7 @@ def test_star_contraction_multi_parent_termination(spark):
     ce = spark.createDataFrame(
         [(1, 3), (3, 4), (4, 5), (2, 5)], ["src", "dst"])
     got = {(r["node"], r["component"]) for r in
-           connected_components_star(ce).collect()}
+           connected_components_star(ce)[0].collect()}
     assert got == {(n, 1) for n in (1, 2, 3, 4, 5)}, got
 
     rng = random.Random(20240815)
@@ -576,9 +675,9 @@ def test_star_contraction_multi_parent_termination(spark):
         if df.count() == 0:
             continue
         a = {(r["node"], r["component"]) for r in
-             connected_components(df).collect()}
+             connected_components(df)[0].collect()}
         b = {(r["node"], r["component"]) for r in
-             connected_components_star(df).collect()}
+             connected_components_star(df)[0].collect()}
         assert a == b, (trial, sorted(edges), sorted(a ^ b))
 
 
@@ -817,7 +916,7 @@ def test_incremental_components_merge_old_clusters(spark):
     # batch doc 10 bridges the two clusters
     new_edges = spark.sql(
         "SELECT * FROM VALUES (10L, 4L), (10L, 9L) AS t(src, dst)")
-    comp = connected_components(star.unionByName(new_edges))
+    comp, rounds = connected_components(star.unionByName(new_edges))
     rows = {r.node: r.component for r in comp.collect()}
     assert set(rows.values()) == {1}          # one merged component
     assert len(rows) == 9                     # 1..4, 6..9, 10
@@ -827,34 +926,39 @@ def test_incremental_components_merge_old_clusters(spark):
     # how long the ORIGINAL chains inside the old clusters were; the
     # same topology UNcontracted (chains of length 4) needs the full
     # chain depth again
-    assert connected_components.last_rounds <= 4
+    assert rounds <= 4
 
 
-def test_components_table_lifecycle_matches_full_recompute(spark):
+def test_components_table_lifecycle_matches_full_recompute(spark,
+                                                          monkeypatch):
     """The persisted-components lifecycle (build pre-batch clusters →
     per-ingest contracted update) must reproduce the full-graph
     recompute EXACTLY — membership, min-id labels, and merged sizes —
     while its update job touches no old×old candidate generation (its
     edges come from the batch-side incremental band join plus the
     materialized table). Also pins the round economics: the update's
-    propagation depth never exceeds the full recompute's."""
-    from ngrams_collocations_hadoop_spark.operators.dedup import (
-        build_components_table,
-        connected_components,
-        q_dedup_components_lsh,
-        update_components_table,
-    )
+    propagation depth never exceeds the full recompute's (the round
+    counts are read from each connected_components call's return)."""
+    from ngrams_collocations_hadoop_spark.operators import dedup as D
     from .conftest import SF_SMALL
 
-    table = build_components_table(spark, SF_SMALL)
+    rounds = []
+    cc = D.connected_components
+
+    def spy(*args, **kwargs):
+        comp, n = cc(*args, **kwargs)
+        rounds.append(n)
+        return comp, n
+
+    table = D.build_components_table(spark, SF_SMALL)
+    monkeypatch.setattr(D, "connected_components", spy)
     try:
         upd = {tuple(r) for r in
-               update_components_table(spark, SF_SMALL).collect()}
-        upd_rounds = connected_components.last_rounds
+               D.update_components_table(spark, SF_SMALL).collect()}
         full = {tuple(r) for r in
-                q_dedup_components_lsh(spark, SF_SMALL).collect()}
-        full_rounds = connected_components.last_rounds
+                D.q_dedup_components_lsh(spark, SF_SMALL).collect()}
         assert upd == full
+        upd_rounds, full_rounds = rounds
         assert upd_rounds <= full_rounds, (upd_rounds, full_rounds)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -1235,30 +1339,35 @@ def test_pq_append_encodes_with_the_epoch_codebook(spark):
         spark.sql(f"DROP TABLE IF EXISTS {table}_cb")
 
 
-def test_components_update_prefers_lsh_index(spark):
+def test_components_update_prefers_lsh_index(spark, monkeypatch):
     """The two lifecycles compose: when the corpus state has a
     persisted LSH index, the components UPDATE takes its batch pairs
     from the match-only job (zero exchange on the index side) and its
     output must be IDENTICAL to the no-index fallback — same
     membership, same labels, same sizes."""
     from .conftest import SF_SMALL
-    from ngrams_collocations_hadoop_spark.operators.dedup import (
-        build_components_table, build_lsh_index, lsh_index_table,
-        update_components_table)
+    from ngrams_collocations_hadoop_spark.operators import dedup as D
 
-    ctable = build_components_table(spark, SF_SMALL)
-    ltable = lsh_index_table(SF_SMALL, spark)
+    calls = []
+    for name in ("match_lsh_index", "q_dedup_incremental_lsh"):
+        def spy(*args, _f=getattr(D, name), _name=name, **kwargs):
+            calls.append(_name)
+            return _f(*args, **kwargs)
+        monkeypatch.setattr(D, name, spy)
+
+    ctable = D.build_components_table(spark, SF_SMALL)
+    ltable = D.lsh_index_table(SF_SMALL, spark)
     try:
         if not spark.catalog.tableExists(ltable):
-            build_lsh_index(spark, SF_SMALL)
-        with_index = update_components_table(spark, SF_SMALL, ctable)
-        # the propagation runs eagerly (localCheckpoint), so the path
-        # taken is exposed the connected_components.last_rounds way
-        assert update_components_table.last_pair_source == "index"
+            D.build_lsh_index(spark, SF_SMALL)
+        calls.clear()
+        with_index = D.update_components_table(spark, SF_SMALL, ctable)
+        assert calls == ["match_lsh_index"]
         got = {tuple(r) for r in with_index.collect()}
         spark.sql(f"DROP TABLE {ltable}")
-        without = update_components_table(spark, SF_SMALL, ctable)
-        assert update_components_table.last_pair_source == "in-dag"
+        calls.clear()
+        without = D.update_components_table(spark, SF_SMALL, ctable)
+        assert calls == ["q_dedup_incremental_lsh"]
         want = {tuple(r) for r in without.collect()}
         assert got == want and len(got) > 0
     finally:

@@ -87,7 +87,7 @@ def test_connected_components_crafted_graph(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 2), (10, 11)], ["src", "dst"])
     got = {r["node"]: r["component"]
-           for r in connected_components(edges).collect()}
+           for r in connected_components(edges)[0].collect()}
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
@@ -96,7 +96,7 @@ def test_connected_components_long_chain_converges(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], ["src", "dst"])
     got = {r["node"]: r["component"]
-           for r in connected_components(edges).collect()}
+           for r in connected_components(edges)[0].collect()}
     assert got == {i: 0 for i in range(10)}
 
 

@@ -304,8 +304,7 @@ def test_connected_components_one_job_per_round(spark):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc.setJobGroup(group, "cc job audit", interruptOnCancel=False)
     try:
-        comp = connected_components(edges)
-        rounds = connected_components.last_rounds
+        comp, rounds = connected_components(edges)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setJobGroup(None, None)

@@ -240,6 +240,23 @@ def test_footer_unit_guard_scales_micros(spark):
         SF_SMALL + "/events.parquet", "ts") in ("ns", "us", "ms")
 
 
+def test_footer_unit_reread_after_in_place_rewrite(tmp_path):
+    """A file rewritten in place at the same path with another
+    timestamp unit must report the NEW unit: a reader keyed on the
+    path alone would keep the old divisor and mis-scale every value
+    1000x."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from ngrams_collocations_hadoop_spark.sources.tables import (
+        _footer_ts_unit,
+    )
+    p = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1], pa.timestamp("us"))}), p)
+    assert _footer_ts_unit(p, "ts") == "us"
+    pq.write_table(pa.table({"ts": pa.array([1], pa.timestamp("ms"))}), p)
+    assert _footer_ts_unit(p, "ts") == "ms"
+
+
 def test_orc_roundtrip_and_pushdown(spark):
     """ORC round-trip: schema and rows survive, and a filtered read
     reaches the ORC scan as a pushed filter (the same contract the
