@@ -72,7 +72,8 @@ BENCH_QUERIES = [
     # stream with foreachBatch appends + match over the maintained
     # index — so this row times the full continuous-ingest tick, not
     # an amortized leg (the legs are probed separately:
-    # scripts/probe_append_legs.py).
+    # scripts/probe_append_legs.py, a script since removed; it remains
+    # in git history).
     "stream_lsh_ingest",
 ]
 
@@ -134,7 +135,8 @@ def main() -> None:
         runs: list[float] = []
         # 5 runs for EVERY query (r10 measurement fix, declared in
         # OPTIMIZATION_r10.md): this box suffers bursty hypervisor CPU
-        # steal (40-44% for minutes — see scripts/steal_probe.py), and
+        # steal (40-44% for minutes — see scripts/steal_probe.py, a
+        # script since removed; it remains in git history), and
         # the former 3-run minimum for ≥3 s-median rows made exactly
         # the expensive rows the ones most likely to have ALL their
         # runs land inside one burst (observed r10:

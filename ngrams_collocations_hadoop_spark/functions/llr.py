@@ -1,5 +1,6 @@
-"""Log-likelihood ratio for a 2×2 contingency table, as a pure column
-expression (stays inside whole-stage codegen — no UDF).
+"""Log-likelihood ratio for a 2×2 contingency table, as SQL expression
+text: Spark parses it with ``F.expr`` (one pure column expression, inside
+whole-stage codegen — no UDF) and the DuckDB oracle runs the same text.
 
 Semantics match reference ``LLR.java:16-47``:
   k11 = c12, k12 = c1-c12, k21 = c2-c12, k22 = N-c1-c2+c12;
@@ -17,62 +18,11 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def _term(k: Column, e: Column) -> Column:
-    return F.when((k > 0) & (e > 0), k * F.log(k / e)).otherwise(F.lit(0.0))
-
-
-def llr(c1: Column, c2: Column, c12: Column, n: Column) -> Column:
-    """LLR column expression; NULL where the reference returns NaN."""
-    k11 = c12.cast("double")
-    k12 = (c1 - c12).cast("double")
-    k21 = (c2 - c12).cast("double")
-    k22 = (n - c1 - c2 + c12).cast("double")
-
-    row1 = k11 + k12
-    row2 = k21 + k22
-    col1 = k11 + k21
-    col2 = k12 + k22
-    total = row1 + row2
-
-    e11 = row1 * col1 / total
-    e12 = row1 * col2 / total
-    e21 = row2 * col1 / total
-    e22 = row2 * col2 / total
-
-    value = 2.0 * (_term(k11, e11) + _term(k12, e12)
-                   + _term(k21, e21) + _term(k22, e22))
-
-    invalid = (
-        (k11 < 0) | (k12 < 0) | (k21 < 0) | (k22 < 0)
-        | (n <= 0) | (c1 <= 0) | (c2 <= 0) | (c12 <= 0) | (total <= 0)
-    )
-    return F.when(invalid, F.lit(None).cast("double")).otherwise(value)
-
-
-import functools
-
-
-@functools.lru_cache(maxsize=None)
-def llr_named(c1: str = "c1", c2: str = "c2", c12: str = "c12",
-              n: str = "n_total") -> Column:
-    """``llr`` over NAME-bound columns, built once per process per
-    name-combo (r10, guide §1.2): the expression tree is ~90 Column
-    ops = ~200 py4j round-trips ≈ 0.2 s of driver time per query
-    CONSTRUCTION, and every caller binds the same four column names —
-    the tree is a constant. Column objects are immutable unresolved
-    expression trees, safe to re-attach to any plan that resolves the
-    names (the standard module-level-Column idiom). Plan-identical to
-    calling ``llr`` directly."""
-    return llr(F.col(c1), F.col(c2), F.col(c12), F.col(n))
-
 
 def llr_sql(c1: str, c2: str, c12: str, n: str) -> str:
-    """The same computation as ANSI SQL (DuckDB oracle), structured with
-    the identical operation order so float64 results agree to the ulp."""
+    """The LLR as ANSI SQL over the four named count columns; NULL where
+    the reference returns NaN. Both engines evaluate the same operation
+    order, so float64 results agree to the ulp."""
     k11 = f"CAST({c12} AS DOUBLE)"
     k12 = f"CAST({c1} - {c12} AS DOUBLE)"
     k21 = f"CAST({c2} - {c12} AS DOUBLE)"

@@ -17,7 +17,7 @@ Reference mapping (all file:line cites are into /root/reference):
                              LoC hand-rolled merge join)     SMJ/SHJ, AQE may rewrite
   join on w2 (J2)            Job2.java:51-84,192-251         one .join()
   broadcast N (J3)           Job2.java:168-190 (dist cache)  F.broadcast() hash join
-  LLR (C1)                   LLR.java:16-47                  functions.llr.llr (codegen)
+  LLR (C1)                   LLR.java:16-47                  functions.llr.llr_sql
   NaN/guard drop (P7)        Job2.java:227,235-241           llr IS NOT NULL filter
   Top-100 / group (T1-T3)    Job3.java:56-110 (heap+comb.)   row_number window ≤ K
                                                              (WindowGroupLimitExec gives
@@ -38,12 +38,12 @@ shuffle once (the c2 and N consumers run as ReusedExchange).
 
 Plan memo: building the flagship's Column trees is ~1,900 py4j
 round-trips (~0.7 s of driver time on a 4-core host) per call, for a
-plan that depends only on (sf_dir, k, quirk_mode) and the documents
-input's state. The whole-pipeline builders (``q_scored``, ``q_topk``, ``q_topk_quirk``,
-``q_hebrew_topk``) therefore serve their constructed DataFrame from
-``_COLLOC_MEMO`` (a ``plans.cache.PlanMemo``): a warm call costs one
-stat, one ``applicationId`` read and the session-conf re-pin. A new
-session, a restarted context or an in-place rewrite of
+plan that depends only on (sf_dir, k) and the documents input's
+state. The whole-pipeline builders (``q_scored``, ``q_topk``,
+``q_topk_quirk``, ``q_hebrew_topk``) therefore serve their constructed
+DataFrame from ``_COLLOC_MEMO`` (a ``plans.cache.StateCache``): a warm
+call costs one stat, one ``applicationId`` read and the session-conf
+re-pin. A new session, a restarted context or an in-place rewrite of
 ``documents.parquet`` rebuilds. ``q_topk`` builds on the memoized
 ``q_scored``, so the ``operators.ngrams`` composers reuse it too.
 """
@@ -58,15 +58,10 @@ from pyspark.sql import functions as F
 
 from ..constants import LLR_ROUND, TOP_K
 from ..functions.exact import ieee_round
-from ..functions.llr import llr, llr_named
+from ..functions.llr import llr_sql
 from ..functions.text import clean_token, decade
-from ..plans.cache import PlanMemo, corpus_state
-from ..sources.ngram_source import (
-    bigram_records,
-    hebrew_bigram_records,
-    hebrew_unigram_records,
-    unigram_records,
-)
+from ..plans.cache import StateCache, corpus_state
+from ..sources.ngram_source import bigram_records, unigram_records
 from ..sources.tables import _ensure_session_confs, stopwords_df
 
 
@@ -147,64 +142,18 @@ def totals(uni: DataFrame) -> DataFrame:
             .agg(F.sum("occ").alias("n_total")))
 
 
-# --- reference-quirk emulation (opt-in bit-parity mode) ------------------
-
-QUIRK_REDUCERS = 4   # stands in for Job1's reducer count in quirk mode
-
-
-def bigram_counts_quirk(big: DataFrame) -> DataFrame:
-    """Quirk 1 (Job1.java:282-292): the reference reducer emits one P
-    record PER INCOMING VALUE for a bigram key — i.e. per map-task
-    partial (post-combiner) — and never re-sums across map tasks, so a
-    bigram whose occurrences span map tasks yields SEVERAL fragmented
-    c12 rows, each scored independently downstream. The Spark analogue
-    of a map task is an input partition: summing per (key, partition)
-    and never across reproduces the fragmentation. Inherently
-    partitioning-dependent — that is the bug being emulated; the exact
-    path (``bigram_counts``) is the intended semantics."""
-    return (big.withColumn("_maptask", F.spark_partition_id())
-            .groupBy("lang", "decade", "w1", "w2", "_maptask")
-            .agg(F.sum("occ").alias("c12"))
-            .drop("_maptask"))
-
-
-def totals_quirk(c1_df: DataFrame,
-                 reducers: int = QUIRK_REDUCERS) -> DataFrame:
-    """Quirk 2 (Job2.java:185): each Job1 reducer emits its own partial
-    N for (lang, decade), and Job2's setup loads them with
-    ``NMap.put`` — overwrite, not sum — so the LAST cache file read
-    wins and N is one reducer's partial, correct only at 1 reducer.
-    Emulation: bucket each w1 group into ``reducers`` buckets by a
-    deterministic hash (standing in for Hadoop's key partitioner), sum
-    c1 per bucket, and keep the HIGHEST bucket id present per
-    (lang, decade) — cache files are read in part-file order, so the
-    last reducer's record lands last."""
-    partials = (c1_df.withColumn(
-                    "_rid", F.pmod(F.xxhash64("lang", "decade", "word"),
-                                   F.lit(reducers)))
-                .groupBy("lang", "decade", "_rid")
-                .agg(F.sum("c1").alias("n_partial")))
-    w = Window.partitionBy("lang", "decade").orderBy(F.desc("_rid"))
-    return (partials.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("lang", "decade",
-                    F.col("n_partial").alias("n_total")))
-
-
 # --- deterministic quirk surface (driver-adjudicable bit-parity) ---------
 #
-# The spark_partition_id / xxhash64 forms above reproduce the bugs
-# faithfully but are partitioning- or engine-dependent — fine for the
-# in-session parity tests, unusable under the driver's cross-engine
-# hash gate. These twins emulate the same two bug CLASSES with
-# content-derived surrogates both engines can compute identically:
-# a map task = a deterministic doc_id stripe (doc_id % M — an
-# INTERLEAVED assignment, not the reference's contiguous byte-range
-# splits; what matters for the bug class is only that one bigram's
-# occurrences span several never-re-summed groups), a reducer id =
-# an md5 bucket of the reduce key (standing in for Hadoop's
-# HashPartitioner).
+# These emulate the reference's two bug CLASSES with content-derived
+# surrogates both engines can compute identically, so the
+# cross-engine hash check can adjudicate them: a map task = a
+# deterministic doc_id stripe (doc_id % M — an INTERLEAVED assignment,
+# not the reference's contiguous byte-range splits; what matters for
+# the bug class is only that one bigram's occurrences span several
+# never-re-summed groups), a reducer id = an md5 bucket of the reduce
+# key (standing in for Hadoop's HashPartitioner).
 
+QUIRK_REDUCERS = 4   # stands in for Job1's reducer count
 QUIRK_MAPTASKS = 4   # input-split count surrogate for quirk 1
 
 _QUIRK_RID_SQL = (f"CAST(conv(substring(md5(concat(lang, '|', "
@@ -213,10 +162,11 @@ _QUIRK_RID_SQL = (f"CAST(conv(substring(md5(concat(lang, '|', "
 
 
 def bigram_counts_quirk_det(big_with_doc: DataFrame) -> DataFrame:
-    """Quirk 1 (Job1.java:282-292) with a deterministic map-task
-    surrogate: fragment each bigram's c12 per doc_id stripe instead of
-    per physical input partition — same fragmentation semantics (rows
-    of one bigram spanning stripes never re-sum), reproducible in SQL."""
+    """Quirk 1 (Job1.java:282-292): the reference reducer emits one c12
+    record per map-task partial and never re-sums across map tasks, so
+    a bigram whose occurrences span map tasks yields several fragments,
+    each scored on its own. Map task = doc_id stripe, so the fragments
+    are reproducible in SQL."""
     return (big_with_doc
             .withColumn("_maptask", F.col("doc_id") % QUIRK_MAPTASKS)
             .groupBy("lang", "decade", "w1", "w2", "_maptask")
@@ -225,10 +175,11 @@ def bigram_counts_quirk_det(big_with_doc: DataFrame) -> DataFrame:
 
 
 def totals_quirk_det(c1_df: DataFrame) -> DataFrame:
-    """Quirk 2 (Job2.java:185) with a deterministic reducer surrogate:
-    bucket words by an md5 hash of the reduce key, sum c1 per bucket,
-    keep the highest bucket id present per (lang, decade) — the
-    last-cache-file-wins overwrite, reproducible in both engines."""
+    """Quirk 2 (Job2.java:185): each Job1 reducer emits its own partial
+    N, and Job2 loads them with ``NMap.put`` (overwrite, not sum), so
+    the last cache file read wins. Bucket words by an md5 hash of the
+    reduce key, sum c1 per bucket, keep the highest bucket id present
+    per (lang, decade) — reproducible in both engines."""
     partials = (c1_df.withColumn("_rid", F.expr(_QUIRK_RID_SQL))
                 .groupBy("lang", "decade", "_rid")
                 .agg(F.sum("c1").alias("n_partial")))
@@ -282,10 +233,11 @@ def score_collocations(c12_df: DataFrame, c1_df: DataFrame,
         # Two-step projection: _llr_raw is referenced 3x by ieee_round's
         # guard; the raw alias keeps LLR single-eval (CollapseProject
         # refuses to inline a non-cheap alias referenced >1x, and codegen
-        # subexpression elimination covers it regardless). llr_named is
-        # the process-cached constant tree (same expression, built once
-        # — r10 driver-overhead cut, see functions/llr.py).
-        .withColumn("_llr_raw", llr_named("c1", "c2", "c12", "n_total"))
+        # subexpression elimination covers it regardless). One parse of
+        # the SQL text replaces the ~200 py4j round-trips of building
+        # the same expression as a Column tree.
+        .withColumn("_llr_raw", F.expr(llr_sql("c1", "c2", "c12",
+                                               "n_total")))
         .withColumn("llr", ieee_round(F.col("_llr_raw"), LLR_ROUND))
     )
     return scored.select("lang", "decade", "w1", "w2",
@@ -340,54 +292,39 @@ def q_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return totals(uni)
 
 
-# One memo for the family; keys are (builder, sf_dir, k, quirk_mode),
-# None where the builder has no such parameter. At most 8 handles: the
-# registry's four flagship plans at two corpora.
-_COLLOC_MEMO = PlanMemo(max_entries=8)
+# One memo for the family; keys are (builder, sf_dir, k), k None where
+# the builder has no such parameter. At most 8 handles: the registry's
+# four flagship plans at two corpora.
+_COLLOC_MEMO = StateCache(max_entries=8)
 
 
-def _memoized(builder: str, spark: SparkSession, sf_dir: str,
-              k: int | None, quirk_mode: bool | None,
+def _memoized(key: tuple, spark: SparkSession, sf_dir: str,
               build: Callable[[], DataFrame]) -> DataFrame:
     """``build()``'s plan, served from ``_COLLOC_MEMO`` while the
     session and the documents input's state are unchanged. The session
     confs are re-applied on every call, hit or miss: a caller-built
     session may have reset the time zone since the plan was built."""
     _ensure_session_confs(spark)
-    return _COLLOC_MEMO.get((builder, sf_dir, k, quirk_mode), spark,
-                            corpus_state(sf_dir, spark),
-                            lambda: (build(), None))
+    return _COLLOC_MEMO.plan(key, spark, corpus_state(sf_dir, spark),
+                             lambda: (build(), []))[0]
 
 
-def q_scored(spark: SparkSession, sf_dir: str,
-             quirk_mode: bool = False) -> DataFrame:
-    """``quirk_mode=True`` opts into bit-parity with the reference's
-    two bugs (SURVEY.md §4 quirks 1-2): fragmented c12 partials and a
-    single-reducer N, via ``bigram_counts_quirk`` / ``totals_quirk``.
-    Default is the intended-exact semantics."""
+def q_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         uni, big = _cleaned_inputs(spark, sf_dir)
         c1_df = unigram_counts(uni)
-        if quirk_mode:
-            c12_df = bigram_counts_quirk(big)
-            totals_df = totals_quirk(c1_df)
-        else:
-            c12_df = bigram_counts(big)
-            # N = Σ c1 — rolls up from the counts instead of re-scanning
-            # the raw unigram stream (algebraically identical).
-            totals_df = (c1_df.groupBy("lang", "decade")
-                         .agg(F.sum("c1").alias("n_total")))
-        return score_collocations(c12_df, c1_df, totals_df)
+        # N = Σ c1 — rolls up from the counts instead of re-scanning
+        # the raw unigram stream (algebraically identical).
+        totals_df = (c1_df.groupBy("lang", "decade")
+                     .agg(F.sum("c1").alias("n_total")))
+        return score_collocations(bigram_counts(big), c1_df, totals_df)
 
-    return _memoized("scored", spark, sf_dir, None, quirk_mode, build)
+    return _memoized(("scored", sf_dir, None), spark, sf_dir, build)
 
 
-def q_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K,
-           quirk_mode: bool = False) -> DataFrame:
-    return _memoized(
-        "topk", spark, sf_dir, k, quirk_mode,
-        lambda: top_collocations(
-            q_scored(spark, sf_dir, quirk_mode=quirk_mode), k))
+def q_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
+    return _memoized(("topk", sf_dir, k), spark, sf_dir,
+                     lambda: top_collocations(q_scored(spark, sf_dir), k))
 
 
 def q_topk_quirk(spark: SparkSession, sf_dir: str,
@@ -399,11 +336,7 @@ def q_topk_quirk(spark: SparkSession, sf_dir: str,
     the reduce key, last file wins). The output projection (lang,
     decade, bigram, llr, rank) collapses fragment identity: fragments
     of one bigram that round to the same llr yield IDENTICAL output
-    rows, so rank assignment among them cannot flap the hash.
-
-    ``q_topk(quirk_mode=True)`` remains the physically-faithful form
-    (real input partitions via spark_partition_id); this one trades
-    that fidelity for a cross-engine-reproducible surrogate."""
+    rows, so rank assignment among them cannot flap the hash."""
     from ..sources.ngram_source import _docs_with_tokens
 
     def build() -> DataFrame:
@@ -419,7 +352,7 @@ def q_topk_quirk(spark: SparkSession, sf_dir: str,
                                     totals_quirk_det(c1_df))
         return top_collocations(scored, k)
 
-    return _memoized("topk_quirk", spark, sf_dir, k, None, build)
+    return _memoized(("topk_quirk", sf_dir, k), spark, sf_dir, build)
 
 
 def q_hebrew_topk(spark: SparkSession, sf_dir: str,
@@ -446,4 +379,4 @@ def q_hebrew_topk(spark: SparkSession, sf_dir: str,
         scored = score_collocations(bigram_counts(big), c1_df, totals_df)
         return top_collocations(scored, k)
 
-    return _memoized("hebrew_topk", spark, sf_dir, k, None, build)
+    return _memoized(("hebrew_topk", sf_dir, k), spark, sf_dir, build)

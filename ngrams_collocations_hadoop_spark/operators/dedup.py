@@ -31,7 +31,8 @@ from pyspark.sql import functions as F
 from ..sources.tables import (attach_pk_gate, fan_out, load_table,
                               require_unique_ids)
 from ..functions.exact import ieee_round
-from ..plans.cache import TrackedCache, corpus_state
+from ..plans.cache import (StateCache, corpus_state, drop_stale_siblings,
+                           state_table_name)
 
 # MinHash parameters: 64 permutations = 4 bands × 16 rows. Wide bands
 # (many rows) because the banding must PRUNE: candidate probability is
@@ -57,23 +58,22 @@ def _tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
         "toks", F.array_distinct(F.split(F.col(text_col), " ")))
 
 
-# token caches pinned by the LSH composers — one tracked handle per
-# DISTINCT tokenize plan, bounded to 4 corpora, state-keyed so an
-# in-place corpus rewrite evicts instead of serving stale tokens
-# (VERDICT r08 #7 + ADVICE r09; policy in plans/cache.py)
-_TOK_LIVE = TrackedCache(max_live=4)
+# (doc_id, toks) tokenize subtrees pinned by the LSH composers — one
+# handle per distinct plan, bounded to 4 corpora, keyed on the
+# documents state so an in-place corpus rewrite re-persists fresh
+# tokens instead of feeding stale ones to a freshly built state-keyed
+# index (policy in plans/cache.py)
+_TOK_LIVE = StateCache(max_entries=4)
 
 
-def _tokens_persisted(toks: DataFrame,
-                      state: object = None) -> DataFrame:
-    """Persist the (doc_id, toks) tokenize subtree ONCE per distinct
-    plan and track the handle for release — the ``TrackedCache``
-    policy (bounded FIFO of distinct plans, clearCache re-persist,
-    state-keyed eviction). Callers pass ``state`` =
-    ``corpus_state(sf_dir, spark)`` so a rewritten-in-place corpus
-    re-persists fresh tokens instead of feeding stale cached ones to a
-    freshly built state-keyed index (ADVICE r09)."""
-    return _TOK_LIVE.get(toks, state)
+def _doc_tokens(spark: SparkSession, sf_dir: str,
+                docs: DataFrame | None = None) -> DataFrame:
+    """The pinned (doc_id, toks) frame of ``docs`` (default: the
+    corpus' documents scan)."""
+    if docs is None:
+        docs = load_table(spark, sf_dir, "documents")
+    return _TOK_LIVE.pin(_tokens(docs).select("doc_id", "toks"), spark,
+                         corpus_state(sf_dir, spark))
 
 
 # --- exact + fingerprint dedup ------------------------------------------
@@ -332,9 +332,7 @@ def _minhash_lsh_pair_rows(spark: SparkSession, sf_dir: str,
     is a storage-vs-CPU choice — both plans are one map stage; drop the
     persist if executors are storage-tight (measured sf0.1 warm:
     3.2 s → 2.6 s with it)."""
-    docs = _tokens_persisted(
-        _tokens(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "toks"), state=corpus_state(sf_dir, spark))
+    docs = _doc_tokens(spark, sf_dir)
     sigs = minhash_signatures(docs).select("doc_id", "sig")
     banded = sigs.select(
         "doc_id", "sig",
@@ -554,11 +552,7 @@ def q_dedup_incremental_lsh(spark: SparkSession, sf_dir: str,
     doc_id); a caller-provided ``docs`` is trusted — the composed
     pipeline already resolved identities at stage 0."""
     gate = docs is None
-    if docs is None:
-        docs = load_table(spark, sf_dir, "documents")
-    docs = _tokens_persisted(
-        _tokens(docs).select("doc_id", "toks"),
-        state=corpus_state(sf_dir, spark))
+    docs = _doc_tokens(spark, sf_dir, docs)
     banded = _banded_signatures(docs)
     new_side = (banded.filter(F.col("doc_id") % NEW_BATCH_MOD == 0)
                 .select(F.col("doc_id").alias("doc_new"),
@@ -635,13 +629,14 @@ def _verify_exact_jaccard(docs: DataFrame,
 LSH_INDEX_TABLE = "ncs_lsh_band_index"   # suffixed per corpus state
 LSH_INDEX_BUCKETS = 8                    # policy FLOOR, not the count
 # Corpus-scaled bucket policy, calibrated by scripts/probe_crossover.py
-# (VERDICT r06 #4): the index-side merge join runs at bucket
-# parallelism, so a fixed count caps every match no matter the corpus
-# (measured: the 4x corpus' match fell 20.0 s -> 12.3 s going 8 -> 32
-# buckets). The probe's linear rule — 8 buckets per sf0.1-sized
-# (~0.6 MB) documents input — expressed as bytes-per-bucket and
-# snapped to a power of two so refreshes at nearby sizes don't thrash
-# the layout. Ceiling 4096 buckets ~ 4096-way match parallelism.
+# (script since removed; it remains in git history; VERDICT r06 #4):
+# the index-side merge join runs at bucket parallelism, so a fixed
+# count caps every match no matter the corpus (measured: the 4x
+# corpus' match fell 20.0 s -> 12.3 s going 8 -> 32 buckets). The
+# probe's linear rule — 8 buckets per sf0.1-sized (~0.6 MB) documents
+# input — expressed as bytes-per-bucket and snapped to a power of two
+# so refreshes at nearby sizes don't thrash the layout. Ceiling 4096
+# buckets ~ 4096-way match parallelism.
 LSH_BUCKET_BYTES = 75_000
 LSH_INDEX_MAX_BUCKETS = 4096
 
@@ -664,42 +659,17 @@ def lsh_index_buckets(sf_dir: str, spark: SparkSession | None = None
 
 def lsh_index_table(sf_dir: str, spark: SparkSession | None = None,
                     old_only: bool = False) -> str:
-    """Catalog name of the persisted band index for a corpus STATE:
-    ``<prefix>_<dirhash>_<statehash>`` where dirhash keys the corpus
-    PATH (stable across rewrites — the build's stale-sibling cleanup
-    scopes to it) and statehash keys (mtime, size), so (a) DataFrames
-    built against different corpora never alias each other's index,
-    and (b) an in-place rewrite of the fixture (the fuzz harnesses'
-    pattern) changes the name — a build-if-absent caller rebuilds
-    instead of matching against a stale index. An ``old_only`` build
-    gets a ``_prebatch`` suffix: the canonical state-keyed name only
-    ever holds a full-corpus (or appended-complete) index, so a
-    build-if-absent caller can never silently match against a
-    pre-batch index and drop new-x-new pairs (ADVICE r06)."""
-    import hashlib
-
-    dirh = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    st = corpus_state(sf_dir, spark)
-    state = sf_dir if st is None else f"{sf_dir}|{st[0]}|{st[1]}"
-    h = hashlib.md5(state.encode()).hexdigest()[:8]
-    name = f"{LSH_INDEX_TABLE}_{dirh}_{h}"
+    """Catalog name of the persisted band index for a corpus STATE
+    (``plans.cache.state_table_name``: different corpora never alias
+    each other's index, and an in-place rewrite changes the name, so a
+    build-if-absent caller rebuilds instead of matching against a
+    stale index). An ``old_only`` build gets a ``_prebatch`` suffix:
+    the canonical state-keyed name only ever holds a full-corpus (or
+    appended-complete) index, so a build-if-absent caller can never
+    silently match against a pre-batch index and drop new-x-new pairs
+    (ADVICE r06)."""
+    name = state_table_name(LSH_INDEX_TABLE, sf_dir, spark)
     return f"{name}_prebatch" if old_only else name
-
-
-def _drop_stale_lsh_siblings(spark: SparkSession, sf_dir: str,
-                             keep_state: str) -> None:
-    """Drop index tables for OTHER states of the same corpus path:
-    fuzz/bench loops that rewrite fixtures would otherwise leak one
-    full warehouse copy of the band index per rewrite (ADVICE r06).
-    Tables keyed to the current state (the canonical name and its
-    _prebatch variant) survive."""
-    import hashlib
-
-    dirh = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    prefix = f"{LSH_INDEX_TABLE}_{dirh}_"
-    for t in spark.catalog.listTables():
-        if t.name.startswith(prefix) and not t.name.startswith(keep_state):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
 
 
 def build_lsh_index(spark: SparkSession, sf_dir: str,
@@ -727,20 +697,18 @@ def build_lsh_index(spark: SparkSession, sf_dir: str,
 
     table = lsh_index_table(sf_dir, spark, old_only=old_only)
     if not old_only:
-        _drop_stale_lsh_siblings(spark, sf_dir, table)
+        drop_stale_siblings(spark, LSH_INDEX_TABLE, sf_dir, keep=table)
     if n_buckets is None:
         n_buckets = lsh_index_buckets(sf_dir, spark)
     # The WRITE side reads the shared persisted token cache (r10): the
     # build used to tokenize fresh while its own match leg (and every
-    # sibling LSH query in the session) read `_tokens_persisted` —
+    # sibling LSH query in the session) read `_doc_tokens` —
     # one build+match invocation paid the corpus tokenize twice. Only
     # the write/sign side goes through the cache; the PK-gate audit
     # below still reads the RAW pruned id scan — the r08 "+14 s
     # cache-substitution in the audit subtree" hazard was about the
     # GATE reading a cacheable plan, not the write side.
-    docs = _tokens_persisted(
-        _tokens(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "toks"), state=corpus_state(sf_dir, spark))
+    docs = _doc_tokens(spark, sf_dir)
     if old_only:
         docs = docs.filter(F.col("doc_id") % NEW_BATCH_MOD != 0)
     # fail-loud PK gate: a band index built over duplicate ids would
@@ -752,7 +720,8 @@ def build_lsh_index(spark: SparkSession, sf_dir: str,
     # audit subtree and the broadcast gate materializes a full
     # tokenize pass ahead of the write (the r08 +14 s token-cache
     # class; this residual instance probe-attributed r09 — build +10 s
-    # task time, +2 MB input — scripts/probe_bench_delta.py)
+    # task time, +2 MB input — scripts/probe_bench_delta.py, a script
+    # since removed; it remains in git history)
     ids = load_table(spark, sf_dir, "documents").select("doc_id")
     if old_only:
         ids = ids.filter(F.col("doc_id") % NEW_BATCH_MOD != 0)
@@ -823,11 +792,7 @@ def match_lsh_index(spark: SparkSession, sf_dir: str,
 
     table = table or lsh_index_table(sf_dir, spark)
     gate = docs is None
-    if docs is None:
-        docs = load_table(spark, sf_dir, "documents")
-    docs = _tokens_persisted(
-        _tokens(docs).select("doc_id", "toks"),
-        state=corpus_state(sf_dir, spark))
+    docs = _doc_tokens(spark, sf_dir, docs)
     index_side = read_table(spark, table).select(
         F.col("doc_id").alias("doc_match"),
         F.col("sig").alias("sig_b"), "band_id", "band_hash")
@@ -871,10 +836,10 @@ def match_index_pairs_for_tick(spark: SparkSession, table: str,
 
     ``toks`` is the (doc_id, toks) lookup for the exact-Jaccard
     verify, supplied PRE-TOKENIZED by the caller — the streaming
-    composition passes the ``_tokens_persisted`` cached frame, so the
-    corpus tokenize is materialized once per corpus state and shared
-    across ticks (and with every other LSH query of the corpus)
-    instead of re-scanned per tick; every candidate endpoint is in
+    composition passes the ``_doc_tokens`` pinned frame of the tick's
+    session, so the verify reads one materialized tokenize per tick
+    instead of re-scanning the corpus per consumer; every candidate
+    endpoint is in
     the index (arrived), so the lookup is candidate-bounded and at
     production scale becomes a pruned read of the doc store.
     Trusted (no PK gate): callers are the streaming compositions
@@ -932,7 +897,8 @@ def q_dedup_persisted_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r08→r09 bench-delta probe attributed the row's +0.9 s wall /
     # 13→20 warm stages to exactly this double audit: shuffle volume
     # was byte-flat, task time doubled on audit-stage overhead —
-    # scripts/probe_bench_delta.py, SCALING.md r09 notes)
+    # scripts/probe_bench_delta.py (script since removed; it remains in
+    # git history), SCALING.md r09 notes)
     return match_lsh_index(spark, sf_dir, table,
                            docs=load_table(spark, sf_dir, "documents"))
 
@@ -1496,8 +1462,8 @@ FROM comp
 
 # survivor pair stream pinned by the newest incremental-components
 # invocation (released on the next distinct plan; state-keyed like
-# every tracked cache — plans/cache.py)
-_INC_CC_LIVE = TrackedCache(max_live=1)
+# every pinned handle — plans/cache.py)
+_INC_CC_LIVE = StateCache(max_entries=1)
 
 
 def q_dedup_components_incremental(spark: SparkSession,
@@ -1538,8 +1504,8 @@ def q_dedup_components_incremental(spark: SparkSession,
     band-join/verify pipeline the first already paid for (review
     find r08) — the cache holds the ~true-near-dup set, tiny next to
     the candidate stream that produced it."""
-    pairs = _INC_CC_LIVE.get(_minhash_lsh_pair_rows(spark, sf_dir),
-                             state=corpus_state(sf_dir, spark))
+    pairs = _INC_CC_LIVE.pin(_minhash_lsh_pair_rows(spark, sf_dir), spark,
+                             corpus_state(sf_dir, spark))
     new_a = F.col("doc_a") % NEW_BATCH_MOD == 0
     new_b = F.col("doc_b") % NEW_BATCH_MOD == 0
     old_pairs = pairs.filter(~new_a & ~new_b)
@@ -1566,17 +1532,11 @@ COMPONENTS_TABLE = "ncs_components"   # suffixed per corpus state
 def components_table(sf_dir: str,
                      spark: SparkSession | None = None) -> str:
     """Catalog name of the materialized PRE-BATCH cluster table for a
-    corpus state — same ``<prefix>_<dirhash>_<statehash>`` scheme as
-    ``lsh_index_table`` (different corpora never alias; an in-place
-    fixture rewrite changes the name, so build-if-absent callers
-    rebuild instead of reading stale clusters)."""
-    import hashlib
-
-    dirh = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    st = corpus_state(sf_dir, spark)
-    state = sf_dir if st is None else f"{sf_dir}|{st[0]}|{st[1]}"
-    h = hashlib.md5(state.encode()).hexdigest()[:8]
-    return f"{COMPONENTS_TABLE}_{dirh}_{h}"
+    corpus state — the ``lsh_index_table`` scheme (different corpora
+    never alias; an in-place fixture rewrite changes the name, so
+    build-if-absent callers rebuild instead of reading stale
+    clusters)."""
+    return state_table_name(COMPONENTS_TABLE, sf_dir, spark)
 
 
 def build_components_table(spark: SparkSession, sf_dir: str,

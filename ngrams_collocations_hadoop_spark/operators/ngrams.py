@@ -15,11 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import ieee_round, uavg, uavg_sql
+from ..functions.exact import ieee_round, uavg
 
 from ..constants import LLR_ROUND
 from ..functions import assoc
-from ..functions.llr import llr
 from ..sources.ngram_source import _docs_with_tokens
 from . import collocations as co
 

@@ -26,7 +26,8 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import ieee_round, ieee_round_sql, uavg, uavg_sql
 
-from ..plans.cache import PlanMemo, TrackedCache, corpus_state
+from ..plans.cache import (StateCache, corpus_state, drop_stale_siblings,
+                           state_table_name)
 from ..sources.tables import load_table
 from .dedup import cosine_expr
 
@@ -1062,13 +1063,7 @@ def _pq_d2_expr(m: int, v: str, cv: str) -> str:
 # _bpe_chain pattern, semantics-deduped); state-keyed so an in-place
 # embeddings rewrite evicts instead of serving stale centroids
 # (ADVICE r09; policy in plans/cache.py).
-_PQ_CENT_LIVE = TrackedCache(max_live=3)
-
-
-def _emb_state(sf_dir: str, spark: SparkSession) -> object:
-    """The embeddings input's corpus state — the tracked-cache state
-    key for every embedding-derived pinned frame."""
-    return corpus_state(sf_dir, spark, fname="embeddings.parquet")
+_PQ_CENT_LIVE = StateCache(max_entries=3)
 
 
 def _pq_parts(spark: SparkSession, sf_dir: str,
@@ -1093,9 +1088,8 @@ def _pq_parts(spark: SparkSession, sf_dir: str,
 def _pq_parts_cent(spark: SparkSession, sf_dir: str,
                    codebook: DataFrame | None = None
                    ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """``_pq_parts`` plus the pinned centroid HANDLE — the extra return
-    lets the full-query plan memo (r11) re-pin the codebook on a hit
-    exactly as a fresh construction would."""
+    """``_pq_parts`` plus the pinned centroid HANDLE — a pin of the
+    full-query plan memo (r11), re-pinned on every hit."""
     e = load_finite_embeddings(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v"))
     # K rows, consumed by encoding AND the query table. Pinned through
@@ -1104,9 +1098,9 @@ def _pq_parts_cent(spark: SparkSession, sf_dir: str,
     # re-invocation still reads — measured: the trained-topk bench
     # flip-flopped 1.5 s warm / 8.4 s cold as the release lapped the
     # cap), bounded, and state-keyed on the embeddings input.
-    cent = _PQ_CENT_LIVE.get(
+    cent = _PQ_CENT_LIVE.pin(
         codebook if codebook is not None else _pq_oneshot_codebook(e),
-        state=_emb_state(sf_dir, spark))
+        spark, corpus_state(sf_dir, spark, "embeddings.parquet"))
     codes = _pq_encode(e.crossJoin(F.broadcast(cent)))
     qarr = _pq_query_arr(e, cent)
     return codes, qarr, cent
@@ -1208,30 +1202,19 @@ def _pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 # function of (sf_dir, embeddings corpus state) — no eager
 # materialization, no catalog reads — yet each invocation rebuilt
 # ~0.4-0.6 s of _pq_parts + rank-window Column trees plus one eager
-# parquet footer read (load_finite_embeddings). Guards/bounds/repin
-# discipline centralized in plans.cache.PlanMemo.
-_PQ_QUERY_MEMO = PlanMemo(max_entries=8)
+# parquet footer read (load_finite_embeddings). Guards, bounds and
+# re-pins are plans.cache.StateCache's.
+_PQ_QUERY_MEMO = StateCache(max_entries=8)
 
 
 def _pq_adc_topk_plan(spark: SparkSession, sf_dir: str,
-                      cb_fn=None):
-    """(df, repin) — the full ADC top-k plan (encode → cross-join the
+                      codebook: DataFrame | None = None,
+                      pins: list = ()) -> tuple[DataFrame, list]:
+    """(df, pins) — the full ADC top-k plan (encode → cross-join the
     broadcast query distance tables → filter self → WindowGroupLimit
-    top-k), over the one-shot codebook (``cb_fn=None``) or a trained
-    one (``cb_fn()`` builds it — a ``_pq_trained_codebook`` call whose
-    own memo makes the re-invocation in ``repin`` a pure
-    re-pin-and-return). Bodies extracted verbatim from
-    q_pq_topk / q_pq_trained_topk / q_pq_sampled_topk; plans
-    unchanged."""
-    cb = cb_fn() if cb_fn is not None else None
-    codes, qarr, cent = _pq_parts_cent(spark, sf_dir, cb)
-    st = _emb_state(sf_dir, spark)
-
-    def repin() -> None:
-        if cb_fn is not None:
-            cb_fn()   # inner memo hit: re-pins the Lloyd round handles
-        _PQ_CENT_LIVE.get(cent, state=st)
-
+    top-k), over the one-shot codebook or a trained ``codebook`` whose
+    Lloyd round handles ``pins`` the plan reads too."""
+    codes, qarr, cent = _pq_parts_cent(spark, sf_dir, codebook)
     scored = (codes.crossJoin(F.broadcast(qarr))
               .filter(F.col("vec_id") != F.col("query_id"))
               .withColumn("approx", F.expr(_PQ_ADC_EXPR)))
@@ -1242,7 +1225,7 @@ def _pq_adc_topk_plan(spark: SparkSession, sf_dir: str,
           .select("query_id", F.col("vec_id").alias("cand_id"),
                   ieee_round(F.col("approx"), 6).alias("approx_dot"),
                   "rank"))
-    return df, repin
+    return df, [*pins, (_PQ_CENT_LIVE, cent)]
 
 
 def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1267,9 +1250,10 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The constructed plan is memoized per (sf_dir, corpus state) —
     plan-identical, see ``_PQ_QUERY_MEMO``."""
-    return _PQ_QUERY_MEMO.get(
-        ("topk", sf_dir), spark, _emb_state(sf_dir, spark),
-        lambda: _pq_adc_topk_plan(spark, sf_dir))
+    return _PQ_QUERY_MEMO.plan(
+        ("topk", sf_dir), spark,
+        corpus_state(sf_dir, spark, "embeddings.parquet"),
+        lambda: _pq_adc_topk_plan(spark, sf_dir))[0]
 
 
 # --- persisted PQ-codes index (encode once, serve per ingest) -----------
@@ -1293,29 +1277,8 @@ def pq_index_table(sf_dir: str, spark: SparkSession | None = None) -> str:
     input's state so a re-embedded corpus can never alias a stale
     code table, and on ``PQ_CB_SCHEME`` so a codebook-construction
     change can never alias codes built under the old scheme."""
-    import hashlib
-
-    dirh = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    st = corpus_state(sf_dir, spark, fname="embeddings.parquet")
-    state = sf_dir if st is None else f"{sf_dir}|{st[0]}|{st[1]}"
-    h = hashlib.md5(f"{state}|{PQ_CB_SCHEME}".encode()).hexdigest()[:8]
-    return f"{PQ_INDEX_TABLE}_{dirh}_{h}"
-
-
-def _drop_stale_pq_siblings(spark: SparkSession, sf_dir: str,
-                            keep: str) -> None:
-    """Drop PQ code tables (and their ``_cb`` twins — same prefix) for
-    OTHER states of the same corpus path: fuzz/bench loops that rewrite
-    fixtures, and codebook-scheme upgrades, would otherwise leak one
-    full code-table copy per rewrite (the ``_drop_stale_lsh_siblings``
-    hygiene, ADVICE r09). Tables keyed to the current state survive."""
-    import hashlib
-
-    dirh = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    prefix = f"{PQ_INDEX_TABLE}_{dirh}_"
-    for t in spark.catalog.listTables():
-        if t.name.startswith(prefix) and not t.name.startswith(keep):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+    return state_table_name(PQ_INDEX_TABLE, sf_dir, spark,
+                            fname="embeddings.parquet", salt=PQ_CB_SCHEME)
 
 
 def build_pq_index(spark: SparkSession, sf_dir: str) -> str:
@@ -1350,7 +1313,8 @@ def build_pq_index(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.storage import drop_table_and_location
 
     table = pq_index_table(sf_dir, spark)
-    _drop_stale_pq_siblings(spark, sf_dir, keep=table)
+    # stale siblings (older states or schemes) and their ``_cb`` twins
+    drop_stale_siblings(spark, PQ_INDEX_TABLE, sf_dir, keep=table)
     drop_table_and_location(spark, table)
     cb = _pq_trained_codebook(spark, sf_dir, sample=PQ_TRAIN_SAMPLE)
     drop_table_and_location(spark, f"{table}_cb")
@@ -1544,7 +1508,6 @@ def q_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_PQ_QUERY_MEMO``."""
     def build():
         codes, qarr, cent = _pq_parts_cent(spark, sf_dir)
-        st = _emb_state(sf_dir, spark)
         scored = (codes.crossJoin(F.broadcast(qarr))
                   .filter(F.col("vec_id") != F.col("query_id"))
                   .withColumn("approx", F.expr(_PQ_ADC_EXPR)))
@@ -1553,11 +1516,11 @@ def q_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         cands = (scored.withColumn("crank", F.row_number().over(wc))
                  .filter(F.col("crank") <= PQ_RERANK_C)
                  .select("query_id", F.col("vec_id").alias("cand_id")))
-        return (_exact_refine(spark, sf_dir, cands),
-                lambda: _PQ_CENT_LIVE.get(cent, state=st))
+        return _exact_refine(spark, sf_dir, cands), [(_PQ_CENT_LIVE, cent)]
 
-    return _PQ_QUERY_MEMO.get(
-        ("rerank", sf_dir), spark, _emb_state(sf_dir, spark), build)
+    return _PQ_QUERY_MEMO.plan(
+        ("rerank", sf_dir), spark,
+        corpus_state(sf_dir, spark, "embeddings.parquet"), build)[0]
 
 
 # the per-candidate ADC score text (PQ_M distance-table lookups),
@@ -1721,8 +1684,9 @@ PQ_TRAIN_ITERS = 2
 # At fixture scale the corpus is smaller than the budget, so the
 # sample IS the corpus and the sampled codebook equals the
 # full-trained one (pinned in tests/test_dedup_similarity.py); the
-# sub-corpus sweep lives in scripts/probe_trained_quantizers.py and
-# SCALING.md.
+# sub-corpus sweep is in SCALING.md (measured by
+# scripts/probe_trained_quantizers.py, a script since removed; it
+# remains in git history).
 PQ_TRAIN_SAMPLE = 100_000
 
 # Live persisted per-iteration centroid tables (each is 128 rows but
@@ -1734,7 +1698,7 @@ PQ_TRAIN_SAMPLE = 100_000
 # evicting the other's. State-keyed on the embeddings input (ADVICE
 # r09): an in-place rewrite evicts instead of feeding stale centroids
 # to a freshly built state-keyed PQ table.
-_PQ_TRAIN_LIVE = TrackedCache(max_live=2 * PQ_TRAIN_ITERS)
+_PQ_TRAIN_LIVE = StateCache(max_entries=2 * PQ_TRAIN_ITERS)
 
 # Process-level memo of the CONSTRUCTED trained-codebook plan, keyed on
 # (sf_dir, sample) (r10 optimization, guide §1.2 per-"task" work where
@@ -1742,17 +1706,14 @@ _PQ_TRAIN_LIVE = TrackedCache(max_live=2 * PQ_TRAIN_ITERS)
 # py4j Column-tree round-trips per invocation — paid by every warm
 # re-run of sim_pq_trained_topk / sim_pq_sampled_topk and both recall
 # audits, at any corpus scale, for a plan that is a pure function of
-# (sf_dir, sample, corpus state). The repin closure re-`get`s the
-# per-round persisted handles on a hit, so a `catalog.clearCache()`
+# (sf_dir, sample, corpus state). Its pins are the per-round handles,
+# re-pinned on every hit (and on every hit of a query plan built on
+# the codebook, which carries them), so a `catalog.clearCache()`
 # between invocations re-pins the chain exactly as a fresh
-# construction would (TrackedCache re-persists orphaned same-plan
-# handles). A state move (in-place embeddings rewrite — the
+# construction would. A state move (in-place embeddings rewrite — the
 # registry-fuzz scenario) or a new session/JVM misses and rebuilds;
 # the `e`-override path (epoch-slice training) is never memoized.
-# Guards/recency/bounds centralized in plans.cache.PlanMemo (r11 —
-# the ADVICE r10 fixes: None-state bypass, reinsert recency,
-# applicationId session guard).
-_PQ_CB_MEMO = PlanMemo(max_entries=8)
+_PQ_CB_MEMO = StateCache(max_entries=8)
 
 # per-candidate sub-vector d² inside the map-side argmin fold (s is
 # the (cid, cv) candidate struct from the broadcast per-subspace list)
@@ -1836,33 +1797,30 @@ def _pq_trained_codebook(spark: SparkSession, sf_dir: str,
     (sf_dir, sample, embeddings state), so rebuilding its Column trees
     per invocation is per-invocation driver cost for an identical
     plan."""
-    if e is None:
-        st = _emb_state(sf_dir, spark)
+    return _pq_trained_plan(spark, sf_dir, sample, e)[0]
 
-        def build():
-            rounds, final = _pq_trained_chain(spark, sf_dir, sample,
-                                              None)
 
-            def repin() -> None:
-                # no-op when still cached, re-persist after a
-                # clearCache, rebuild-equivalent after FIFO eviction
-                for h in rounds:
-                    _PQ_TRAIN_LIVE.get(h, state=st)
-
-            return final, repin
-
-        return _PQ_CB_MEMO.get((sf_dir, sample), spark, st, build)
-    return _pq_trained_chain(spark, sf_dir, sample, e)[1]
+def _pq_trained_plan(spark: SparkSession, sf_dir: str,
+                     sample: int | None = None,
+                     e: DataFrame | None = None
+                     ) -> tuple[DataFrame, list]:
+    """(codebook, pins): ``_pq_trained_codebook`` with the Lloyd round
+    handles it reads, memoized unless ``e`` overrides the vectors."""
+    if e is not None:
+        return _pq_trained_chain(spark, sf_dir, sample, e)
+    return _PQ_CB_MEMO.plan(
+        (sf_dir, sample), spark,
+        corpus_state(sf_dir, spark, "embeddings.parquet"),
+        lambda: _pq_trained_chain(spark, sf_dir, sample, None))
 
 
 def _pq_trained_chain(spark: SparkSession, sf_dir: str,
                       sample: int | None,
                       e: DataFrame | None
-                      ) -> tuple[list[DataFrame], DataFrame]:
+                      ) -> tuple[DataFrame, list]:
     """Build the Lloyd chain (the body of ``_pq_trained_codebook``;
     see its docstring for the algorithm and scale shape). Returns the
-    per-iteration tracked handles alongside the final codebook so the
-    plan memo can re-pin them on a hit."""
+    final codebook and the per-iteration pinned handles."""
     if e is None:
         e = load_finite_embeddings(spark, sf_dir).select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v"))
@@ -1885,16 +1843,16 @@ def _pq_trained_chain(spark: SparkSession, sf_dir: str,
     sub = train.select("vec_id", F.expr(
         f"inline(transform(sequence(0, {PQ_M - 1}), m -> "
         f"struct(m AS m, slice(v, m * {PQ_SUB} + 1, {PQ_SUB}) AS sv)))"))
-    st = _emb_state(sf_dir, spark)
-    rounds: list[DataFrame] = []
+    st = corpus_state(sf_dir, spark, "embeddings.parquet")
+    pins = []
     for _ in range(PQ_TRAIN_ITERS):
-        cent = _PQ_TRAIN_LIVE.get(_pq_lloyd_round(sub, cent), state=st)
-        rounds.append(cent)
-    return rounds, (cent.groupBy("cid")
-                    .agg(F.expr("flatten(transform(array_sort("
-                                "collect_list(named_struct('m', m, "
-                                "'cv', cv))), s -> s.cv))")
-                         .alias("cv")))
+        cent = _PQ_TRAIN_LIVE.pin(_pq_lloyd_round(sub, cent), spark, st)
+        pins.append((_PQ_TRAIN_LIVE, cent))
+    return (cent.groupBy("cid")
+            .agg(F.expr("flatten(transform(array_sort("
+                        "collect_list(named_struct('m', m, "
+                        "'cv', cv))), s -> s.cv))")
+                 .alias("cv"))), pins
 
 
 def q_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1903,11 +1861,11 @@ def q_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall audit (``q_sim_pq_trained_recall``) is where the training
     shows up as measured recall instead of a claim. Plan memoized per
     (sf_dir, corpus state) — see ``_PQ_QUERY_MEMO``."""
-    return _PQ_QUERY_MEMO.get(
-        ("trained", sf_dir), spark, _emb_state(sf_dir, spark),
+    return _PQ_QUERY_MEMO.plan(
+        ("trained", sf_dir), spark,
+        corpus_state(sf_dir, spark, "embeddings.parquet"),
         lambda: _pq_adc_topk_plan(
-            spark, sf_dir,
-            cb_fn=lambda: _pq_trained_codebook(spark, sf_dir)))
+            spark, sf_dir, *_pq_trained_plan(spark, sf_dir)))[0]
 
 
 def q_sim_pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1948,15 +1906,16 @@ def q_pq_sampled_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the verdict asked for — also pytest-pinned); at 100 TB it is the
     form you actually run per codebook refresh. The sub-budget
     crossover (where sampling starts costing recall on this fixture)
-    is measured in scripts/probe_trained_quantizers.py → SCALING.md.
+    is measured in SCALING.md (scripts/probe_trained_quantizers.py,
+    a script since removed; it remains in git history).
     Plan memoized per (sf_dir, corpus state) — see
     ``_PQ_QUERY_MEMO``."""
-    return _PQ_QUERY_MEMO.get(
-        ("sampled", sf_dir), spark, _emb_state(sf_dir, spark),
+    return _PQ_QUERY_MEMO.plan(
+        ("sampled", sf_dir), spark,
+        corpus_state(sf_dir, spark, "embeddings.parquet"),
         lambda: _pq_adc_topk_plan(
             spark, sf_dir,
-            cb_fn=lambda: _pq_trained_codebook(spark, sf_dir,
-                                               sample=PQ_TRAIN_SAMPLE)))
+            *_pq_trained_plan(spark, sf_dir, PQ_TRAIN_SAMPLE)))[0]
 
 
 def _pq_trained_cent_sql(sample: int | None = None) -> str:

@@ -1,40 +1,50 @@
-"""Bounded, state-keyed tracking of persisted DataFrames.
+"""The one in-process state layer: memoized plans, pinned handles and
+state-keyed table names.
 
-Several operators pin an expensive subtree (tokenize sets, Lloyd
-centroid tables, verified pair streams) across invocations. Spark's
-CacheManager keys entries on the ANALYZED PLAN, which creates two
-session-lifetime hazards this helper centralizes the fix for:
+``StateCache`` holds two kinds of entry, one kind per instance:
 
-1. Unbounded pinned state: re-calling ``.persist()`` on an equal plan
-   only logs the "already cached" WARN and leaves an untracked handle
-   nothing ever unpersists — a long-lived session touching many corpora
-   accumulates one cache entry per corpus (VERDICT r08 #7). The live
-   list here holds ONE handle per DISTINCT plan (``sameSemantics``
-   dedup — releasing an alias of the current plan would evict the warm
-   entry a re-invocation is about to read) and evicts FIFO past
-   ``max_live``.
+- Memoized plans (``plan``). Building a heavy operator's Column trees
+  costs ~0.3-0.9 s of py4j round-trips per call, for a plan that is a
+  pure function of (key, input state). The cache stores the DataFrame
+  HANDLE, not a result: every write, ``count`` or derived frame plans
+  and runs the full DAG from the inputs. One caveat: ``collect`` and
+  ``toPandas`` reuse the handle's own QueryExecution, so a repeated
+  one skips the shuffle map stages whose outputs Spark still holds and
+  runs only the last stage. Those outputs came from the same input
+  state the hit was keyed on, and they stay on local disk while the
+  entry lives. Only memoize pure plan construction: a hit skips the
+  builder, so it must not materialize anything or read the catalog.
+  A builder returns ``(df, pins)``: the persisted handles the plan
+  reads, as ``(owner, handle)`` pairs. A hit re-pins each through its
+  owner, exactly as a fresh build would have.
+- Persisted handles (``pin``), keyed on plan semantics
+  (``semanticHash``, confirmed by ``sameSemantics``). Spark's
+  CacheManager keys on the analyzed plan, so re-persisting an equal
+  plan only leaves an untracked handle that nothing unpersists; the
+  cache holds ONE handle per distinct plan, bounded, and unpersists
+  what it drops.
 
-2. Stale data under in-place rewrites (ADVICE r09): plan semantics do
-   not see file contents, so when an input parquet is rewritten at the
-   same path mid-session, a same-plan hit would serve the OLD corpus'
-   cached blocks — and the old handle's file listing — to a caller
-   about to build a fresh state-keyed table from it, undermining the
-   no-stale-aliasing guarantee those names exist for. Each tracked
-   handle therefore records the input's corpus state (the
-   ``corpus_state`` (mtime_ns, size) pair); a same-plan request whose
-   state changed evicts the stale handle and re-persists the caller's
-   FRESH frame (fresh blocks AND a fresh scan/file listing).
-
-A ``state`` of None (the stat failed — non-local FS without a session)
-degrades to plan-only keying, matching the loud warning
-``corpus_state`` already emits for exactly that situation.
+One guard decides every hit: the same session object, the same
+``applicationId`` (a stopped-and-recreated context must never get
+Columns or handles wrapping dead JVM objects) and an equal input
+state (the ``corpus_state`` pair — plan semantics cannot see an
+in-place rewrite of a file). A state of None (the stat failed) never
+hits: the call builds, or persists nothing, and stores nothing. On a
+miss a handle from the same live context is unpersisted; one from a
+dead context is dropped without calling into it. Eviction is LRU past
+``max_entries`` (a hit moves the key to the recent end). One lock per
+cache guards its entries; plan builders run outside it (a builder may
+re-enter its own cache), persists run inside it (two threads pinning
+one plan track one handle).
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import threading
 import warnings
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -44,8 +54,8 @@ def corpus_state(sf_dir: str, spark: SparkSession | None = None,
                  ) -> tuple[int, int] | None:
     """(mtime_ns, size_bytes) of the corpus' ``fname`` input
     (documents by default; the PQ index keys on embeddings) — the
-    state key of every state-keyed table name, ``TrackedCache`` entry
-    and ``PlanMemo`` entry. Driver-local ``os.stat`` first; on OSError
+    state key of every state-keyed table name and ``StateCache``
+    entry. Driver-local ``os.stat`` first; on OSError
     (the input is not on a local filesystem — HDFS/S3 in production)
     fall back to the Hadoop FileSystem API through the JVM when a
     session is available, and otherwise WARN loudly (ADVICE r06): a
@@ -90,135 +100,135 @@ def corpus_state(sf_dir: str, spark: SparkSession | None = None,
     return None
 
 
-class TrackedCache:
-    """FIFO-bounded live list of persisted DataFrames, deduped by plan
-    semantics and keyed on the input corpus state (see module doc)."""
+class _Entry(NamedTuple):
+    session: SparkSession
+    app: str
+    state: object
+    df: DataFrame
+    pins: list | None   # None: the entry IS a pinned handle
 
-    def __init__(self, max_live: int) -> None:
-        self.max_live = max_live
-        # (handle, state) per DISTINCT live plan, oldest first
-        self._live: list[tuple[DataFrame, object]] = []
+
+def _app_id(spark: SparkSession | None) -> str | None:
+    try:
+        return spark.sparkContext.applicationId
+    except Exception:   # stopped/stopping context
+        return None
+
+
+class StateCache:
+    """Guarded, LRU-bounded memo of plans or persisted handles (see
+    the module doc)."""
+
+    def __init__(self, max_entries: int) -> None:
+        self.max_entries = max_entries
+        # key -> _Entry, least recently used first
+        self._entries: dict = {}
+        self._lock = threading.Lock()
 
     @property
     def handles(self) -> list[DataFrame]:
-        return [h for h, _ in self._live]
+        return [e.df for e in list(self._entries.values())]
 
-    def get(self, df: DataFrame, state: object = None) -> DataFrame:
-        """The tracked persisted handle for ``df``'s plan: the existing
-        one on a same-plan same-state hit (re-persisted if a
-        ``catalog.clearCache()`` orphaned it), else ``df`` itself,
-        newly persisted and tracked (evicting first the stale same-plan
-        handle if the state moved, then FIFO past the bound)."""
-        for ent in self._live:
-            h, st = ent
-            if df.sameSemantics(h):
-                if st != state:
-                    # in-place rewrite of the input: drop the stale
-                    # blocks AND the stale handle (its scan pinned the
-                    # old file listing); fall through to re-persist
-                    # the caller's fresh frame
-                    self._live.remove(ent)
-                    h.unpersist(blocking=False)
-                    break
-                lvl = h.storageLevel
-                if not (lvl.useMemory or lvl.useDisk):
-                    # e.g. a catalog.clearCache() between invocations
-                    # dropped the entry out from under the handle
-                    h.persist()
-                return h
-        df = df.persist()
-        self._live.append((df, state))
-        while len(self._live) > self.max_live:
-            self._live.pop(0)[0].unpersist(blocking=False)
+    def plan(self, key, spark: SparkSession, state: object,
+             build: Callable[[], tuple[DataFrame, list]]
+             ) -> tuple[DataFrame, list]:
+        """``(df, pins)`` for ``key``: the stored pair on a guard hit
+        (its pins re-pinned), else ``build()``'s, stored."""
+        app = _app_id(spark)
+        if state is None or app is None:
+            return build()
+        with self._lock:
+            ent = self._entries.pop(key, None)
+            if ent is not None:
+                self._entries[key] = ent
+        if ent is not None and _holds(ent, spark, app, state):
+            for owner, h in ent.pins:
+                owner.pin(h, spark, state)
+            return ent.df, ent.pins
+        df, pins = build()
+        with self._lock:
+            self._entries.pop(key, None)
+            self._entries[key] = _Entry(spark, app, state, df, pins)
+            self._trim(app)
+        return df, pins
+
+    def pin(self, df: DataFrame, spark: SparkSession,
+            state: object) -> DataFrame:
+        """The tracked persisted handle for ``df``'s plan: the stored
+        one on a guard hit (re-persisted if a ``catalog.clearCache()``
+        orphaned it), else ``df`` itself, persisted and stored."""
+        app = _app_id(spark)
+        key = df.semanticHash()
+        with self._lock:
+            ent = self._entries.pop(key, None)
+            if ent is not None:
+                if _holds(ent, spark, app, state) and \
+                        df.sameSemantics(ent.df):
+                    self._entries[key] = ent
+                    lvl = ent.df.storageLevel
+                    if not (lvl.useMemory or lvl.useDisk):
+                        ent.df.persist()
+                    return ent.df
+                _release(ent, app)
+            if state is None or app is None:
+                return df
+            df = df.persist()
+            self._entries[key] = _Entry(spark, app, state, df, None)
+            self._trim(app)
         return df
 
     def clear(self) -> None:
-        """Release every tracked handle (test harness hook)."""
-        while self._live:
-            self._live.pop()[0].unpersist(blocking=False)
-
-
-class PlanMemo:
-    """Process-level memo of CONSTRUCTED DataFrame plans (r10/r11
-    optimization, guide §1.2 — per-"task" work where the task is the
-    DRIVER): building a heavy operator's Column trees is ~0.3-0.9 s of
-    py4j round-trips per invocation, paid by every warm re-run at any
-    corpus scale, for a plan that is a pure function of (inputs,
-    corpus state). This is NOT result caching: the memo stores the
-    DataFrame HANDLE, and every write, ``count`` or derived frame
-    plans and executes the full DAG from the parquet inputs. One
-    caveat: ``collect``/``toPandas`` reuse the handle's own
-    QueryExecution, so a repeated one skips the shuffle map stages
-    whose outputs Spark still holds and runs only the last stage.
-    Those outputs came from the same corpus state the hit was keyed
-    on, and they stay on local disk while the entry lives — at most
-    ``max_entries`` plans' shuffle files.
-
-    Users: the PQ ANN family (``similarity._PQ_QUERY_MEMO``, the
-    trained codebook's ``_PQ_CB_MEMO``) and the flagship collocation
-    family (``collocations._COLLOC_MEMO``: ``q_scored``, ``q_topk``,
-    ``q_topk_quirk``, ``q_hebrew_topk``).
-
-    Guards, centralizing the ADVICE r10 fixes on the r10 ad-hoc memo:
-
-    - session: hits require the same Python session object AND the
-      same ``applicationId`` — a stopped-and-recreated JVM context
-      under a reused session object must rebuild, not hand back
-      Columns wrapping dead JavaObjects.
-    - corpus state: a hit requires the builder-supplied ``state``
-      (the ``corpus_state`` (mtime_ns, size) pair) to be unchanged;
-      an in-place input rewrite rebuilds. A state of None (stat
-      unavailable — non-local FS without a fallback) DISABLES
-      memoization for that call instead of treating None == None as
-      a valid hit.
-    - recency: a hit or a rebuild moves the key to the recent end, so
-      eviction drops the least recently used entry past
-      ``max_entries`` (a hot entry is not evicted before cold ones).
-
-    Only memoize builders that are PURE PLAN CONSTRUCTION: no eager
-    materialization (localCheckpoint, eager index/table builds), no
-    catalog lookups that may change between invocations — a memo hit
-    skips the builder entirely. Builders return ``(df, repin)``;
-    ``repin`` (or None) re-pins the plan's TrackedCache handles and
-    runs on every hit, so a ``catalog.clearCache()`` between
-    invocations re-persists exactly as a fresh construction would.
-    """
-
-    def __init__(self, max_entries: int = 8) -> None:
-        self.max_entries = max_entries
-        # key -> (session, app_id, state, repin, df), oldest first
-        self._memo: dict = {}
-        # serving threads may share one session; the builds and repins
-        # run outside the lock (a builder may re-enter this memo)
-        self._lock = threading.Lock()
-
-    def get(self, key, spark, state, build):
-        """The memoized plan for ``key``, rebuilding via ``build()``
-        (-> (df, repin)) on any guard miss."""
-        if state is None:
-            return build()[0]
-        try:
-            app = spark.sparkContext.applicationId
-        except Exception:   # stopped/stopping context — never memoize
-            return build()[0]
+        """Drop every entry, unpersisting live handles (test hook)."""
         with self._lock:
-            hit = self._memo.pop(key, None)
-            if hit is not None:
-                self._memo[key] = hit   # reinsert = move to recent end
-        if (hit is not None and hit[0] is spark and hit[1] == app
-                and hit[2] == state):
-            if hit[3] is not None:
-                hit[3]()
-            return hit[4]
-        df, repin = build()
-        with self._lock:
-            self._memo.pop(key, None)
-            self._memo[key] = (spark, app, state, repin, df)
-            while len(self._memo) > self.max_entries:
-                self._memo.pop(next(iter(self._memo)))
-        return df
+            while self._entries:
+                ent = self._entries.popitem()[1]
+                _release(ent, _app_id(ent.session))
 
-    def clear(self) -> None:
-        """Drop every memoized plan (test harness hook)."""
-        with self._lock:
-            self._memo.clear()
+    def _trim(self, app: str) -> None:
+        while len(self._entries) > self.max_entries:
+            _release(self._entries.pop(next(iter(self._entries))), app)
+
+
+def _holds(ent: _Entry, spark: SparkSession, app: str,
+           state: object) -> bool:
+    return (ent.session is spark and ent.app == app
+            and state is not None and ent.state == state)
+
+
+def _release(ent: _Entry, app: str | None) -> None:
+    """Unpersist a dropped handle unless its context is gone."""
+    if ent.pins is None and ent.app == app:
+        ent.df.unpersist(blocking=False)
+
+
+def state_table_name(prefix: str, sf_dir: str,
+                     spark: SparkSession | None = None,
+                     fname: str = "documents.parquet",
+                     salt: str | None = None) -> str:
+    """Catalog name of a table derived from a corpus STATE:
+    ``<prefix>_<dirhash>_<statehash>``. dirhash keys the corpus PATH
+    (stable across rewrites, so ``drop_stale_siblings`` can scope to
+    it); statehash keys the ``fname`` input's (mtime, size) and
+    ``salt`` (a scheme tag), so tables built from different corpora,
+    states or schemes never alias, and an in-place rewrite changes the
+    name — a build-if-absent caller rebuilds instead of reading a
+    stale table."""
+    dirh = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
+    st = corpus_state(sf_dir, spark, fname=fname)
+    state = sf_dir if st is None else f"{sf_dir}|{st[0]}|{st[1]}"
+    if salt is not None:
+        state = f"{state}|{salt}"
+    return f"{prefix}_{dirh}_{hashlib.md5(state.encode()).hexdigest()[:8]}"
+
+
+def drop_stale_siblings(spark: SparkSession, prefix: str, sf_dir: str,
+                        keep: str) -> None:
+    """Drop the ``state_table_name`` tables of OTHER states of the same
+    corpus path: loops that rewrite a corpus in place would otherwise
+    leak one full table copy per rewrite. Names starting with ``keep``
+    (the current state's table and its suffixed twins) survive."""
+    dirh = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
+    for t in spark.catalog.listTables():
+        if (t.name.startswith(f"{prefix}_{dirh}_")
+                and not t.name.startswith(keep)):
+            spark.sql(f"DROP TABLE IF EXISTS {t.name}")

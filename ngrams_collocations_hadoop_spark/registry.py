@@ -315,8 +315,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # r09 window (this round): 7 changed — the persisted-LSH pair (the
 # trusted ``docs`` override on match_lsh_index, ADVICE r08; plus the
 # bench-delta triage subject), the two LSH composers whose token
-# cache moved to the bounded _tokens_persisted live list (VERDICT
-# r08 #7; caching-only, output-invariant — the REST of the
+# cache moved to the bounded token live list (now dedup._doc_tokens;
+# VERDICT r08 #7; caching-only, output-invariant — the REST of the
 # _minhash_lsh_pair_rows family is r07/r08-green and stays behind
 # the window with the same output-invariance), the incremental
 # components query (same cache path), and the trained-PQ pair
@@ -346,7 +346,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # serve now delivers the trained +0.10/+0.06 recall@10 lift from the
 # stored table) and gained the trusted ``emb`` serve-gate override
 # (VERDICT r09 #5); every cross-invocation plan cache moved to the
-# state-keyed bounded TrackedCache (ADVICE r09 — plans/cache.py;
+# state-keyed bounded tracked cache (ADVICE r09 — since merged into
+# plans/cache.py::StateCache;
 # output-invariant for dedup_persisted_lsh/_match, dedup_minhash_lsh,
 # dedup_incremental_lsh, dedup_components_incremental and the
 # trained/sampled PQ chains); dedup_components_update kept its PK
@@ -369,7 +370,8 @@ QUERIES: dict[str, QueryFn] = {
     #     PQ index now stores the production sampled-Lloyd codebook
     #     (oracle switched to the sampled CTE chain) + the trusted
     #     emb override on its serve gate; every tracked plan cache
-    #     moved to the state-keyed TrackedCache (ADVICE r09 —
+    #     moved to the state-keyed tracked cache (since merged into
+    #     plans/cache.py::StateCache; ADVICE r09 —
     #     output-invariant for the LSH composers, the incremental
     #     components query, and the trained/sampled PQ chains); the
     #     components update kept its PK gate under path-only keying

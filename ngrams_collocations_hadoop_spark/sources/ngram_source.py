@@ -84,12 +84,6 @@ def unigram_records(spark: SparkSession, sf_dir: str,
 HEBREW_WHERE_SQL = "lang = 'en'"
 
 
-def hebrew_unigram_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram records of the derived Hebrew corpus (lang='he')."""
-    return unigram_records(spark, sf_dir, HEBREW_TEXT_SQL, "'he'",
-                           HEBREW_WHERE_SQL)
-
-
 def bigram_records(spark: SparkSession, sf_dir: str,
                    text_sql: str = "text",
                    lang_sql: str = "lang",
@@ -119,12 +113,6 @@ def bigram_records(spark: SparkSession, sf_dir: str,
         .select(*extra, "lang", F.col("bg.token1").alias("token1"),
                 F.col("bg.token2").alias("token2"), "year", "occurrences")
     )
-
-
-def hebrew_bigram_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bigram records of the derived Hebrew corpus (lang='he')."""
-    return bigram_records(spark, sf_dir, HEBREW_TEXT_SQL, "'he'",
-                          HEBREW_WHERE_SQL)
 
 
 # --- DuckDB-oracle CTE bodies (same derivation in ANSI SQL) -------------

@@ -1404,7 +1404,6 @@ def q_stream_components_maintain(spark: SparkSession,
                                    build_lsh_index, components_table,
                                    match_index_pairs_for_tick,
                                    refresh_components_table)
-    from ..sources.tables import load_table
 
     _ensure_session_confs(spark)
     lsh_table = build_lsh_index(spark, sf_dir, old_only=True)
@@ -1417,7 +1416,7 @@ def q_stream_components_maintain(spark: SparkSession,
               .parquet(batch_dir))
 
     def tick(batch: DataFrame, batch_id: int) -> None:
-        from ..operators.dedup import _tokens, _tokens_persisted
+        from ..operators.dedup import _doc_tokens
 
         sess = batch.sparkSession
         append_lsh_index(sess, lsh_table, batch)
@@ -1425,13 +1424,10 @@ def q_stream_components_maintain(spark: SparkSession,
         # tick must see the prior tick's appends and write-backs
         sess.catalog.refreshTable(lsh_table)
         sess.catalog.refreshTable(cc_table)
-        # verify-side token lookup through the shared persisted cache:
-        # one corpus tokenize materialization per corpus state, reused
-        # across ticks (and by every other LSH query of this corpus)
-        toks = _tokens_persisted(
-            _tokens(load_table(sess, sf_dir, "documents"))
-            .select("doc_id", "toks"),
-            state=corpus_state(sf_dir, sess))
+        # verify-side token lookup through the pinned token cache; each
+        # tick's session is a new object, so the tick re-pins its own
+        # handle (one corpus tokenize per tick)
+        toks = _doc_tokens(sess, sf_dir)
         pairs = match_index_pairs_for_tick(sess, lsh_table, batch, toks)
         refresh_components_table(sess, sf_dir, cc_table,
                                  batch_pairs=pairs)

@@ -138,66 +138,6 @@ def test_topk_cutoff_and_tiebreak(spark):
     assert [r["rank"] for r in top] == list(range(1, 11))
 
 
-def test_quirk_mode_diverges_from_exact(spark):
-    """Bit-parity emulation of the reference's two bugs (SURVEY.md §4)
-    must demonstrably diverge from the exact path on a crafted input —
-    and in exactly the reference's way.
-
-    Quirk 1 (Job1.java:282-292): a bigram whose occurrences span two
-    map tasks yields TWO fragmented c12 rows, never re-summed.
-    Quirk 2 (Job2.java:185): N is one reducer's partial (last cache
-    file read wins), not the global sum."""
-    stop = stopwords_df(spark)
-    uni_rows = [("en", f"w{i:02d}", 2000, 100) for i in range(8)]
-    uni = co.clean_unigrams(spark.createDataFrame(uni_rows, UNI_SCHEMA),
-                            stop)
-    c1 = co.unigram_counts(uni)
-
-    # -- quirk 1: split one bigram's occurrences across two "map tasks"
-    # (input partitions). parallelize(..., 2) pins one row per
-    # partition; a union of createDataFrame children would NOT work —
-    # ConvertToLocalRelation folds them into a single partition.
-    big_raw = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [("en", "w00", "w01", 2000, 3),
-             ("en", "w00", "w01", 2003, 4)], 2), BIG_SCHEMA)
-    big = co.clean_bigrams(big_raw, stop)
-    exact = co.bigram_counts(big).collect()
-    assert [(r["w1"], r["w2"], r["c12"]) for r in exact] == [
-        ("w00", "w01", 7)]
-    frag = sorted(r["c12"] for r in co.bigram_counts_quirk(big).collect())
-    assert frag == [3, 4]          # two P records, fragmented counts
-
-    # -- quirk 2: N = the max-rid bucket's partial, not the global sum
-    from pyspark.sql import functions as F
-    exact_n = co.totals(uni).collect()[0]["n_total"]
-    assert exact_n == 800
-    buckets = {r["_rid"]: r["s"] for r in
-               c1.withColumn("_rid", F.pmod(
-                   F.xxhash64("lang", "decade", "word"), F.lit(2)))
-               .groupBy("_rid").agg(F.sum("c1").alias("s")).collect()}
-    assert len(buckets) == 2       # words actually span both reducers
-    quirk_n = co.totals_quirk(c1, reducers=2).collect()[0]["n_total"]
-    assert quirk_n == buckets[1]   # last part-file (highest rid) wins
-    assert quirk_n != exact_n
-
-    # -- end to end: each fragment is scored independently and competes
-    # separately in the top-k, against the partial N.
-    scored_q = co.score_collocations(
-        co.bigram_counts_quirk(big), c1, co.totals_quirk(c1, reducers=2))
-    rows_q = sorted((r["c12"], r["n_total"], r["llr"])
-                    for r in scored_q.collect())
-    scored_e = co.score_collocations(
-        co.bigram_counts(big), c1, co.totals(uni))
-    rows_e = [(r["c12"], r["n_total"], r["llr"])
-              for r in scored_e.collect()]
-    assert len(rows_q) == 2 and len(rows_e) == 1
-    assert [c for c, _, _ in rows_q] == [3, 4]
-    assert all(n == quirk_n for _, n, _ in rows_q)
-    assert rows_e[0][0] == 7 and rows_e[0][1] == exact_n
-    assert {l for _, _, l in rows_q}.isdisjoint({rows_e[0][2]})
-
-
 # (registry-wide DuckDB differential coverage lives in test_registry.py)
 
 
@@ -297,8 +237,8 @@ def test_quirk_det_aggregation_invariants(spark):
 # --- plan memo (co._COLLOC_MEMO) ------------------------------------------
 
 def _memo_entry(key):
-    """The stored (session, app_id, state, repin, df) entry for ``key``."""
-    return co._COLLOC_MEMO._memo[key]
+    """The stored (session, app, state, df, pins) entry for ``key``."""
+    return co._COLLOC_MEMO._entries[key]
 
 
 def test_topk_plan_memo_hit_is_identical_and_matches_oracle(spark):
@@ -316,22 +256,19 @@ def test_topk_plan_memo_hit_is_identical_and_matches_oracle(spark):
     assert co.q_topk(spark, SF_SMALL) is a
 
 
-def test_topk_plan_memo_keys_on_k_and_quirk_mode(spark):
+def test_topk_plan_memo_keys_on_k(spark):
     from .conftest import SF_SMALL
 
     co._COLLOC_MEMO.clear()
     base = co.q_topk(spark, SF_SMALL)
     k5 = co.q_topk(spark, SF_SMALL, k=5)
-    quirk = co.q_topk(spark, SF_SMALL, quirk_mode=True)
-    assert len({id(base), id(k5), id(quirk)}) == 3
-    assert not k5.sameSemantics(base) and not quirk.sameSemantics(base)
+    assert k5 is not base
+    assert not k5.sameSemantics(base)
     assert co.q_topk(spark, SF_SMALL, k=5) is k5
-    assert co.q_topk(spark, SF_SMALL, quirk_mode=True) is quirk
-    keys = set(co._COLLOC_MEMO._memo)
-    assert {("topk", SF_SMALL, co.TOP_K, False), ("topk", SF_SMALL, 5, False),
-            ("topk", SF_SMALL, co.TOP_K, True),
-            ("scored", SF_SMALL, None, False),
-            ("scored", SF_SMALL, None, True)} <= keys
+    assert co.q_topk(spark, SF_SMALL) is base
+    keys = set(co._COLLOC_MEMO._entries)
+    assert {("topk", SF_SMALL, co.TOP_K), ("topk", SF_SMALL, 5),
+            ("scored", SF_SMALL, None)} <= keys
 
 
 def test_topk_plan_memo_rebuilds_on_in_place_rewrite(spark, tmp_path):
@@ -371,12 +308,12 @@ def test_topk_plan_memo_misses_on_new_application_id(spark):
 
     co._COLLOC_MEMO.clear()
     a = co.q_topk(spark, SF_SMALL)
-    key = ("topk", SF_SMALL, co.TOP_K, False)
-    sess, _, state, repin, df = _memo_entry(key)
-    co._COLLOC_MEMO._memo[key] = (sess, "app-stopped", state, repin, df)
+    key = ("topk", SF_SMALL, co.TOP_K)
+    co._COLLOC_MEMO._entries[key] = _memo_entry(key)._replace(
+        app="app-stopped")
     b = co.q_topk(spark, SF_SMALL)
     assert b is not a and b.sameSemantics(a)
-    assert _memo_entry(key)[1] == spark.sparkContext.applicationId
+    assert _memo_entry(key).app == spark.sparkContext.applicationId
 
 
 def test_topk_plan_memo_hit_restores_session_confs(spark):

@@ -866,14 +866,15 @@ def test_pq_trained_codebook_plan_memo(spark):
     from ngrams_collocations_hadoop_spark.operators import similarity as S
     from .conftest import SF_SMALL
 
-    # PlanMemo entries: key -> (session, app_id, state, repin, df)
-    memo = S._PQ_CB_MEMO._memo
+    # StateCache entries: key -> _Entry(session, app, state, df, pins)
+    memo = S._PQ_CB_MEMO._entries
     key = (SF_SMALL, None)
     S._PQ_CB_MEMO.clear()
     S._PQ_TRAIN_LIVE.clear()   # so it tracks exactly this chain's rounds
     a = S._pq_trained_codebook(spark, SF_SMALL)
     assert S._pq_trained_codebook(spark, SF_SMALL) is a  # memo hit
-    assert memo[key][4] is a
+    assert memo[key].df is a
+    assert [h for _, h in memo[key].pins] == S._PQ_TRAIN_LIVE.handles
     assert len(S._PQ_TRAIN_LIVE.handles) == S.PQ_TRAIN_ITERS
     # hit path re-pins the per-round handles after a clearCache
     spark.catalog.clearCache()
@@ -883,18 +884,17 @@ def test_pq_trained_codebook_plan_memo(spark):
     assert all(lvl.useMemory or lvl.useDisk for lvl in lvls)
     # a corpus-state move (in-place embeddings rewrite) must miss and
     # rebuild — same plan, fresh construction
-    sess, app, _, repin, final = memo[key]
-    memo[key] = (sess, app, ("moved",), repin, final)
+    memo[key] = memo[key]._replace(state=("moved",))
     d = S._pq_trained_codebook(spark, SF_SMALL)
     assert d is not a and d.sameSemantics(a)
-    assert memo[key][4] is d
+    assert memo[key].df is d
     # the e-override path (append test's epoch-slice training) bypasses
     # the memo entirely
     n0 = len(memo)
     e = S.load_finite_embeddings(spark, SF_SMALL).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v"))
     S._pq_trained_codebook(spark, SF_SMALL, e=e)
-    assert len(memo) == n0 and memo[key][4] is d
+    assert len(memo) == n0 and memo[key].df is d
 
 
 def test_incremental_components_merge_old_clusters(spark):
@@ -1019,35 +1019,39 @@ def test_tokens_persisted_tracking(spark):
     cold forever."""
     import ngrams_collocations_hadoop_spark.operators.dedup as dd
 
-    saved = list(dd._TOK_LIVE._live)
-    dd._TOK_LIVE._live.clear()
+    saved = dict(dd._TOK_LIVE._entries)
+    dd._TOK_LIVE._entries.clear()
+
+    def pin(df):
+        return dd._TOK_LIVE.pin(df, spark, (1, 1))
+
     try:
-        max_live = dd._TOK_LIVE.max_live
+        max_live = dd._TOK_LIVE.max_entries
         plans = [
             _docs(spark, [(i, BASE)]).select("doc_id", "toks")
             for i in range(max_live + 1)
         ]
-        h0 = dd._tokens_persisted(plans[0])
-        assert dd._tokens_persisted(plans[0]) is h0
-        assert len(dd._TOK_LIVE._live) == 1
+        h0 = pin(plans[0])
+        assert pin(plans[0]) is h0
+        assert len(dd._TOK_LIVE._entries) == 1
         assert h0.storageLevel.useMemory or h0.storageLevel.useDisk
         for p in plans[1:]:
-            dd._tokens_persisted(p)
+            pin(p)
         # bound trips: oldest evicted, newest MAX still tracked
-        assert len(dd._TOK_LIVE._live) == max_live
+        assert len(dd._TOK_LIVE._entries) == max_live
         assert not any(h0.sameSemantics(h) for h in dd._TOK_LIVE.handles)
         # clearCache orphan: same handle comes back re-persisted
         h1 = dd._TOK_LIVE.handles[0]
         spark.catalog.clearCache()
         lvl = h1.storageLevel
         assert not (lvl.useMemory or lvl.useDisk)
-        h1b = dd._tokens_persisted(h1)
+        h1b = pin(h1)
         assert h1b is h1
         lvl = h1.storageLevel
         assert lvl.useMemory or lvl.useDisk
     finally:
         dd._TOK_LIVE.clear()
-        dd._TOK_LIVE._live.extend(saved)
+        dd._TOK_LIVE._entries.update(saved)
         spark.catalog.clearCache()
 
 
@@ -1060,9 +1064,9 @@ def test_tracked_cache_state_eviction(spark):
     returning the one tracked handle."""
     import tempfile
 
-    from ngrams_collocations_hadoop_spark.plans.cache import TrackedCache
+    from ngrams_collocations_hadoop_spark.plans.cache import StateCache
 
-    cache = TrackedCache(max_live=2)
+    cache = StateCache(max_entries=2)
     base = tempfile.mkdtemp(prefix="ncs_trackcache_")
     spark.range(5).write.parquet(f"{base}/t.parquet")
     try:
@@ -1070,37 +1074,44 @@ def test_tracked_cache_state_eviction(spark):
         # aliasing shape (load_table called per invocation)
         p1 = spark.read.parquet(f"{base}/t.parquet")
         p1_alias = spark.read.parquet(f"{base}/t.parquet")
-        h = cache.get(p1, state=(100, 7))
-        assert cache.get(p1_alias, state=(100, 7)) is h
-        assert len(cache._live) == 1
+        h = cache.pin(p1, spark, (100, 7))
+        assert cache.pin(p1_alias, spark, (100, 7)) is h
+        assert len(cache._entries) == 1
         # the input was rewritten: same plan, new (mtime, size) state
-        h2 = cache.get(p1_alias, state=(200, 7))
+        h2 = cache.pin(p1_alias, spark, (200, 7))
         assert h2 is not h
         assert h2 is p1_alias
-        assert len(cache._live) == 1
+        assert len(cache._entries) == 1
         lvl = h2.storageLevel
         assert lvl.useMemory or lvl.useDisk
         # the stale handle was released (async — its entry is gone)
         assert not any(h is t for t in cache.handles)
-        # None state (stat unavailable) degrades to plan-only keying
-        # (two scans of one path, the production aliasing shape —
-        # separately-built createDataFrame plans would NOT be
-        # sameSemantics, so the alias must come from the same source)
+        # None state (stat unavailable) never hits: the same-plan
+        # handle is released, and the caller's frame is returned
+        # neither persisted nor tracked (two scans of one path, the
+        # production aliasing shape)
         spark.range(3).write.parquet(f"{base}/u.parquet")
-        hn = cache.get(spark.read.parquet(f"{base}/u.parquet"))
-        assert cache.get(spark.read.parquet(f"{base}/u.parquet")) is hn
+        hu = cache.pin(spark.read.parquet(f"{base}/u.parquet"), spark,
+                       (1, 1))
+        un = spark.read.parquet(f"{base}/u.parquet")
+        assert cache.pin(un, spark, None) is un
+        assert not any(hu is t for t in cache.handles)
+        assert not (un.storageLevel.useMemory or un.storageLevel.useDisk)
+        assert cache.pin(spark.read.parquet(f"{base}/u.parquet"), spark,
+                         None) is not un
     finally:
         cache.clear()
         spark.catalog.clearCache()
 
 
 def test_plan_memo_guards_and_recency():
-    """PlanMemo without Spark: a hit needs the same session object,
-    applicationId and state; a None state never memoizes; and a hit
-    refreshes recency, so eviction drops the least recently used key."""
+    """StateCache plans without Spark: a hit needs the same session
+    object, applicationId and state; a None state never memoizes; and
+    a hit refreshes recency, so eviction drops the least recently used
+    key."""
     from types import SimpleNamespace
 
-    from ngrams_collocations_hadoop_spark.plans.cache import PlanMemo
+    from ngrams_collocations_hadoop_spark.plans.cache import StateCache
 
     sess = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="a1"))
     built = []
@@ -1108,29 +1119,33 @@ def test_plan_memo_guards_and_recency():
     def build(tag):
         def b():
             built.append(tag)
-            return object(), None
+            return object(), []
         return b
 
-    memo = PlanMemo(max_entries=2)
-    x = memo.get("x", sess, 1, build("x"))
-    assert memo.get("x", sess, 1, build("x")) is x and built == ["x"]
-    assert memo.get("x", sess, 2, build("x")) is not x   # state moved
-    x = memo._memo["x"][4]
+    memo = StateCache(max_entries=2)
+
+    def get(key, session, state):
+        return memo.plan(key, session, state, build(key))[0]
+
+    x = get("x", sess, 1)
+    assert get("x", sess, 1) is x and built == ["x"]
+    assert get("x", sess, 2) is not x                    # state moved
+    x = memo._entries["x"].df
     other = SimpleNamespace(sparkContext=sess.sparkContext)
-    assert memo.get("x", other, 2, build("x")) is not x   # new session
-    x = memo.get("x", sess, 2, build("x"))
-    sess.sparkContext.applicationId = "a2"                # restarted
-    assert memo.get("x", sess, 2, build("x")) is not x
+    assert get("x", other, 2) is not x                   # new session
+    x = get("x", sess, 2)
+    sess.sparkContext.applicationId = "a2"               # restarted
+    assert get("x", sess, 2) is not x
     n = len(built)
-    memo.get("n", sess, None, build("n"))
-    memo.get("n", sess, None, build("n"))
-    assert len(built) == n + 2 and "n" not in memo._memo
+    get("n", sess, None)
+    get("n", sess, None)
+    assert len(built) == n + 2 and "n" not in memo._entries
     # recency: x hit after y was inserted, so z evicts y, not x
-    x = memo.get("x", sess, 2, build("x"))
-    memo.get("y", sess, 2, build("y"))
-    assert memo.get("x", sess, 2, build("x")) is x
-    memo.get("z", sess, 2, build("z"))
-    assert list(memo._memo) == ["x", "z"]
+    x = get("x", sess, 2)
+    get("y", sess, 2)
+    assert get("x", sess, 2) is x
+    get("z", sess, 2)
+    assert list(memo._entries) == ["x", "z"]
 
 
 def test_plan_memo_concurrent_callers():
@@ -1143,17 +1158,17 @@ def test_plan_memo_concurrent_callers():
     import threading
     from types import SimpleNamespace
 
-    from ngrams_collocations_hadoop_spark.plans.cache import PlanMemo
+    from ngrams_collocations_hadoop_spark.plans.cache import StateCache
 
     sess = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="a"))
-    memo = PlanMemo(max_entries=3)
+    memo = StateCache(max_entries=3)
     errors: list = []
 
     def worker(tid: int) -> None:
         try:
             for i in range(400):
                 key = (tid + i) % 7
-                got = memo.get(key, sess, 1, lambda: ((key,), None))
+                got = memo.plan(key, sess, 1, lambda: ((key,), []))[0]
                 assert got == (key,), (got, key)
         except BaseException as exc:   # reported by the main thread
             errors.append(exc)
@@ -1171,7 +1186,7 @@ def test_plan_memo_concurrent_callers():
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors[0]
-    assert len(memo._memo) <= 3
+    assert len(memo._entries) <= 3
 
 
 def test_pq_sampled_equals_trained_at_fixture_scale(spark):

@@ -1,4 +1,4 @@
-"""LLR (C1) — column expression vs scalar Python port of reference
+"""LLR (C1) — SQL expression vs scalar Python port of reference
 LLR.java:16-47, guard branches, and the properties from SURVEY.md §5."""
 
 from __future__ import annotations
@@ -10,7 +10,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from ngrams_collocations_hadoop_spark.functions.llr import llr, llr_py
+from ngrams_collocations_hadoop_spark.functions.llr import llr_py, llr_sql
 
 
 def test_guard_branches():
@@ -66,7 +66,7 @@ def test_column_matches_python(spark):
     df = spark.createDataFrame(rows, ["c1", "c2", "c12", "n"])
     got = df.select(
         "c1", "c2", "c12", "n",
-        llr(F.col("c1"), F.col("c2"), F.col("c12"), F.col("n")).alias("v"),
+        F.expr(llr_sql("c1", "c2", "c12", "n")).alias("v"),
     ).collect()
     for r in got:
         expected = llr_py(r["c1"], r["c2"], r["c12"], r["n"])
