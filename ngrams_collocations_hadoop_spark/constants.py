@@ -3,8 +3,8 @@ oracle-SQL generators, so the two sides cannot drift.
 
 The reference ships per-language stopword files via the Hadoop distributed
 cache (reference ``Stopwords.java:23-43``); here the equivalent is a small
-in-code table broadcast to executors (or inlined as a VALUES list in the
-oracle SQL).
+in-code table, tested in place as a per-language predicate
+(``stopword_sql``) or inlined as a VALUES list in the oracle SQL.
 """
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ from __future__ import annotations
 LANGS: tuple[str, ...] = ("en", "es", "zh", "fr", "de")
 
 # Per-language stopword lists. A shared core plus one language-specific
-# entry each, so the per-(lang, word) anti-join semantics (reference
+# entry each, so the per-(lang, word) drop semantics (reference
 # Job1.java:144,189) are actually observable in test output — a plain
 # `NOT IN (global set)` would give different counts.
 _CORE_STOP: tuple[str, ...] = ("the", "a", "of", "and", "to")
@@ -68,12 +68,18 @@ TOP_K = 100  # reference Job3 Top-100 per (lang, decade) (Job3.java:56-80)
 LLR_ROUND = 6
 
 
-def stopword_rows() -> list[tuple[str, str]]:
-    """Flat (lang, word) rows for building a DataFrame or SQL VALUES list."""
-    return [(lang, w) for lang in STOPWORDS for w in STOPWORDS[lang]]
+def stopword_sql(word: str) -> str:
+    """SQL predicate: ``word`` is a stopword of the row's ``lang``
+    (reference Job1.java:144,189) — one CASE arm per language, no join;
+    any other or NULL lang keeps every word."""
+    arms = " ".join(
+        f"WHEN '{l}' THEN {word} IN ('" + "', '".join(ws) + "')"
+        for l, ws in STOPWORDS.items())
+    return f"(CASE lang {arms} ELSE FALSE END)"
 
 
 def stopword_values_sql() -> str:
-    """A `(VALUES ...) AS stop(lang, word)` body for the DuckDB oracle."""
-    rows = ", ".join(f"('{l}', '{w}')" for l, w in stopword_rows())
+    """Every stopword as `(VALUES ...) AS stop(lang, word)`."""
+    rows = ", ".join(f"('{l}', '{w}')"
+                     for l, ws in STOPWORDS.items() for w in ws)
     return f"(VALUES {rows}) AS stop(lang, word)"

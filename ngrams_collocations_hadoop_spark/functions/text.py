@@ -75,16 +75,19 @@ def clean_token_sql(expr: str, dialect: str = "duckdb") -> str:
     DuckDB (the oracle) and Spark SQL (the SQL-API functions in
     sql_api.py); only the final lowercase differs — DuckDB needs the
     Java-semantics emulation (``_java_lower_duckdb``), Spark's native
-    lower() is already the reference behavior."""
+    lower() is already the reference behavior. The Spark dialect also
+    takes ``clean_token``'s all-[a-z0-9] fast path; the oracle keeps
+    the plain chain."""
     t = f"trim({expr})"
     t = (f"(CASE WHEN position('_' IN {t}) > 1 "
          f"THEN split_part({t}, '_', 1) ELSE {t} END)")
     t = f"regexp_replace({t}, '{_LEAD}', '')"
     t = f"regexp_replace({t}, '{_TRAIL}', '')"
     t = f"trim({t})"
-    lowered = (_java_lower_duckdb(t) if dialect == "duckdb"
-               else f"lower({t})")
-    return f"coalesce({lowered}, '')"
+    if dialect == "duckdb":
+        return f"coalesce({_java_lower_duckdb(t)}, '')"
+    return (f"coalesce(CASE WHEN {expr} RLIKE '^[a-z0-9]+$' THEN {expr} "
+            f"ELSE lower({t}) END, '')")
 
 
 def _is_alnum(ch: str) -> bool:

@@ -6,12 +6,13 @@ Reference mapping (all file:line cites are into /root/reference):
 
   stage                      reference                       here
   -------------------------  ------------------------------  -----------------------------
-  token cleaning             NGramUtils.java:29-39           functions.text.clean_token
-  occ>0 / empty-token drops  Job1.java:138,142,181,186       filters (pushed down)
-  stopword anti-join         Job1.java:144,189               broadcast left_anti join
+  token cleaning             NGramUtils.java:29-39           functions.text.clean_token, once
+                                                             per token (ngram_source.cleaned)
+  occ>0 / empty-token drops  Job1.java:138,142,181,186       per-doc filter / NULL token
+  stopword drop              Job1.java:144,189               NULL token (stopword_sql), no join
   decade bucketing           NGramUtils.java:8               functions.text.decade
   c1 agg (A2)                Job1.java:279-281               groupBy().sum()
-  c12 agg (A3, *intended*)   Job1.java:282-292 (quirky)      exact groupBy().sum()
+  c12 agg (A3, *intended*)   Job1.java:282-292 (quirky)      exact groupBy().sum(), job1_layout
   N agg (A4)                 Job1.java:265-267,306-311       exact groupBy().sum()
   join on w1 (J1)            Job1.java:62-94,237-314 (~120   one .join() — Catalyst picks
                              LoC hand-rolled merge join)     SMJ/SHJ, AQE may rewrite
@@ -28,13 +29,17 @@ Deliberate divergences from reference quirks (SURVEY.md §4): exact c12
 across map tasks, exact N at any parallelism, deterministic Top-K
 tiebreak (llr desc, w1, w2).
 
-Scale notes (100 TB): the raw record streams never materialize — clean +
-filter + partial agg happen map-side before the first shuffle (the
-reference's combiner, for free via HashAggregateExec). The two big joins
-shuffle on (lang, decade, word) — high cardinality, well distributed
-after stopword removal. N (≈ langs × decades rows) is broadcast. The
-unigram-count subtree feeds three consumers (c1, c2, N); AQE reads its
-shuffle once (the c2 and N consumers run as ReusedExchange).
+Scale notes (100 TB): the raw record streams never materialize: each
+document's token array is cleaned once, and the unigram and bigram
+streams are generators over it, so no Filter re-cleans and no join
+drops stopwords. c1 partial-aggregates map-side before its shuffle
+(the reference's combiner, via HashAggregateExec). c12 runs on the
+Job1 layout (``job1_layout``): it loses its map-side combine, but its
+aggregate, the join probes, LLR and the partial Top-K run on every
+core. The joins meet the unigram counts on (lang, decade, word) —
+high cardinality, well distributed. N (≈ langs × decades rows) is
+broadcast. The unigram-count subtree feeds three consumers (c1, c2,
+N); AQE reads its shuffle once (c2 and N run as ReusedExchange).
 
 Plan memo: building the flagship's Column trees is ~1,900 py4j
 round-trips (~0.7 s of driver time on a 4-core host) per call, for a
@@ -59,63 +64,33 @@ from pyspark.sql import functions as F
 from ..constants import LLR_ROUND, TOP_K
 from ..functions.exact import ieee_round
 from ..functions.llr import llr_sql
-from ..functions.text import clean_token, decade
 from ..plans.cache import StateCache, corpus_state
-from ..sources.ngram_source import bigram_records, unigram_records
-from ..sources.tables import _ensure_session_confs, stopwords_df
+from ..sources.ngram_source import (HEBREW_TEXT_SQL, HEBREW_WHERE_SQL,
+                                    bigram_stream, cleaned, cleaned_docs,
+                                    unigram_stream)
+from ..sources.tables import _ensure_session_confs
 
 
 # --- record-level transforms (DataFrame -> DataFrame) -------------------
 
-def clean_unigrams(uni_raw: DataFrame, stop: DataFrame) -> DataFrame:
-    """(lang, token, year, occurrences) -> (lang, decade, word, occ).
+# One row per record (the reference's input shape), for tests and the
+# benchmark's layer probe: each record is ``cleaned`` as a one- or
+# two-token document. ``stop`` (``stopwords_df``) is not joined: the
+# drop uses the same lists through ``constants.stopword_sql``.
 
-    Applies validity filters (occ > 0), token cleaning, empty-token drop,
-    and the per-language stopword anti-join (broadcast).
-    """
-    cleaned = (
-        uni_raw
-        .filter(F.col("occurrences") > 0)
-        .select(
-            "lang",
-            decade(F.col("year")).alias("decade"),
-            clean_token(F.col("token")).alias("word"),
-            F.col("occurrences").cast("long").alias("occ"),
-        )
-        .filter(F.col("word") != "")
-    )
-    return cleaned.join(F.broadcast(stop), on=["lang", "word"], how="left_anti")
+def clean_unigrams(uni_raw: DataFrame, stop: DataFrame) -> DataFrame:
+    """(lang, token, year, occurrences) -> (lang, decade, word, occ):
+    occ > 0, cleaned, no empty token or stopword of the record's lang."""
+    return unigram_stream(cleaned(uni_raw, F.array("token")))
 
 
 def clean_bigrams(big_raw: DataFrame, stop: DataFrame,
                   carry: tuple[str, ...] = ()) -> DataFrame:
-    """(lang, token1, token2, year, occurrences) -> (lang, decade, w1, w2, occ).
-
-    A bigram is dropped when EITHER side cleans to empty or is a stopword
-    for the record's language (reference Job1.java:189). ``carry`` names
-    extra input columns to pass through untouched (the quirk surface
-    carries ``doc_id`` as its map-task surrogate).
-    """
-    cleaned = (
-        big_raw
-        .filter(F.col("occurrences") > 0)
-        .select(
-            *carry,
-            "lang",
-            decade(F.col("year")).alias("decade"),
-            clean_token(F.col("token1")).alias("w1"),
-            clean_token(F.col("token2")).alias("w2"),
-            F.col("occurrences").cast("long").alias("occ"),
-        )
-        .filter((F.col("w1") != "") & (F.col("w2") != ""))
-    )
-    stop1 = F.broadcast(stop.select("lang", F.col("word").alias("w1")))
-    stop2 = F.broadcast(stop.select("lang", F.col("word").alias("w2")))
-    return (
-        cleaned
-        .join(stop1, on=["lang", "w1"], how="left_anti")
-        .join(stop2, on=["lang", "w2"], how="left_anti")
-    )
+    """(lang, token1, token2, year, occurrences) -> (lang, decade, w1, w2,
+    occ); dropped when EITHER side is (reference Job1.java:189).
+    ``carry`` passes input columns through (the quirk surface's doc_id)."""
+    return bigram_stream(cleaned(big_raw, F.array("token1", "token2"),
+                                 carry), carry)
 
 
 # --- aggregations (A2/A3/A4 — exact at any parallelism) -----------------
@@ -126,6 +101,19 @@ def unigram_counts(uni: DataFrame) -> DataFrame:
     reference's hand-written combiner (Job1.java:197-209)."""
     return (uni.groupBy("lang", "decade", "word")
             .agg(F.sum("occ").alias("c1")))
+
+
+def job1_layout(big: DataFrame,
+                keys: tuple[str, ...] = ("lang", "decade", "w1")
+                ) -> DataFrame:
+    """The bigram stream hash-partitioned on (lang, decade, w1) at the
+    cluster's parallelism, reference Job1's ``Job1Key`` order (SURVEY.md
+    §1.1). The c12 aggregate needs no exchange of its own (so it loses
+    its map-side combine), and AQE never coalesces an explicit-count
+    repartition: c12, the join probes, LLR and the partial Top-K run on
+    every core instead of in one task."""
+    return big.repartition(big.sparkSession.sparkContext.defaultParallelism,
+                           *keys)
 
 
 def bigram_counts(big: DataFrame) -> DataFrame:
@@ -266,30 +254,16 @@ def top_collocations(scored: DataFrame, k: int = TOP_K) -> DataFrame:
 
 # --- whole-pipeline wrappers (spark, sf_dir) -> DataFrame ----------------
 
-def _cleaned_inputs(spark: SparkSession, sf_dir: str):
-    from ..sources.ngram_source import _docs_with_tokens
-
-    stop = stopwords_df(spark)
-    # one shared source subtree for both record streams (r10 driver-
-    # overhead cut; plan-identical — see unigram_records)
-    docs = _docs_with_tokens(spark, sf_dir)
-    uni = clean_unigrams(unigram_records(spark, sf_dir, docs=docs), stop)
-    big = clean_bigrams(bigram_records(spark, sf_dir, docs=docs), stop)
-    return uni, big
-
 def q_unigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    uni, _ = _cleaned_inputs(spark, sf_dir)
-    return unigram_counts(uni)
+    return unigram_counts(unigram_stream(cleaned_docs(spark, sf_dir)))
 
 
 def q_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, big = _cleaned_inputs(spark, sf_dir)
-    return bigram_counts(big)
+    return bigram_counts(bigram_stream(cleaned_docs(spark, sf_dir)))
 
 
 def q_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    uni, _ = _cleaned_inputs(spark, sf_dir)
-    return totals(uni)
+    return totals(unigram_stream(cleaned_docs(spark, sf_dir)))
 
 
 # One memo for the family; keys are (builder, sf_dir, k), k None where
@@ -309,17 +283,21 @@ def _memoized(key: tuple, spark: SparkSession, sf_dir: str,
                              lambda: (build(), []))[0]
 
 
-def q_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        uni, big = _cleaned_inputs(spark, sf_dir)
-        c1_df = unigram_counts(uni)
-        # N = Σ c1 — rolls up from the counts instead of re-scanning
-        # the raw unigram stream (algebraically identical).
-        totals_df = (c1_df.groupBy("lang", "decade")
-                     .agg(F.sum("c1").alias("n_total")))
-        return score_collocations(bigram_counts(big), c1_df, totals_df)
+def _scored(docs: DataFrame,
+            layout: tuple[str, ...] = ("lang", "decade", "w1")) -> DataFrame:
+    """``cleaned_docs`` -> scored bigrams. N = Σ c1 — rolls up from the
+    counts instead of re-scanning the unigram stream (algebraically
+    identical)."""
+    c1_df = unigram_counts(unigram_stream(docs))
+    totals_df = (c1_df.groupBy("lang", "decade")
+                 .agg(F.sum("c1").alias("n_total")))
+    c12_df = bigram_counts(job1_layout(bigram_stream(docs), layout))
+    return score_collocations(c12_df, c1_df, totals_df)
 
-    return _memoized(("scored", sf_dir, None), spark, sf_dir, build)
+
+def q_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _memoized(("scored", sf_dir, None), spark, sf_dir,
+                     lambda: _scored(cleaned_docs(spark, sf_dir)))
 
 
 def q_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
@@ -337,17 +315,10 @@ def q_topk_quirk(spark: SparkSession, sf_dir: str,
     decade, bigram, llr, rank) collapses fragment identity: fragments
     of one bigram that round to the same llr yield IDENTICAL output
     rows, so rank assignment among them cannot flap the hash."""
-    from ..sources.ngram_source import _docs_with_tokens
-
     def build() -> DataFrame:
-        stop = stopwords_df(spark)
-        docs = _docs_with_tokens(spark, sf_dir)   # shared subtree (r10)
-        uni = clean_unigrams(unigram_records(spark, sf_dir, docs=docs),
-                             stop)
-        big = clean_bigrams(bigram_records(spark, sf_dir, keep_doc=True,
-                                           docs=docs),
-                            stop, carry=("doc_id",))
-        c1_df = unigram_counts(uni)
+        docs = cleaned_docs(spark, sf_dir)
+        c1_df = unigram_counts(unigram_stream(docs))
+        big = job1_layout(bigram_stream(docs, carry=("doc_id",)))
         scored = score_collocations(bigram_counts_quirk_det(big), c1_df,
                                     totals_quirk_det(c1_df))
         return top_collocations(scored, k)
@@ -361,22 +332,14 @@ def q_hebrew_topk(spark: SparkSession, sf_dir: str,
     (lang='he', RTL script) with the Hebrew stopword list — the
     reference's second-corpus surface (its heb stopword block in
     ``Stopwords.java``; EMR run in ``Analysis.md``). Exercises clean →
-    stopword anti-join → counts → joins → LLR → Top-K end to end on
+    stopword drop → counts → joins → LLR → Top-K end to end on
     non-Latin text; same operators, different codepoint plane."""
-    from ..sources.ngram_source import (_docs_with_tokens,
-                                        HEBREW_TEXT_SQL, HEBREW_WHERE_SQL)
-
     def build() -> DataFrame:
-        stop = stopwords_df(spark)
-        docs = _docs_with_tokens(spark, sf_dir, HEBREW_TEXT_SQL, "'he'",
-                                 HEBREW_WHERE_SQL)   # shared subtree (r10)
-        uni = clean_unigrams(unigram_records(spark, sf_dir, docs=docs),
-                             stop)
-        big = clean_bigrams(bigram_records(spark, sf_dir, docs=docs), stop)
-        c1_df = unigram_counts(uni)
-        totals_df = (c1_df.groupBy("lang", "decade")
-                     .agg(F.sum("c1").alias("n_total")))
-        scored = score_collocations(bigram_counts(big), c1_df, totals_df)
-        return top_collocations(scored, k)
+        docs = cleaned_docs(spark, sf_dir, HEBREW_TEXT_SQL, "'he'",
+                            HEBREW_WHERE_SQL)
+        # lang is the constant 'he' here, which Catalyst folds out of
+        # the partitioning but not out of the aggregate's key, so a
+        # lang-keyed layout would not satisfy the aggregate
+        return top_collocations(_scored(docs, ("decade", "w1")), k)
 
     return _memoized(("hebrew_topk", sf_dir, k), spark, sf_dir, build)

@@ -181,17 +181,15 @@ def q_doc_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream is a pure map; one shuffle join against the bounded LM
     table; per-doc aggregation is a partial-agg groupBy."""
     from ..functions.text import clean_token, decade
-    from ..sources.ngram_source import _docs_with_tokens
+    from ..sources.ngram_source import pairs_sql
 
     lm = q_condprob(spark, sf_dir).select(
         "lang", "decade", "w1", "w2",
         F.col("p_w2_given_w1").alias("p"))
     d = _docs_with_tokens(spark, sf_dir)
-    pairs = F.expr(
-        "transform(slice(ts, 1, greatest(size(ts) - 1, 0)), "
-        "(x, i) -> struct(x AS t1, ts[i + 1] AS t2))")
     db = (d.select("doc_id", "lang", decade(F.col("year")).alias("decade"),
-                   F.explode(pairs).alias("bg"))
+                   F.explode(F.expr(pairs_sql("ts", "t1", "t2")))
+                   .alias("bg"))
           .select("doc_id", "lang", "decade",
                   clean_token(F.col("bg.t1")).alias("w1"),
                   clean_token(F.col("bg.t2")).alias("w2"))

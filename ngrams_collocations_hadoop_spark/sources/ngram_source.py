@@ -12,6 +12,10 @@ Here the same record families are derived from `documents`:
 
 with ``year = 2000 + doc_id % 30`` and ``occurrences = 1 + doc_id % 5``.
 
+The flagship pipelines read ``cleaned_docs`` instead: each document's
+token array cleaned once, dropped tokens NULL, no stopword join; the
+unigram and bigram streams are generators over that array.
+
 Everything is a column expression (split / transform / explode) — token
 pairing happens inside codegen with zero shuffles; at 100 TB this stage
 is a pure map over the document scan.
@@ -19,11 +23,12 @@ is a pure map over the document scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import (OCC_EXPR_SQL, TRANSLIT_HEBREW, TRANSLIT_LATIN,
-                         YEAR_EXPR_SQL)
+                         YEAR_EXPR_SQL, stopword_sql)
+from ..functions.text import _java_lower_duckdb, clean_token, decade
 from ..sources.tables import fan_out as _fan_out, load_table
 
 # The Hebrew corpus derivation (reference second corpus,
@@ -34,8 +39,6 @@ from ..sources.tables import fan_out as _fan_out, load_table
 # the oracle variant uses the Java-semantics emulation
 # (functions/text.py::_java_lower_duckdb).
 def hebrew_text_sql(dialect: str = "spark") -> str:
-    from ..functions.text import _java_lower_duckdb
-
     low = (_java_lower_duckdb("text") if dialect == "duckdb"
            else "lower(text)")
     return f"translate({low}, '{TRANSLIT_LATIN}', '{TRANSLIT_HEBREW}')"
@@ -57,23 +60,10 @@ def _docs_with_tokens(spark: SparkSession, sf_dir: str,
     )
 
 
-def unigram_records(spark: SparkSession, sf_dir: str,
-                    text_sql: str = "text",
-                    lang_sql: str = "lang",
-                    where_sql: str = "TRUE",
-                    docs: DataFrame | None = None) -> DataFrame:
-    """(lang, token, year, occurrences) — raw, pre-cleaning.
-
-    ``docs`` lets a caller that also builds the bigram stream pass ONE
-    shared ``_docs_with_tokens`` subtree (r10): the two streams' source
-    plans are identical, and constructing it twice cost ~0.16 s of
-    driver py4j round-trips per query construction. Plan-identical —
-    Catalyst canonicalized the two copies anyway."""
-    if docs is None:
-        docs = _docs_with_tokens(spark, sf_dir, text_sql, lang_sql,
-                                 where_sql)
-    return docs.select("lang", "year", "occurrences",
-                       F.explode("ts").alias("token"))
+def unigram_records(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(lang, token, year, occurrences) — raw, pre-cleaning."""
+    return _docs_with_tokens(spark, sf_dir).select(
+        "lang", "year", "occurrences", F.explode("ts").alias("token"))
 
 
 # The Hebrew corpus derives from the ENGLISH documents only (one
@@ -85,34 +75,90 @@ HEBREW_WHERE_SQL = "lang = 'en'"
 
 
 def bigram_records(spark: SparkSession, sf_dir: str,
-                   text_sql: str = "text",
-                   lang_sql: str = "lang",
-                   where_sql: str = "TRUE",
-                   keep_doc: bool = False,
-                   docs: DataFrame | None = None) -> DataFrame:
-    """(lang, token1, token2, year, occurrences) — adjacent pairs.
-
-    `transform` over a slice pairs ts[i] with ts[i+1] entirely JVM-side
-    (Spark SQL array subscripts are 0-based); single-token documents
-    produce no pairs. ``keep_doc=True`` carries the source ``doc_id``
-    (the deterministic map-task surrogate of the quirk-emulation
-    surface needs it). ``docs`` shares the source subtree with a
-    sibling ``unigram_records`` (see there)."""
-    pairs = F.expr(
-        "transform(slice(ts, 1, greatest(size(ts) - 1, 0)), "
-        "(x, i) -> struct(x AS token1, ts[i + 1] AS token2))"
-    )
+                   keep_doc: bool = False) -> DataFrame:
+    """(lang, token1, token2, year, occurrences) — adjacent pairs;
+    ``keep_doc=True`` carries the source ``doc_id`` (the quirk surface's
+    map-task surrogate)."""
     extra = ["doc_id"] if keep_doc else []
-    if docs is None:
-        docs = _docs_with_tokens(spark, sf_dir, text_sql, lang_sql,
-                                 where_sql)
     return (
-        docs
+        _docs_with_tokens(spark, sf_dir)
         .select(*extra, "lang", "year", "occurrences",
-                F.explode(pairs).alias("bg"))
+                F.explode(F.expr(pairs_sql("ts", "token1", "token2")))
+                .alias("bg"))
         .select(*extra, "lang", F.col("bg.token1").alias("token1"),
                 F.col("bg.token2").alias("token2"), "year", "occurrences")
     )
+
+
+def pairs_sql(arr: str, a: str, b: str) -> str:
+    """struct(arr[i] AS a, arr[i + 1] AS b) for each adjacent pair. The
+    slice stops one short of the end, so ``arr[i + 1]`` stays in bounds
+    under ANSI mode (unsliced, it raises INVALID_ARRAY_INDEX on the
+    last token)."""
+    return (f"transform(slice({arr}, 1, greatest(size({arr}) - 1, 0)), "
+            f"(x, i) -> struct(x AS {a}, {arr}[i + 1] AS {b}))")
+
+
+# --- the flagship's source: one cleaned token array per document -------
+
+# The kept words and the adjacent kept pairs of a cleaned array ``cw``
+# (reference Job1.java:181-189: a bigram is dropped when either side is)
+UNIGRAMS_SQL = "filter(cw, w -> w IS NOT NULL)"
+BIGRAM_PAIRS_SQL = (f"filter({pairs_sql('cw', 'w1', 'w2')}, "
+                    "p -> p.w1 IS NOT NULL AND p.w2 IS NOT NULL)")
+
+
+def kept_words_sql(cleaned: str) -> str:
+    """``cleaned`` tokens with the empty ones and the stopwords of the
+    row's ``lang`` set to NULL; a NULL keeps its position, so it still
+    breaks the pairs on both sides of it."""
+    return (f"transform({cleaned}, w -> "
+            f"IF(w = '' OR {stopword_sql('w')}, NULL, w))")
+
+
+def cleaned(records: DataFrame, tokens: Column,
+            carry: tuple[str, ...] = ()) -> DataFrame:
+    """(*carry, lang, decade, occ, cw) of the ``records`` (lang, year,
+    occurrences, ...) with occurrences > 0 (reference Job1.java:138,181):
+    ``cw`` is ``tokens`` cleaned once, dropped tokens NULL. The streams
+    read it through a generator, which Catalyst cannot push a filter
+    through, so no Filter repeats the cleaning."""
+    return (records.filter(F.col("occurrences") > 0)
+            .select(*carry, "lang", decade(F.col("year")).alias("decade"),
+                    F.col("occurrences").cast("long").alias("occ"),
+                    F.transform(tokens, clean_token).alias("cw"))
+            .withColumn("cw", F.expr(kept_words_sql("cw"))))
+
+
+def cleaned_docs(spark: SparkSession, sf_dir: str,
+                 text_sql: str = "text",
+                 lang_sql: str = "lang",
+                 where_sql: str = "TRUE") -> DataFrame:
+    """(doc_id, lang, decade, occ, cw): one ``cleaned`` row per
+    document, the source of every flagship plan."""
+    return cleaned(_docs_with_tokens(spark, sf_dir, text_sql, lang_sql,
+                                     where_sql),
+                   F.col("ts"), carry=("doc_id",))
+
+
+def unigram_stream(docs: DataFrame) -> DataFrame:
+    """(lang, decade, word, occ): the kept words of ``cleaned`` rows.
+    The Filter tells Catalyst what the generator ensures, so the copies
+    feeding the joins (which infer it) and N plan alike and share one
+    exchange."""
+    return (docs.select("lang", "decade",
+                        F.explode(F.expr(UNIGRAMS_SQL)).alias("word"), "occ")
+            .filter(F.col("word").isNotNull()))
+
+
+def bigram_stream(docs: DataFrame,
+                  carry: tuple[str, ...] = ()) -> DataFrame:
+    """(*carry, lang, decade, w1, w2, occ): the adjacent kept pairs of
+    ``cleaned`` rows (``BIGRAM_PAIRS_SQL``)."""
+    return (docs.select(*carry, "lang", "decade",
+                        F.explode(F.expr(BIGRAM_PAIRS_SQL)).alias("p"),
+                        "occ")
+            .select(*carry, "lang", "decade", "p.w1", "p.w2", "occ"))
 
 
 # --- DuckDB-oracle CTE bodies (same derivation in ANSI SQL) -------------

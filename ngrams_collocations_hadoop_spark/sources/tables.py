@@ -4,7 +4,7 @@ the broadcast-style side tables (stopwords).
 Reference mapping: the reference's `MultipleInputs` SequenceFile scans
 (`CollocationExtraction3Jobs.java:68-71`) become plain `spark.read`
 calls; the distributed-cache stopword files (`Stopwords.java:23-43`)
-become a tiny DataFrame used with `F.broadcast` anti-joins.
+become `constants.STOPWORDS`, exposed here as a tiny DataFrame.
 """
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..constants import stopword_rows
+from ..constants import stopword_values_sql
 
 TABLE_NAMES = (
     "region", "nation", "customer", "supplier", "part",
@@ -457,7 +457,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 
 
 def stopwords_df(spark: SparkSession) -> DataFrame:
-    """Per-language stopword table — the broadcast side input.
+    """Per-language stopword table (lang, word).
 
     Built with a SQL VALUES literal, not ``createDataFrame(list)``: a
     Python-parallelized DataFrame drags a Python-worker deserialization
@@ -465,5 +465,4 @@ def stopwords_df(spark: SparkSession) -> DataFrame:
     relation stays entirely JVM-side (and Catalyst folds it to a
     LocalRelation).
     """
-    rows = ", ".join(f"('{l}', '{w}')" for l, w in stopword_rows())
-    return spark.sql(f"SELECT lang, word FROM (VALUES {rows}) AS t(lang, word)")
+    return spark.sql(f"SELECT lang, word FROM {stopword_values_sql()}")

@@ -22,25 +22,27 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .constants import (LLR_ROUND, OCC_EXPR_SQL, TOP_K, YEAR_EXPR_SQL,
-                        stopword_values_sql)
+from .constants import LLR_ROUND, OCC_EXPR_SQL, TOP_K, YEAR_EXPR_SQL
 from .functions.assoc import chi_square_sql, pmi_sql, t_score_sql
 from .functions.exact import ieee_round_sql
 from .functions.llr import llr_sql
 from .functions.text import clean_token_sql, decade_sql
+from .sources.ngram_source import (BIGRAM_PAIRS_SQL, UNIGRAMS_SQL,
+                                   kept_words_sql)
 from .sources.tables import register_views  # re-export  # noqa: F401
 
 
+# dialect="spark": Spark's native lower() already has the Java full-case
+# semantics the DuckDB variant must emulate. Spark SQL string literals
+# process backslash escapes (DuckDB's don't), so the body's backslashes
+# (all of them regex ones) are doubled.
+_CLEAN_BODY = clean_token_sql("t", dialect="spark").replace("\\", "\\\\")
+
+
 def register_sql_functions(spark: SparkSession) -> None:
-    # Spark SQL string literals process backslash escapes (DuckDB's
-    # don't), so the \p{L} regex classes need their backslashes doubled
-    # in this dialect. The only backslashes in the body are regex ones.
-    # dialect="spark": Spark's native lower() already has the Java
-    # full-case semantics the DuckDB variant must emulate.
-    clean_body = clean_token_sql("t", dialect="spark").replace("\\", "\\\\")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION clean_token(t STRING) "
-        f"RETURNS STRING RETURN {clean_body}")
+        f"RETURNS STRING RETURN {_CLEAN_BODY}")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION decade(y BIGINT) "
         f"RETURNS BIGINT RETURN {decade_sql('y')}")
@@ -52,39 +54,22 @@ def register_sql_functions(spark: SparkSession) -> None:
             f"RETURN {builder('c1', 'c2', 'c12', 'n')}")
 
 
+# A SQL function cannot take a lambda variable as its argument, so the
+# per-document transform inlines clean_token's body text.
 FLAGSHIP_SQL = f"""
-WITH toks AS (
-    SELECT doc_id, lang,
-           CAST({YEAR_EXPR_SQL} AS BIGINT) AS year,
+WITH docs AS (
+    SELECT lang, decade(CAST({YEAR_EXPR_SQL} AS BIGINT)) AS decade,
            CAST({OCC_EXPR_SQL} AS BIGINT) AS occ,
-           split(text, ' ') AS ts
+           {kept_words_sql(f"transform(split(text, ' '), t -> {_CLEAN_BODY})")}
+               AS cw
     FROM documents
+    WHERE {OCC_EXPR_SQL} > 0
 ),
-stop AS (SELECT * FROM {stopword_values_sql()}),
-uni0 AS (
-    SELECT lang, decade(year) AS decade, clean_token(token) AS word, occ
-    FROM toks LATERAL VIEW explode(ts) x AS token
-    WHERE occ > 0
-),
-uni AS (
-    SELECT * FROM uni0 u
-    WHERE word <> '' AND NOT EXISTS (
-        SELECT 1 FROM stop s WHERE s.lang = u.lang AND s.word = u.word)
-),
-big0 AS (
-    SELECT lang, decade(year) AS decade,
-           clean_token(ts[i]) AS w1, clean_token(ts[i + 1]) AS w2, occ
-    FROM toks LATERAL VIEW explode(sequence(0, size(ts) - 2)) x AS i
-    WHERE size(ts) >= 2 AND occ > 0
-),
-big AS (
-    SELECT * FROM big0 b
-    WHERE w1 <> '' AND w2 <> ''
-      AND NOT EXISTS (SELECT 1 FROM stop s
-                      WHERE s.lang = b.lang AND s.word = b.w1)
-      AND NOT EXISTS (SELECT 1 FROM stop s
-                      WHERE s.lang = b.lang AND s.word = b.w2)
-),
+uni AS (SELECT lang, decade, word, occ
+        FROM docs LATERAL VIEW explode({UNIGRAMS_SQL}) x AS word
+        WHERE word IS NOT NULL),
+big AS (SELECT lang, decade, p.w1, p.w2, occ
+        FROM docs LATERAL VIEW explode({BIGRAM_PAIRS_SQL}) x AS p),
 c1 AS (SELECT lang, decade, word, sum(occ) AS c1
        FROM uni GROUP BY lang, decade, word),
 c12 AS (SELECT lang, decade, w1, w2, sum(occ) AS c12

@@ -329,3 +329,68 @@ def test_topk_plan_memo_hit_restores_session_confs(spark):
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+# --- edge documents through the whole flagship family ---------------------
+
+EDGE_DOCS = [
+    # (doc_id, text, lang)
+    (1, "", "en"),                           # empty text: one '' token
+    (2, None, "en"),                         # NULL text: no tokens
+    (3, "solo", "en"),                       # one token: no pairs
+    (4, "the a of and to is", "en"),         # all stopwords
+    (5, "-- apple _x pie ... _ apple", "en"),  # tokens cleaning to ''
+    (6, "apple_NOUN pie_NOUN tart_ADJ", "en"),  # POS suffixes
+    (7, "red order form red order", "es"),   # 'order': stopword in es ...
+    (8, "red order form red order", "en"),   # ... but not in en
+    (-3, "apple pie apple pie", "en"),       # occ = 1 + (-3 % 5) <= 0
+    (-5, "apple pie tart", "en"),            # occ 1, year 1995
+    (9, "apple  pie apple pie ", "en"),      # double and trailing blank
+    (10, "Apple PIE apple pie tart", "en"),  # case folding
+    (11, "apple pie tart apple pie", "en"),
+    (12, "apple pie is apple tart", "en"),   # stopword between pairs
+    (13, "red form red form order", "es"),
+    (14, "Éclair café éclair café", "fr"),
+    (15, "red form red order", None),        # NULL lang
+]
+
+EDGE_QUERIES = ["colloc_topk", "colloc_scored", "colloc_topk_quirk",
+                "colloc_hebrew_topk", "colloc_unigram_counts",
+                "colloc_bigram_counts", "colloc_totals", "colloc_topk_sql"]
+
+
+def test_flagship_family_on_edge_documents(spark, tmp_path):
+    """Hand-made documents through every flagship and count query,
+    each equal to its DuckDB oracle as strict canonical text (floats
+    rounded to 6 places, then stringified). Covers the edges of the
+    per-document cleaned array: an empty or NULL text, one token (no
+    pairs; an unsliced
+    ``cw[i + 1]`` raises INVALID_ARRAY_INDEX on the last token under
+    ANSI mode), only stopwords, tokens that clean to '', a stopword of
+    one language that is a word in another, and a negative doc_id
+    whose occurrences are <= 0."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from .conftest import SF_SMALL
+    from .test_registry_fuzz import run_fuzz
+
+    d = str(tmp_path)
+    for f in os.listdir(SF_SMALL):
+        shutil.copyfile(os.path.join(SF_SMALL, f), os.path.join(d, f))
+    ids, texts, langs = zip(*EDGE_DOCS)
+    pq.write_table(pa.table({
+        "doc_id": pa.array(ids, pa.int64()),
+        "text": pa.array(texts, pa.string()),
+        "lang": pa.array(langs, pa.string()),
+        "source": pa.array(["edge"] * len(ids), pa.string()),
+        "n_chars": pa.array([len(t or "") for t in texts], pa.int64()),
+    }), f"{d}/documents.parquet")
+    co._COLLOC_MEMO.clear()
+    assert not run_fuzz(spark, d, EDGE_QUERIES)
+    top = co.q_topk(spark, d).collect()
+    assert {r.bigram for r in top} >= {"apple pie", "red order"}
+    assert not [r for r in top if r.lang == "es" and "order" in r.bigram]

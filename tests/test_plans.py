@@ -4,6 +4,8 @@ manual-optimization → Catalyst mappings must actually appear in plans.
 
 from __future__ import annotations
 
+import re
+
 from ngrams_collocations_hadoop_spark.operators import collocations as co
 from ngrams_collocations_hadoop_spark.operators import relational as rel
 from ngrams_collocations_hadoop_spark.plans.checks import (
@@ -11,7 +13,7 @@ from ngrams_collocations_hadoop_spark.plans.checks import (
 )
 from ngrams_collocations_hadoop_spark.registry import QUERIES
 
-from .conftest import SF_SMALL
+from .conftest import SF_ORACLE, SF_SMALL
 
 
 def test_topk_uses_window_group_limit(spark):
@@ -76,6 +78,66 @@ def test_scored_reuses_unigram_subtree(spark):
     df = co.q_scored(spark, SF_SMALL)
     plan = final_adaptive_plan(df)
     assert "ReusedExchange" in plan
+
+
+_FLAGSHIP = ("colloc_scored", "colloc_topk", "colloc_topk_quirk",
+             "colloc_hebrew_topk")
+
+
+def _flagship_plans(spark, sf_dir=SF_SMALL):
+    """Initial plans of the four flagship queries (fresh, not memo
+    handles an earlier test executed)."""
+    co._COLLOC_MEMO.clear()
+    return {name: physical_plan(QUERIES[name](spark, sf_dir))
+            for name in _FLAGSHIP}
+
+
+def test_flagship_cleans_once_without_stopword_join(spark):
+    """One pass over each document's token array: the stopword drop is
+    a predicate, not an anti-join, and no Filter evaluates the clean
+    expression (Catalyst used to push the empty-token check below the
+    cleaning Project, so every token was cleaned in both)."""
+    for name, plan in _flagship_plans(spark).items():
+        assert "LeftAnti" not in plan, name
+        filters = [ln for ln in plan.splitlines()
+                   if ln.lstrip(" :+-").startswith("Filter ")]
+        assert not [f for f in filters
+                    if "regexp_replace" in f or "RLIKE" in f], (name, filters)
+
+
+_C12_EXCHANGE = re.compile(
+    r"Exchange hashpartitioning\((?:lang#\d+, )?decade#\d+L, w1#\d+, "
+    r"(\d+)\), "
+    r"REPARTITION_BY_NUM")
+
+
+def test_c12_runs_on_the_job1_layout(spark):
+    """The exchange under the c12 aggregate is an explicit-count hash
+    repartition on (lang, decade, w1) at the cluster's parallelism —
+    reference Job1's key order — and the aggregate adds none of its
+    own. (The Hebrew plan's lang is a constant and is left out.)"""
+    dp = spark.sparkContext.defaultParallelism
+    for name, plan in _flagship_plans(spark).items():
+        widths = _C12_EXCHANGE.findall(plan)
+        assert widths and set(widths) == {str(dp)}, (name, widths)
+        assert not re.search(r"Exchange hashpartitioning\([^)]*w2#", plan), name
+
+
+def test_c12_stage_runs_on_every_core(spark):
+    """AQE never coalesces an explicit-count repartition: after
+    colloc_topk runs at sf0.01, the stage that reads the c12 exchange
+    reads all of its defaultParallelism partitions (one task each).
+    A coalesced read shows as an AQEShuffleRead over the stage."""
+    co._COLLOC_MEMO.clear()
+    plan = final_adaptive_plan(co.q_topk(spark, SF_ORACLE))
+    plan = plan.split("== Initial Plan ==")[0].splitlines()
+    dp = spark.sparkContext.defaultParallelism
+    at = [i for i, ln in enumerate(plan) if _C12_EXCHANGE.search(ln)]
+    assert at, "\n".join(plan)
+    for i in at:
+        assert _C12_EXCHANGE.search(plan[i]).group(1) == str(dp)
+        assert "ShuffleQueryStage" in plan[i - 1], plan[i - 1]
+        assert "AQEShuffleRead" not in plan[i - 2], plan[i - 2]
 
 
 # Queries allowed to contain Python evaluation nodes: the multimodal
