@@ -7,12 +7,13 @@ Reference mapping (all file:line cites are into /root/reference):
   stage                      reference                       here
   -------------------------  ------------------------------  -----------------------------
   token cleaning             NGramUtils.java:29-39           functions.text.clean_token, once
-                                                             per token (ngram_source.cleaned)
+                                                             per stream (ngram_source.cleaned)
   occ>0 / empty-token drops  Job1.java:138,142,181,186       per-doc filter / NULL token
   stopword drop              Job1.java:144,189               NULL token (stopword_sql), no join
   decade bucketing           NGramUtils.java:8               functions.text.decade
   c1 agg (A2)                Job1.java:279-281               groupBy().sum()
-  c12 agg (A3, *intended*)   Job1.java:282-292 (quirky)      exact groupBy().sum(), job1_layout
+  c12 agg (A3, *intended*)   Job1.java:282-292 (quirky)      exact groupBy().sum(); job1_layout
+                                                             on small inputs
   N agg (A4)                 Job1.java:265-267,306-311       exact groupBy().sum()
   join on w1 (J1)            Job1.java:62-94,237-314 (~120   one .join() — Catalyst picks
                              LoC hand-rolled merge join)     SMJ/SHJ, AQE may rewrite
@@ -30,13 +31,14 @@ across map tasks, exact N at any parallelism, deterministic Top-K
 tiebreak (llr desc, w1, w2).
 
 Scale notes (100 TB): the raw record streams never materialize: each
-document's token array is cleaned once, and the unigram and bigram
-streams are generators over it, so no Filter re-cleans and no join
-drops stopwords. c1 partial-aggregates map-side before its shuffle
-(the reference's combiner, via HashAggregateExec). c12 runs on the
-Job1 layout (``job1_layout``): it loses its map-side combine, but its
-aggregate, the join probes, LLR and the partial Top-K run on every
-core. The joins meet the unigram counts on (lang, decade, word) —
+document's token array is cleaned once per stream (twice per token,
+down from about six), and the unigram and bigram streams are
+generators over it, so no Filter re-cleans and no join drops
+stopwords. c1 and c12 partial-aggregate map-side before their
+shuffles (the reference's combiner). On an input under parallelism
+× AQE's minimum partition size, c12 instead runs on the Job1 layout
+(``job1_layout``): no combine, but on every core, not in one task.
+The joins meet the unigram counts on (lang, decade, word) —
 high cardinality, well distributed. N (≈ langs × decades rows) is
 broadcast. The unigram-count subtree feeds three consumers (c1, c2,
 N); AQE reads its shuffle once (c2 and N run as ReusedExchange).
@@ -75,8 +77,8 @@ from ..sources.tables import _ensure_session_confs
 
 # One row per record (the reference's input shape), for tests and the
 # benchmark's layer probe: each record is ``cleaned`` as a one- or
-# two-token document. ``stop`` (``stopwords_df``) is not joined: the
-# drop uses the same lists through ``constants.stopword_sql``.
+# two-token document, stopwords from ``constants.stopword_sql``.
+# ``stop`` is IGNORED; it stays only for the benchmark probe's call.
 
 def clean_unigrams(uni_raw: DataFrame, stop: DataFrame) -> DataFrame:
     """(lang, token, year, occurrences) -> (lang, decade, word, occ):
@@ -103,17 +105,29 @@ def unigram_counts(uni: DataFrame) -> DataFrame:
             .agg(F.sum("occ").alias("c1")))
 
 
-def job1_layout(big: DataFrame,
+def job1_layout(big: DataFrame, sf_dir: str,
                 keys: tuple[str, ...] = ("lang", "decade", "w1")
                 ) -> DataFrame:
-    """The bigram stream hash-partitioned on (lang, decade, w1) at the
-    cluster's parallelism, reference Job1's ``Job1Key`` order (SURVEY.md
-    §1.1). The c12 aggregate needs no exchange of its own (so it loses
-    its map-side combine), and AQE never coalesces an explicit-count
-    repartition: c12, the join probes, LLR and the partial Top-K run on
-    every core instead of in one task."""
-    return big.repartition(big.sparkSession.sparkContext.defaultParallelism,
-                           *keys)
+    """``big`` hash-partitioned on (lang, decade, w1) at the cluster's
+    parallelism (reference Job1's key order, SURVEY.md §1.1) when the
+    documents input is under parallelism × AQE's minimum partition
+    size; otherwise unchanged. Under c12 the repartition replaces the
+    aggregate's exchange, so c12 loses its map-side combine, and AQE
+    never coalesces it, so c12, the join probes, LLR and the partial
+    Top-K run on every core. That pays only while AQE would coalesce
+    c12's own exchange below one task per core: c12's shuffle measured
+    2.8x (Zipf corpus) to 6.3x (sf0.1) the input's bytes, so an input
+    at the bound keeps the combine and gets every core anyway, and
+    below it the combine cut under 1% of c12's bytes."""
+    spark = big.sparkSession
+    width = spark.sparkContext.defaultParallelism
+    state = corpus_state(sf_dir, spark)
+    min_part = spark.sparkContext._jvm.org.apache.spark.network.util \
+        .JavaUtils.byteStringAsBytes(spark.conf.get(
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize"))
+    if state is None or state[1] >= width * min_part:
+        return big
+    return big.repartition(width, *keys)
 
 
 def bigram_counts(big: DataFrame) -> DataFrame:
@@ -283,7 +297,7 @@ def _memoized(key: tuple, spark: SparkSession, sf_dir: str,
                              lambda: (build(), []))[0]
 
 
-def _scored(docs: DataFrame,
+def _scored(docs: DataFrame, sf_dir: str,
             layout: tuple[str, ...] = ("lang", "decade", "w1")) -> DataFrame:
     """``cleaned_docs`` -> scored bigrams. N = Σ c1 — rolls up from the
     counts instead of re-scanning the unigram stream (algebraically
@@ -291,13 +305,14 @@ def _scored(docs: DataFrame,
     c1_df = unigram_counts(unigram_stream(docs))
     totals_df = (c1_df.groupBy("lang", "decade")
                  .agg(F.sum("c1").alias("n_total")))
-    c12_df = bigram_counts(job1_layout(bigram_stream(docs), layout))
+    c12_df = bigram_counts(job1_layout(bigram_stream(docs), sf_dir,
+                                       layout))
     return score_collocations(c12_df, c1_df, totals_df)
 
 
 def q_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memoized(("scored", sf_dir, None), spark, sf_dir,
-                     lambda: _scored(cleaned_docs(spark, sf_dir)))
+                     lambda: _scored(cleaned_docs(spark, sf_dir), sf_dir))
 
 
 def q_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
@@ -318,7 +333,7 @@ def q_topk_quirk(spark: SparkSession, sf_dir: str,
     def build() -> DataFrame:
         docs = cleaned_docs(spark, sf_dir)
         c1_df = unigram_counts(unigram_stream(docs))
-        big = job1_layout(bigram_stream(docs, carry=("doc_id",)))
+        big = job1_layout(bigram_stream(docs, carry=("doc_id",)), sf_dir)
         scored = score_collocations(bigram_counts_quirk_det(big), c1_df,
                                     totals_quirk_det(c1_df))
         return top_collocations(scored, k)
@@ -340,6 +355,6 @@ def q_hebrew_topk(spark: SparkSession, sf_dir: str,
         # lang is the constant 'he' here, which Catalyst folds out of
         # the partitioning but not out of the aggregate's key, so a
         # lang-keyed layout would not satisfy the aggregate
-        return top_collocations(_scored(docs, ("decade", "w1")), k)
+        return top_collocations(_scored(docs, sf_dir, ("decade", "w1")), k)
 
     return _memoized(("hebrew_topk", sf_dir, k), spark, sf_dir, build)

@@ -13,8 +13,10 @@ Here the same record families are derived from `documents`:
 with ``year = 2000 + doc_id % 30`` and ``occurrences = 1 + doc_id % 5``.
 
 The flagship pipelines read ``cleaned_docs`` instead: each document's
-token array cleaned once, dropped tokens NULL, no stopword join; the
-unigram and bigram streams are generators over that array.
+token array cleaned in one ``transform``, dropped tokens NULL, no
+stopword join; the unigram and bigram streams are generators over that
+array. Each stream evaluates the projection on its own branch, so a
+token is cleaned twice per query (once per stream), not once.
 
 Everything is a column expression (split / transform / explode) — token
 pairing happens inside codegen with zero shuffles; at 100 TB this stage
@@ -120,7 +122,7 @@ def cleaned(records: DataFrame, tokens: Column,
             carry: tuple[str, ...] = ()) -> DataFrame:
     """(*carry, lang, decade, occ, cw) of the ``records`` (lang, year,
     occurrences, ...) with occurrences > 0 (reference Job1.java:138,181):
-    ``cw`` is ``tokens`` cleaned once, dropped tokens NULL. The streams
+    ``cw`` is ``tokens`` cleaned in one pass, dropped tokens NULL. The streams
     read it through a generator, which Catalyst cannot push a filter
     through, so no Filter repeats the cleaning."""
     return (records.filter(F.col("occurrences") > 0)

@@ -92,7 +92,7 @@ def _flagship_plans(spark, sf_dir=SF_SMALL):
             for name in _FLAGSHIP}
 
 
-def test_flagship_cleans_once_without_stopword_join(spark):
+def test_flagship_has_no_clean_filter_or_stopword_join(spark):
     """One pass over each document's token array: the stopword drop is
     a predicate, not an anti-join, and no Filter evaluates the clean
     expression (Catalyst used to push the empty-token check below the
@@ -112,10 +112,12 @@ _C12_EXCHANGE = re.compile(
 
 
 def test_c12_runs_on_the_job1_layout(spark):
-    """The exchange under the c12 aggregate is an explicit-count hash
-    repartition on (lang, decade, w1) at the cluster's parallelism —
-    reference Job1's key order — and the aggregate adds none of its
-    own. (The Hebrew plan's lang is a constant and is left out.)"""
+    """On a small input (sf0.001, far below parallelism × AQE's minimum
+    partition size) the exchange under the c12 aggregate is an
+    explicit-count hash repartition on (lang, decade, w1) at the
+    cluster's parallelism — reference Job1's key order — and the
+    aggregate adds none of its own. (The Hebrew plan's lang is a
+    constant and is left out.)"""
     dp = spark.sparkContext.defaultParallelism
     for name, plan in _flagship_plans(spark).items():
         widths = _C12_EXCHANGE.findall(plan)
@@ -138,6 +140,27 @@ def test_c12_stage_runs_on_every_core(spark):
         assert _C12_EXCHANGE.search(plan[i]).group(1) == str(dp)
         assert "ShuffleQueryStage" in plan[i - 1], plan[i - 1]
         assert "AQEShuffleRead" not in plan[i - 2], plan[i - 2]
+
+
+def test_c12_keeps_its_combine_on_large_inputs(spark, monkeypatch):
+    """An input at or above parallelism × AQE's minimum partition size
+    gets no Job1 layout: c12's own exchange (on w2 too) sits directly
+    over its map-side partial aggregate, the reference's combiner.
+    The input's size is stubbed; everything else is the real plan."""
+    monkeypatch.setattr(co, "corpus_state", lambda *a, **kw: (0, 1 << 50))
+    try:
+        plans = _flagship_plans(spark)
+    finally:
+        co._COLLOC_MEMO.clear()
+    for name, plan in plans.items():
+        assert not _C12_EXCHANGE.search(plan), name
+        lines = plan.splitlines()
+        at = [i for i, ln in enumerate(lines)
+              if re.search(r"Exchange hashpartitioning\([^)]*w2#", ln)]
+        assert at, name
+        for i in at:
+            assert "ENSURE_REQUIREMENTS" in lines[i], (name, lines[i])
+            assert "partial_sum(occ" in lines[i + 1], (name, lines[i + 1])
 
 
 # Queries allowed to contain Python evaluation nodes: the multimodal
