@@ -14,15 +14,23 @@ state-keyed table names.
   state the hit was keyed on, and they stay on local disk while the
   entry lives. Only memoize pure plan construction: a hit skips the
   builder, so it must not materialize anything or read the catalog.
-  A builder returns ``(df, pins)``: the persisted handles the plan
-  reads, as ``(owner, handle)`` pairs. A hit re-pins each through its
-  owner, exactly as a fresh build would have.
+  A builder returns ``(df, pins)``: ``df`` is the plan (a DataFrame,
+  or a tuple of them for a plan served in parts), and ``pins`` the
+  persisted handles it reads, as ``(owner, handle)`` pairs. A hit
+  re-pins each through its owner, exactly as a fresh build would
+  have.
 - Persisted handles (``pin``), keyed on plan semantics
   (``semanticHash``, confirmed by ``sameSemantics``). Spark's
   CacheManager keys on the analyzed plan, so re-persisting an equal
   plan only leaves an untracked handle that nothing unpersists; the
   cache holds ONE handle per distinct plan, bounded, and unpersists
   what it drops.
+
+Users: the plan memos ``_COLLOC_MEMO``, ``_PQ_QUERY_MEMO``,
+``_PQ_CB_MEMO`` and ``dedup._MATCH_BATCH_MEMO`` (the LSH match's
+batch side); the pinned handles ``_TOK_LIVE``, ``_INC_CC_LIVE``,
+``_PQ_CENT_LIVE``, ``_PQ_TRAIN_LIVE`` and ``tables._PK_VERDICT_LIVE``
+(one-row PK verdicts: one audit per corpus state per session).
 
 One guard decides every hit: the same session object, the same
 ``applicationId`` (a stopped-and-recreated context must never get

@@ -585,6 +585,52 @@ def test_persisted_lsh_match_only_plan(spark):
     D.build_lsh_index(spark, SF_SMALL)
 
 
+def _executed_nodes(df) -> list:
+    """The physical nodes an executed query ran: AQE's final plan,
+    descending into query stages and reused exchanges but NOT into the
+    stored plan of a cached relation (an ``InMemoryTableScan`` is a
+    leaf — its stored plan runs only when the cache is built)."""
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+            continue
+        out.append(node)
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_warm_lsh_match_reads_cached_pk_verdict(spark):
+    """The doc_id PK gate audits once per corpus state: the second
+    match_lsh_index of an unchanged corpus reads the one-row verdict
+    through an InMemoryTableScan, and no doc_id-keyed aggregate
+    exchange runs."""
+    from ngrams_collocations_hadoop_spark.operators import dedup as D
+
+    table = D.lsh_index_table(SF_SMALL, spark)
+    if not spark.catalog.tableExists(table):
+        D.build_lsh_index(spark, SF_SMALL)
+    D.match_lsh_index(spark, SF_SMALL, table).collect()
+    df = D.match_lsh_index(spark, SF_SMALL, table)
+    df.collect()
+    nodes = _executed_nodes(df)
+    names = [n.getClass().getSimpleName() for n in nodes]
+    verdict_scans = [n for n, c in zip(nodes, names)
+                     if c == "InMemoryTableScanExec"
+                     and "_pk_gate" in n.output().toString()]
+    assert verdict_scans, names
+    id_exchanges = [n.toString() for n, c in zip(nodes, names)
+                    if c == "ShuffleExchangeExec"
+                    and "doc_id#" in n.outputPartitioning().toString()]
+    assert not id_exchanges, id_exchanges
+
+
 def test_bench_queries_shuffle_budget(spark):
     """Shuffle-budget regression guard for the headline (bench)
     queries: the number of DISTINCT shuffle exchanges in the initial
