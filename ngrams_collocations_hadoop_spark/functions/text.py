@@ -71,18 +71,27 @@ def _java_lower_duckdb(expr: str) -> str:
 
 def clean_token_sql(expr: str, dialect: str = "duckdb") -> str:
     """Same cleaning as SQL over an arbitrary string expression.
-    position(IN)/split_part/regexp_replace behave identically in
-    DuckDB (the oracle) and Spark SQL (the SQL-API functions in
-    sql_api.py); only the final lowercase differs — DuckDB needs the
-    Java-semantics emulation (``_java_lower_duckdb``), Spark's native
-    lower() is already the reference behavior. The Spark dialect also
-    takes ``clean_token``'s all-[a-z0-9] fast path; the oracle keeps
-    the plain chain."""
+
+    DuckDB (the oracle) strips the POS suffix with position(IN)/
+    split_part and needs the Java-semantics lowercase emulation
+    (``_java_lower_duckdb``). The Spark dialect is ``clean_token``
+    written out: the same Catalyst expression, so the SQL function,
+    the flagship text and the Column helper clean alike. It uses
+    instr/substring_index (split_part allocates an array per token),
+    native lower() (already the reference behavior) and the
+    all-[a-z0-9] fast path, and doubles the regex backslashes, which
+    a Spark SQL string literal would otherwise consume."""
     t = f"trim({expr})"
-    t = (f"(CASE WHEN position('_' IN {t}) > 1 "
-         f"THEN split_part({t}, '_', 1) ELSE {t} END)")
-    t = f"regexp_replace({t}, '{_LEAD}', '')"
-    t = f"regexp_replace({t}, '{_TRAIL}', '')"
+    if dialect == "duckdb":
+        t = (f"(CASE WHEN position('_' IN {t}) > 1 "
+             f"THEN split_part({t}, '_', 1) ELSE {t} END)")
+        lead, trail = _LEAD, _TRAIL
+    else:
+        t = (f"(CASE WHEN instr({t}, '_') > 1 "
+             f"THEN substring_index({t}, '_', 1) ELSE {t} END)")
+        lead, trail = (r.replace("\\", "\\\\") for r in (_LEAD, _TRAIL))
+    t = f"regexp_replace({t}, '{lead}', '')"
+    t = f"regexp_replace({t}, '{trail}', '')"
     t = f"trim({t})"
     if dialect == "duckdb":
         return f"coalesce({_java_lower_duckdb(t)}, '')"

@@ -35,8 +35,8 @@ def ngram_ctes(uni_sql: str = UNIGRAM_RECORDS_SQL,
     the transliterated corpus; everything downstream is identical).
     ``quirk=True`` swaps c12/totals for the deterministic quirk
     emulation (fragmented per-doc-block c12, last-md5-bucket-wins N —
-    ``operators.collocations.bigram_counts_quirk_det`` /
-    ``totals_quirk_det``); big_sql must then carry doc_id."""
+    ``operators.collocations.c12_quirk_sql`` / ``n_quirk_sql``);
+    big_sql must then carry doc_id."""
     uni_word = clean_token_sql("token")
     w1 = clean_token_sql("token1")
     w2 = clean_token_sql("token2")

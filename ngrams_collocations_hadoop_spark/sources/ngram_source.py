@@ -12,31 +12,31 @@ Here the same record families are derived from `documents`:
 
 with ``year = 2000 + doc_id % 30`` and ``occurrences = 1 + doc_id % 5``.
 
-The flagship pipelines read ``cleaned_docs`` instead: each document's
-token array cleaned in one ``transform``, dropped tokens NULL, no
-stopword join; the unigram and bigram streams are generators over that
-array. Each stream evaluates the projection on its own branch, so a
-token is cleaned twice per query (once per stream), not once.
+``doc_tokens_sql`` is that derivation as Spark SQL: one row per
+document with its token array. It is the source of every flagship plan
+(``operators.collocations.flagship_sql``, which cleans each array once
+and generates both streams from it) and of the record frames here, so
+the records never materialize in a flagship plan.
 
-Everything is a column expression (split / transform / explode) — token
+Everything is an expression (split / transform / explode) — token
 pairing happens inside codegen with zero shuffles; at 100 TB this stage
 is a pure map over the document scan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import (OCC_EXPR_SQL, TRANSLIT_HEBREW, TRANSLIT_LATIN,
-                         YEAR_EXPR_SQL, stopword_sql)
-from ..functions.text import _java_lower_duckdb, clean_token, decade
+                         YEAR_EXPR_SQL)
+from ..functions.text import _java_lower_duckdb
 from ..sources.tables import fan_out as _fan_out, load_table
 
 # The Hebrew corpus derivation (reference second corpus,
 # ``Stopwords.java`` heb block): lower() then codepoint translate().
-# The expression is shared between the Spark operators (F.expr) and
-# the DuckDB oracle EXCEPT for the lower() itself: DuckDB's simple
+# The expression is shared between the Spark plans and the DuckDB
+# oracle EXCEPT for the lower() itself: DuckDB's simple
 # case map diverges from Java/Spark on U+0130 and word-final Σ, so
 # the oracle variant uses the Java-semantics emulation
 # (functions/text.py::_java_lower_duckdb).
@@ -49,17 +49,20 @@ def hebrew_text_sql(dialect: str = "spark") -> str:
 HEBREW_TEXT_SQL = hebrew_text_sql("spark")
 
 
-def _docs_with_tokens(spark: SparkSession, sf_dir: str,
-                      text_sql: str = "text",
-                      lang_sql: str = "lang",
-                      where_sql: str = "TRUE") -> DataFrame:
-    docs = _fan_out(load_table(spark, sf_dir, "documents"))
-    return docs.filter(F.expr(where_sql)).select(
-        "doc_id", F.expr(lang_sql).alias("lang"),
-        F.expr(YEAR_EXPR_SQL).cast("long").alias("year"),
-        F.expr(OCC_EXPR_SQL).cast("long").alias("occurrences"),
-        F.split(F.expr(text_sql), " ").alias("ts"),
-    )
+def doc_tokens_sql(src: str, text_sql: str = "text",
+                   lang_sql: str = "lang", where_sql: str = "TRUE") -> str:
+    """(doc_id, lang, year, occurrences, ts) of the documents ``src``:
+    each document's record fields, with its tokens as one array."""
+    return f"""SELECT doc_id, {lang_sql} AS lang,
+               CAST({YEAR_EXPR_SQL} AS BIGINT) AS year,
+               CAST({OCC_EXPR_SQL} AS BIGINT) AS occurrences,
+               split({text_sql}, ' ') AS ts
+        FROM {src} WHERE {where_sql}"""
+
+
+def _docs_with_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.sql(doc_tokens_sql("{docs}"),
+                     docs=_fan_out(load_table(spark, sf_dir, "documents")))
 
 
 def unigram_records(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -99,68 +102,6 @@ def pairs_sql(arr: str, a: str, b: str) -> str:
     last token)."""
     return (f"transform(slice({arr}, 1, greatest(size({arr}) - 1, 0)), "
             f"(x, i) -> struct(x AS {a}, {arr}[i + 1] AS {b}))")
-
-
-# --- the flagship's source: one cleaned token array per document -------
-
-# The kept words and the adjacent kept pairs of a cleaned array ``cw``
-# (reference Job1.java:181-189: a bigram is dropped when either side is)
-UNIGRAMS_SQL = "filter(cw, w -> w IS NOT NULL)"
-BIGRAM_PAIRS_SQL = (f"filter({pairs_sql('cw', 'w1', 'w2')}, "
-                    "p -> p.w1 IS NOT NULL AND p.w2 IS NOT NULL)")
-
-
-def kept_words_sql(cleaned: str) -> str:
-    """``cleaned`` tokens with the empty ones and the stopwords of the
-    row's ``lang`` set to NULL; a NULL keeps its position, so it still
-    breaks the pairs on both sides of it."""
-    return (f"transform({cleaned}, w -> "
-            f"IF(w = '' OR {stopword_sql('w')}, NULL, w))")
-
-
-def cleaned(records: DataFrame, tokens: Column,
-            carry: tuple[str, ...] = ()) -> DataFrame:
-    """(*carry, lang, decade, occ, cw) of the ``records`` (lang, year,
-    occurrences, ...) with occurrences > 0 (reference Job1.java:138,181):
-    ``cw`` is ``tokens`` cleaned in one pass, dropped tokens NULL. The streams
-    read it through a generator, which Catalyst cannot push a filter
-    through, so no Filter repeats the cleaning."""
-    return (records.filter(F.col("occurrences") > 0)
-            .select(*carry, "lang", decade(F.col("year")).alias("decade"),
-                    F.col("occurrences").cast("long").alias("occ"),
-                    F.transform(tokens, clean_token).alias("cw"))
-            .withColumn("cw", F.expr(kept_words_sql("cw"))))
-
-
-def cleaned_docs(spark: SparkSession, sf_dir: str,
-                 text_sql: str = "text",
-                 lang_sql: str = "lang",
-                 where_sql: str = "TRUE") -> DataFrame:
-    """(doc_id, lang, decade, occ, cw): one ``cleaned`` row per
-    document, the source of every flagship plan."""
-    return cleaned(_docs_with_tokens(spark, sf_dir, text_sql, lang_sql,
-                                     where_sql),
-                   F.col("ts"), carry=("doc_id",))
-
-
-def unigram_stream(docs: DataFrame) -> DataFrame:
-    """(lang, decade, word, occ): the kept words of ``cleaned`` rows.
-    The Filter tells Catalyst what the generator ensures, so the copies
-    feeding the joins (which infer it) and N plan alike and share one
-    exchange."""
-    return (docs.select("lang", "decade",
-                        F.explode(F.expr(UNIGRAMS_SQL)).alias("word"), "occ")
-            .filter(F.col("word").isNotNull()))
-
-
-def bigram_stream(docs: DataFrame,
-                  carry: tuple[str, ...] = ()) -> DataFrame:
-    """(*carry, lang, decade, w1, w2, occ): the adjacent kept pairs of
-    ``cleaned`` rows (``BIGRAM_PAIRS_SQL``)."""
-    return (docs.select(*carry, "lang", "decade",
-                        F.explode(F.expr(BIGRAM_PAIRS_SQL)).alias("p"),
-                        "occ")
-            .select(*carry, "lang", "decade", "p.w1", "p.w2", "occ"))
 
 
 # --- DuckDB-oracle CTE bodies (same derivation in ANSI SQL) -------------

@@ -48,14 +48,19 @@ def fan_out(df: DataFrame) -> DataFrame:
     so "many files" is a sufficient no-op condition; a non-file-backed
     DataFrame (no inputFiles) conservatively fans out.
     """
+    width = fan_out_width(df)
+    return df.repartition(width) if width else df
+
+
+def fan_out_width(df: DataFrame) -> int:
+    """The round-robin width ``fan_out`` gives ``df`` (the cluster's
+    parallelism), or 0 where it leaves ``df`` as it is."""
     target = df.sparkSession.sparkContext.defaultParallelism
     try:
         n_inputs = len(df.inputFiles())
     except Exception:
         n_inputs = 0
-    if n_inputs < target:
-        return df.repartition(target)
-    return df
+    return target if n_inputs < target else 0
 
 
 def _footer_ts_unit(path: str, col: str) -> str:

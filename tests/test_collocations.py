@@ -215,7 +215,7 @@ def test_quirk_det_aggregation_invariants(spark):
     stop = stopwords_df(spark)
     big = co.clean_bigrams(bigram_records(spark, SF_SMALL, keep_doc=True),
                            stop, carry=("doc_id",))
-    frag = co.bigram_counts_quirk_det(big)
+    frag = spark.sql(co.c12_quirk_sql("{big}"), big=big)
     refold = {tuple(r[:4]): r[4] for r in
               (frag.groupBy("lang", "decade", "w1", "w2")
                .agg(F.sum("c12").alias("c12")).collect())}
@@ -227,7 +227,7 @@ def test_quirk_det_aggregation_invariants(spark):
     uni = co.clean_unigrams(unigram_records(spark, SF_SMALL), stop)
     c1 = co.unigram_counts(uni)
     qn = {(r.lang, r.decade): r.n_total
-          for r in co.totals_quirk_det(c1).collect()}
+          for r in spark.sql(co.n_quirk_sql("{c1}"), c1=c1).collect()}
     en = {(r.lang, r.decade): r.n_total for r in co.totals(uni).collect()}
     assert set(qn) == set(en)
     assert all(0 < qn[k] <= en[k] for k in qn)

@@ -1,6 +1,6 @@
 """Pure-SQL surface: SQL scalar functions (expression macros) match the
-Python mirrors, and the one-statement SQL flagship is byte-identical to
-the DataFrame build."""
+Python mirrors, and the one-statement SQL flagship is the text every
+flagship plan is built from, so it has colloc_topk's plan and rows."""
 
 from __future__ import annotations
 
@@ -8,6 +8,7 @@ import pytest
 
 from ngrams_collocations_hadoop_spark.functions.llr import llr_py
 from ngrams_collocations_hadoop_spark.functions.text import clean_token_ref
+from ngrams_collocations_hadoop_spark.operators import collocations as co
 from ngrams_collocations_hadoop_spark.operators.collocations import q_topk
 from ngrams_collocations_hadoop_spark.sql_api import (
     register_sql_functions, sql_flagship,
@@ -44,3 +45,21 @@ def test_sql_flagship_equals_dataframe_flagship(spark):
     a = sorted(map(tuple, sql_flagship(spark, SF_SMALL).collect()))
     b = sorted(map(tuple, q_topk(spark, SF_SMALL).collect()))
     assert a == b
+
+
+def test_sql_flagship_has_the_topk_plan(spark):
+    """Same optimized plan as q_topk, c12 layout and fan-out included."""
+    co._COLLOC_MEMO.clear()
+    a = q_topk(spark, SF_SMALL)._jdf.queryExecution().optimizedPlan()
+    b = sql_flagship(spark, SF_SMALL)._jdf.queryExecution().optimizedPlan()
+    assert a.sameResult(b)
+
+
+def test_sql_flagship_registers_only_the_documents_view(spark):
+    """sql_flagship creates no SQL function and no view beyond the one
+    it reads."""
+    s = spark.newSession()
+    sql_flagship(s, SF_SMALL).collect()
+    assert not s.catalog.functionExists("llr")
+    assert [t.name for t in s.catalog.listTables()
+            if t.isTemporary] == ["documents"]

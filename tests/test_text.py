@@ -102,6 +102,20 @@ def test_clean_token_duckdb_oracle_matches_spark_and_ref(spark):
             f"case {c!r}: duck={duck[c]!r} spark={got[c]!r} ref={ref!r}")
 
 
+def test_clean_token_spark_sql_is_the_column_expression(spark):
+    """The Spark dialect of clean_token_sql (the registered SQL
+    function, the flagship text) and the clean_token Column are one
+    Catalyst expression, so no surface cleans with a different plan."""
+    from ngrams_collocations_hadoop_spark.functions.text import (
+        clean_token_sql,
+    )
+    df = spark.createDataFrame([(c,) for c in CASES], ["t"])
+    sql = df.selectExpr(clean_token_sql("t", "spark"))
+    assert sql.sameSemantics(df.select(clean_token(F.col("t"))))
+    assert [r[0] for r in sql.collect()] == [clean_token_ref(c)
+                                             for c in CASES]
+
+
 def test_decade(spark):
     df = spark.createDataFrame([(y,) for y in [1999, 2000, 2001, 2009, 2010, 2029, 1900]], ["y"])
     got = [r["d"] for r in df.select(decade(F.col("y")).alias("d")).orderBy("y").collect()]
