@@ -749,8 +749,6 @@ def match_lsh_index(spark: SparkSession, sf_dir: str,
     DataFrame over the catalog table keeps the file listing it was
     analyzed with, so after a table refresh a memoized one would miss
     the appended new×new pairs, or read files a compaction removed."""
-    from ..sources.storage import read_table
-
     table = table or lsh_index_table(sf_dir, spark)
     if docs is None:
         (new_side, lookups, verdict), _ = _MATCH_BATCH_MEMO.plan(
@@ -760,7 +758,7 @@ def match_lsh_index(spark: SparkSession, sf_dir: str,
         (new_side, lookups, verdict), _ = _match_batch_side(
             spark, sf_dir, docs)
     prefiltered = _batch_index_candidates(
-        spark, new_side, _band_side(read_table(spark, table), "index"),
+        spark, new_side, _band_side(spark.table(table), "index"),
         _new_first())
     out = _verify_exact_jaccard(lookups, prefiltered)
     # the verdict gates the single-consumer output (the index side was
@@ -818,13 +816,11 @@ def match_index_pairs_for_tick(spark: SparkSession, table: str,
     production scale becomes a pruned read of the doc store.
     Trusted (no PK gate): callers are the streaming compositions
     whose eager build leg already gated."""
-    from ..sources.storage import read_table
-
     new_side = _band_side(_banded_signatures(
         _tokens(batch_docs).select("doc_id", "toks")), "new")
     prefiltered = _batch_index_candidates(
         spark, new_side.hint("merge"),
-        _band_side(read_table(spark, table), "index"),
+        _band_side(spark.table(table), "index"),
         F.col("doc_new") != F.col("doc_match"))
     return _verify_exact_jaccard(_verify_lookups(toks), prefiltered)
 
@@ -1704,16 +1700,34 @@ def q_dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     probabilistic tail for a j≈0.95 boundary pair, reproduced exactly
     by the oracle). A silent recall collapse — broken banding,
     signature, or verify stage — turns this row red."""
-    exact = q_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    found = (_minhash_lsh_pair_rows(spark, sf_dir)
-             .select("doc_a", "doc_b").withColumn("_hit", F.lit(1)))
-    hits = F.coalesce(F.sum("_hit"), F.lit(0)).cast("long")
-    return (exact.join(found, on=["doc_a", "doc_b"], how="left")
-            .agg(F.count(F.lit(1)).alias("n_exact"),
-                 hits.alias("n_found"),
-                 ieee_round(F.try_divide(hits.cast("double"),
-                                         F.count(F.lit(1))), 4)
-                 .alias("recall")))
+    return recall_audit(q_dedup_ngram_jaccard(spark, sf_dir),
+                        ["doc_a", "doc_b"],
+                        ("n_found", "recall",
+                         _minhash_lsh_pair_rows(spark, sf_dir)))
+
+
+def recall_audit(exact: DataFrame, keys: list[str],
+                 *sides: tuple[str, str, DataFrame]) -> DataFrame:
+    """One audit row of approximate answers against the exact ones:
+    ``n_exact``, then each side's hit count, then each side's recall
+    (hits / n_exact, rounded to 4). A side is ``(hits column, recall
+    column, frame)``; a hit is an exact ``keys`` row the frame also
+    holds, found by one LEFT join per side on ``keys``. Shared by the
+    MinHash recall audit and every ANN recall audit in
+    ``similarity``."""
+    joined = exact.select(*keys)
+    n = F.count(F.lit(1))
+    counts, recalls = [], []
+    for i, (n_hits, recall, found) in enumerate(sides):
+        flag = f"_hit{i}"
+        joined = joined.join(
+            found.select(*keys).withColumn(flag, F.lit(1)),
+            on=keys, how="left")
+        hits = F.coalesce(F.sum(flag), F.lit(0)).cast("long")
+        counts.append(hits.alias(n_hits))
+        recalls.append(ieee_round(F.try_divide(hits.cast("double"), n), 4)
+                       .alias(recall))
+    return joined.agg(n.alias("n_exact"), *counts, *recalls)
 
 
 ORACLE_DEDUP_LSH_RECALL = f"""

@@ -29,7 +29,7 @@ from ..functions.exact import ieee_round, ieee_round_sql, uavg, uavg_sql
 from ..plans.cache import (StateCache, corpus_state, drop_stale_siblings,
                            state_table_name)
 from ..sources.tables import load_table
-from .dedup import cosine_expr
+from .dedup import cosine_expr, recall_audit
 
 def load_finite_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings scan with a finite-vector gate: drop vectors with a
@@ -79,32 +79,73 @@ FINITE_EMB_COND_SQL = (
     "len(list_filter(embedding, x -> x != 0)) > 0")
 
 
+def _vectors(emb: DataFrame) -> DataFrame:
+    """(vec_id, v ARRAY<DOUBLE>) from an embeddings frame, behind the
+    finite-vector gate — the input of the PQ, k-means and SemDeDup
+    stages."""
+    return emb.filter(F.expr(FINITE_EMB_COND)).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
+
+
 TOPK_NEIGHBORS = 10
 N_QUERY_VECS = 10   # fixture query set: vec_id < 10
 LSH_BITS = 8
 EMB_DIM = 64
 
 
-def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector (vec_id <
-    N_QUERY_VECS), excluding self; deterministic tiebreak on vec_id."""
+def _query_cand(spark: SparkSession,
+                sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(q, cand) over the gated embeddings scan: the query set
+    (vec_id < N_QUERY_VECS) as (query_id, q_emb) and the whole corpus
+    as (cand_id, c_emb)."""
     e = load_finite_embeddings(spark, sf_dir)
     q = (e.filter(F.col("vec_id") < N_QUERY_VECS)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("q_emb")))
     cand = e.select(F.col("vec_id").alias("cand_id"),
                     F.col("embedding").alias("c_emb"))
+    return q, cand
+
+
+def _top_per_query(df: DataFrame, score: str, id_col: str,
+                   k: int) -> DataFrame:
+    """The per-query top-k of every ANN ranking: ``df`` plus a long
+    ``rank`` — row_number per query_id by ``score`` DESC, ``id_col``
+    ASC — kept while rank <= k. The rank filter is what lets Spark
+    plan a WindowGroupLimit that prunes before the window's shuffle."""
+    w = (Window.partitionBy("query_id")
+         .orderBy(F.desc(score), F.asc(id_col)))
+    return (df.withColumn("rank", F.row_number().over(w).cast("long"))
+            .filter(F.col("rank") <= k))
+
+
+def _cosine_ranked(scored: DataFrame) -> DataFrame:
+    """(query_id, cand_id, cosine, rank): the TOPK_NEIGHBORS cand_ids
+    of each query by a ``cosine`` column, cosine rounded to 6."""
+    return (_top_per_query(scored, "cosine", "cand_id", TOPK_NEIGHBORS)
+            .select("query_id", "cand_id",
+                    ieee_round(F.col("cosine"), 6).alias("cosine"), "rank"))
+
+
+def _ann_recall(spark: SparkSession, sf_dir: str,
+                *sides: tuple[str, str, DataFrame]) -> DataFrame:
+    """``recall_audit`` of ANN rankings against the exact brute-force
+    top-k (``q_cosine_topk``), the ground truth every ANN recall row
+    shares."""
+    return recall_audit(q_cosine_topk(spark, sf_dir),
+                        ["query_id", "cand_id"], *sides)
+
+
+def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact top-k cosine neighbors for each query vector (vec_id <
+    N_QUERY_VECS), excluding self; deterministic tiebreak on vec_id."""
+    q, cand = _query_cand(spark, sf_dir)
     scored = (
         cand.crossJoin(F.broadcast(q))
         .filter(F.col("cand_id") != F.col("query_id"))
         .withColumn("cosine", cosine_expr("q_emb", "c_emb"))
     )
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.desc("cosine"), F.asc("cand_id")))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= TOPK_NEIGHBORS)
-            .select("query_id", "cand_id",
-                    ieee_round(F.col("cosine"), 6).alias("cosine"), "rank"))
+    return _cosine_ranked(scored)
 
 
 ORACLE_COSINE_TOPK = f"""
@@ -147,27 +188,17 @@ def q_cosine_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter-THEN-rank is the semantics retrieval actually wants, and
     per-query result counts stay exactly k whenever k survivors
     exist."""
-    e = load_finite_embeddings(spark, sf_dir)
     keep = (load_table(spark, sf_dir, "documents")
             .filter(F.col("n_chars") >= FILTER_MIN_CHARS)
             .select(F.col("doc_id").alias("cand_id")))
-    q = (e.filter(F.col("vec_id") < N_QUERY_VECS)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("q_emb")))
-    cand = (e.select(F.col("vec_id").alias("cand_id"),
-                     F.col("embedding").alias("c_emb"))
-            .join(keep, on="cand_id", how="left_semi"))
+    q, cand = _query_cand(spark, sf_dir)
+    cand = cand.join(keep, on="cand_id", how="left_semi")
     scored = (
         cand.crossJoin(F.broadcast(q))
         .filter(F.col("cand_id") != F.col("query_id"))
         .withColumn("cosine", cosine_expr("q_emb", "c_emb"))
     )
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.desc("cosine"), F.asc("cand_id")))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= TOPK_NEIGHBORS)
-            .select("query_id", "cand_id",
-                    ieee_round(F.col("cosine"), 6).alias("cosine"), "rank"))
+    return _cosine_ranked(scored)
 
 
 ORACLE_COSINE_TOPK_FILTERED = f"""
@@ -279,12 +310,7 @@ def q_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
               .withColumn("cosine", cosine_expr("q_emb", "c_emb"))
               .groupBy("query_id", "cand_id")
               .agg(F.max("cosine").alias("cosine")))
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.desc("cosine"), F.asc("cand_id")))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= TOPK_NEIGHBORS)
-            .select("query_id", "cand_id",
-                    ieee_round(F.col("cosine"), 6).alias("cosine"), "rank"))
+    return _cosine_ranked(scored)
 
 
 def _hyperplanes_values_sql() -> str:
@@ -349,16 +375,8 @@ def q_sim_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture the number is LOW by the math in q_cosine_topk_lsh's
     docstring — the point of checking it is that it is the real
     number."""
-    exact = q_cosine_topk(spark, sf_dir).select("query_id", "cand_id")
-    found = (q_cosine_topk_lsh(spark, sf_dir)
-             .select("query_id", "cand_id").withColumn("_hit", F.lit(1)))
-    hits = F.coalesce(F.sum("_hit"), F.lit(0)).cast("long")
-    return (exact.join(found, on=["query_id", "cand_id"], how="left")
-            .agg(F.count(F.lit(1)).alias("n_exact"),
-                 hits.alias("n_found"),
-                 ieee_round(F.try_divide(hits.cast("double"),
-                                         F.count(F.lit(1))), 4)
-                 .alias("recall")))
+    return _ann_recall(spark, sf_dir,
+                       ("n_found", "recall", q_cosine_topk_lsh(spark, sf_dir)))
 
 
 ORACLE_SIM_LSH_RECALL = f"""
@@ -431,12 +449,7 @@ def q_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         index.join(F.broadcast(probes), on="cell")
         .filter(F.col("cand_id") != F.col("query_id"))
         .withColumn("cosine", cosine_expr("q_emb", "c_emb")))
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.desc("cosine"), F.asc("cand_id")))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= TOPK_NEIGHBORS)
-            .select("query_id", "cand_id",
-                    ieee_round(F.col("cosine"), 6).alias("cosine"), "rank"))
+    return _cosine_ranked(scored)
 
 
 ORACLE_COSINE_TOPK_IVF = f"""
@@ -485,16 +498,8 @@ def q_sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     index families carry an honest, driver-adjudicated recall row. An
     accidental NPROBE/centroid retune that collapses recall turns this
     row red instead of silently degrading retrieval."""
-    exact = q_cosine_topk(spark, sf_dir).select("query_id", "cand_id")
-    found = (q_cosine_topk_ivf(spark, sf_dir)
-             .select("query_id", "cand_id").withColumn("_hit", F.lit(1)))
-    hits = F.coalesce(F.sum("_hit"), F.lit(0)).cast("long")
-    return (exact.join(found, on=["query_id", "cand_id"], how="left")
-            .agg(F.count(F.lit(1)).alias("n_exact"),
-                 hits.alias("n_found"),
-                 ieee_round(F.try_divide(hits.cast("double"),
-                                         F.count(F.lit(1))), 4)
-                 .alias("recall")))
+    return _ann_recall(spark, sf_dir,
+                       ("n_found", "recall", q_cosine_topk_ivf(spark, sf_dir)))
 
 
 ORACLE_SIM_IVF_RECALL = f"""
@@ -607,10 +612,7 @@ def q_cosine_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("q_cosine", qcos)
         .withColumn("cosine", cosine_expr("q_emb", "c_emb"))
     )
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.desc("q_cosine"), F.asc("cand_id")))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= TOPK_NEIGHBORS)
+    return (_top_per_query(scored, "q_cosine", "cand_id", TOPK_NEIGHBORS)
             .select("query_id", "cand_id",
                     ieee_round(F.col("q_cosine"), 6).alias("q_cosine"),
                     ieee_round(F.col("cosine"), 6).alias("cosine"), "rank"))
@@ -760,8 +762,7 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     = re-running with the emitted centroids; each step is this plan.
     Long-format output (cluster_id, pos, centroid_val) — nested arrays
     don't survive result canonicalizers."""
-    e = load_finite_embeddings(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    e = _vectors(load_table(spark, sf_dir, "embeddings"))
     assigned = _kmeans_assign(e)
     return (assigned.select("cluster_id", F.posexplode("v").alias("pos", "x"))
             .groupBy("cluster_id", "pos")
@@ -819,8 +820,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     the centroid set stays broadcastable (K·dim floats) far beyond
     that, and an oversized straggler cluster is handled like any skewed
     join key (salt by a secondary hash, verify across salts)."""
-    e = load_finite_embeddings(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    e = _vectors(load_table(spark, sf_dir, "embeddings"))
     # The assignment feeds three consumers (both pair sides + the final
     # keep join) and Catalyst does not canonicalize them to one reused
     # exchange — materialize it once (executor-local, never driver).
@@ -1066,32 +1066,22 @@ def _pq_d2_expr(m: int, v: str, cv: str) -> str:
 _PQ_CENT_LIVE = StateCache(max_entries=3)
 
 
-def _pq_parts(spark: SparkSession, sf_dir: str,
-              codebook: DataFrame | None = None
-              ) -> tuple[DataFrame, DataFrame]:
-    """(codes, qarr): the PQ index — 4-bit code array per corpus
-    vector — and the per-query ADC distance table. Shared by the flat
-    PQ scorer (``_pq_scored``: codes × every query) and the IVF-PQ
-    composition (``q_ivfpq_topk``: codes joined to the probed-cell
-    candidate set only). Extracted verbatim from q_pq_topk; its plan
-    is unchanged.
+def _pq_parts_cent(spark: SparkSession, sf_dir: str,
+                   codebook: DataFrame | None = None
+                   ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(codes, qarr, cent): the PQ index — 4-bit code array per corpus
+    vector — the per-query ADC distance table, and the pinned
+    centroid HANDLE (a pin of the full-query plan memo, re-pinned on
+    every hit). Shared by the flat PQ scorer (``_adc_scored``: codes ×
+    every query) and the IVF-PQ composition (``q_ivfpq_topk``: codes
+    joined to the probed-cell candidate set only).
 
     ``codebook`` overrides the one-shot codebook with a caller-built
     (cid INT 0..PQ_K-1, cv ARRAY<DOUBLE> of EMB_DIM) table — the
     trained-codebook variant (``_pq_trained_codebook``) passes its
     Lloyd-refined centroids; everything downstream (encoding, ADC,
     the PK-precondition assert) is identical."""
-    codes, qarr, _ = _pq_parts_cent(spark, sf_dir, codebook)
-    return codes, qarr
-
-
-def _pq_parts_cent(spark: SparkSession, sf_dir: str,
-                   codebook: DataFrame | None = None
-                   ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """``_pq_parts`` plus the pinned centroid HANDLE — a pin of the
-    full-query plan memo (r11), re-pinned on every hit."""
-    e = load_finite_embeddings(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    e = _vectors(load_table(spark, sf_dir, "embeddings"))
     # K rows, consumed by encoding AND the query table. Pinned through
     # the tracked cache: semantics-deduped (a naive FIFO release of an
     # "old" same-plan handle would evict the entry every warm
@@ -1099,7 +1089,8 @@ def _pq_parts_cent(spark: SparkSession, sf_dir: str,
     # flip-flopped 1.5 s warm / 8.4 s cold as the release lapped the
     # cap), bounded, and state-keyed on the embeddings input.
     cent = _PQ_CENT_LIVE.pin(
-        codebook if codebook is not None else _pq_oneshot_codebook(e),
+        codebook if codebook is not None
+        else _pq_oneshot_codebook(e).select("cid", "cv"),
         spark, corpus_state(sf_dir, spark, "embeddings.parquet"))
     codes = _pq_encode(e.crossJoin(F.broadcast(cent)))
     qarr = _pq_query_arr(e, cent)
@@ -1107,14 +1098,18 @@ def _pq_parts_cent(spark: SparkSession, sf_dir: str,
 
 
 def _pq_oneshot_codebook(e: DataFrame) -> DataFrame:
-    """(cid, cv) one-shot codebook: the first PQ_K FINITE vectors with
-    DENSE 0-based ids — the ADC distance table is positional, so
-    centroid ids must be 0..K-1 even when the finite-vector gate drops
-    low vec_ids (a raw ``vec_id < PQ_K`` seeded a short table and
-    out-of-bounds lookups — found by the NaN-vector fuzz). Dense rank
-    via a tiny broadcast self-join (K rows), not an unpartitioned
-    window. Shared by ``_pq_parts`` (in-query) and ``build_pq_index``
-    (which MATERIALIZES it next to the code table)."""
+    """(cvid, cv, cid) one-shot codebook: the first PQ_K FINITE
+    vectors (vec_id ``cvid``) with DENSE 0-based ids ``cid`` — the ADC
+    distance table is positional, so centroid ids must be 0..K-1 even
+    when the finite-vector gate drops low vec_ids (a raw ``vec_id <
+    PQ_K`` seeded a short table and out-of-bounds lookups — found by
+    the NaN-vector fuzz). Dense rank via a tiny broadcast self-join (K
+    rows), not an unpartitioned window. Shared by ``_pq_parts_cent``
+    (in-query) and the Lloyd chain's initial codebook
+    (``_pq_trained_chain``), each projecting its own columns: a chain
+    started from the in-query (cid, cv) plan would read the pinned
+    in-query codebook through Spark's cache substitution, a pin the
+    chain never re-keys to the current corpus state."""
     first_k = (e.orderBy("vec_id").limit(PQ_K)
                .select(F.col("vec_id").alias("cvid"),
                        F.col("v").alias("cv")))
@@ -1122,15 +1117,14 @@ def _pq_oneshot_codebook(e: DataFrame) -> DataFrame:
     return (first_k.join(F.broadcast(ids), F.col("oid") <= F.col("cvid"))
             .groupBy("cvid")
             .agg(F.first("cv").alias("cv"),
-                 (F.count(F.lit(1)) - 1).cast("int").alias("cid"))
-            .select("cid", "cv"))
+                 (F.count(F.lit(1)) - 1).cast("int").alias("cid")))
 
 
 def _pq_encode(pairs: DataFrame) -> DataFrame:
     """(vec_id, codes) from a vectors × broadcast-codebook stream —
-    the encode aggregate shared by ``_pq_parts`` (in-query forms),
-    ``build_pq_index`` (via _pq_parts), and ``append_pq_index``
-    (batch × the STORED codebook).
+    the encode aggregate shared by ``_pq_parts_cent`` (in-query
+    forms), ``build_pq_index`` and ``append_pq_index`` (batch × the
+    STORED codebook).
 
     vec_id PK PRECONDITION, pinned loudly (r07 identity campaign):
     the ADC index is positional (dense 0-based centroid ids, one
@@ -1162,9 +1156,9 @@ def _pq_encode(pairs: DataFrame) -> DataFrame:
 def _pq_query_arr(e: DataFrame, cent: DataFrame) -> DataFrame:
     """(query_id, dt) per-query ADC distance table from a (cid, cv)
     codebook — tiny (|Q| rows, PQ_M·PQ_K doubles each), built against
-    the broadcast codebook. Shared by ``_pq_parts`` and the persisted
-    serve (which reads the STORED codebook instead of re-deriving
-    it)."""
+    the broadcast codebook. Shared by ``_pq_parts_cent`` and the
+    persisted serve (which reads the STORED codebook instead of
+    re-deriving it)."""
     q = (e.filter(F.col("vec_id") < N_QUERY_VECS)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("v").alias("qv")))
@@ -1186,14 +1180,24 @@ _PQ_ADC_EXPR = (f"aggregate(sequence(1, {PQ_M}), 0D, (acc, m) -> "
                 f"CAST(element_at(codes, m) AS INT) + 1), m))")
 
 
-def _pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADC-scored (query_id, vec_id, approx) candidate stream — the
-    shared stage of ``q_pq_topk`` (rank straight to top-k) and
-    ``q_pq_rerank`` (shortlist PQ_RERANK_C, then exact re-rank)."""
-    codes, qarr = _pq_parts(spark, sf_dir)
+def _adc_scored(codes: DataFrame, qarr: DataFrame) -> DataFrame:
+    """ADC-scored (vec_id, codes, query_id, dt, approx) stream: codes ×
+    every broadcast query distance table but the query's own row —
+    the flat PQ scorer of ``q_pq_topk``, ``q_pq_rerank`` and the
+    persisted serve. It never touches raw vectors."""
     return (codes.crossJoin(F.broadcast(qarr))
             .filter(F.col("vec_id") != F.col("query_id"))
             .withColumn("approx", F.expr(_PQ_ADC_EXPR)))
+
+
+def _adc_topk(codes: DataFrame, qarr: DataFrame) -> DataFrame:
+    """(query_id, cand_id, approx_dot, rank): the flat ADC ranking cut
+    to TOPK_NEIGHBORS per query, approx rounded to 6."""
+    return (_top_per_query(_adc_scored(codes, qarr), "approx", "vec_id",
+                           TOPK_NEIGHBORS)
+            .select("query_id", F.col("vec_id").alias("cand_id"),
+                    ieee_round(F.col("approx"), 6).alias("approx_dot"),
+                    "rank"))
 
 
 # Full-query plan memo for the PQ ANN family (r11, VERDICT r10 #2 —
@@ -1201,7 +1205,7 @@ def _pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 # declared query): every q_pq_*_topk / q_pq_rerank plan is a pure
 # function of (sf_dir, embeddings corpus state) — no eager
 # materialization, no catalog reads — yet each invocation rebuilt
-# ~0.4-0.6 s of _pq_parts + rank-window Column trees plus one eager
+# ~0.4-0.6 s of _pq_parts_cent + rank-window Column trees plus one eager
 # parquet footer read (load_finite_embeddings). Guards, bounds and
 # re-pins are plans.cache.StateCache's.
 _PQ_QUERY_MEMO = StateCache(max_entries=8)
@@ -1215,17 +1219,7 @@ def _pq_adc_topk_plan(spark: SparkSession, sf_dir: str,
     top-k), over the one-shot codebook or a trained ``codebook`` whose
     Lloyd round handles ``pins`` the plan reads too."""
     codes, qarr, cent = _pq_parts_cent(spark, sf_dir, codebook)
-    scored = (codes.crossJoin(F.broadcast(qarr))
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .withColumn("approx", F.expr(_PQ_ADC_EXPR)))
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.desc("approx"), F.asc("vec_id")))
-    df = (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-          .filter(F.col("rank") <= TOPK_NEIGHBORS)
-          .select("query_id", F.col("vec_id").alias("cand_id"),
-                  ieee_round(F.col("approx"), 6).alias("approx_dot"),
-                  "rank"))
-    return df, [*pins, (_PQ_CENT_LIVE, cent)]
+    return _adc_topk(codes, qarr), [*pins, (_PQ_CENT_LIVE, cent)]
 
 
 def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1319,8 +1313,7 @@ def build_pq_index(spark: SparkSession, sf_dir: str) -> str:
     cb = _pq_trained_codebook(spark, sf_dir, sample=PQ_TRAIN_SAMPLE)
     drop_table_and_location(spark, f"{table}_cb")
     cb.write.mode("overwrite").format("parquet").saveAsTable(f"{table}_cb")
-    e = load_finite_embeddings(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    e = _vectors(load_table(spark, sf_dir, "embeddings"))
     codes = _pq_encode(
         e.crossJoin(F.broadcast(spark.table(f"{table}_cb"))))
     codes.write.mode("overwrite").format("parquet").saveAsTable(table)
@@ -1343,10 +1336,7 @@ def append_pq_index(spark: SparkSession, sf_dir: str, table: str,
     Append-then-serve ≡ encode-all-with-the-epoch-codebook, pinned in
     tests/test_dedup_similarity.py."""
     cent = spark.table(f"{table}_cb")
-    e = (batch.filter(F.expr(FINITE_EMB_COND))
-         .select("vec_id",
-                 F.col("embedding").cast("array<double>").alias("v")))
-    codes = _pq_encode(e.crossJoin(F.broadcast(cent)))
+    codes = _pq_encode(_vectors(batch).crossJoin(F.broadcast(cent)))
     codes.write.mode("append").format("parquet").saveAsTable(table)
 
 
@@ -1391,19 +1381,8 @@ def q_pq_persisted_topk(spark: SparkSession, sf_dir: str,
     # the query-distance table is built against the STORED codebook —
     # the index's schema — never a re-derived one (a drifted corpus
     # would silently re-key the positional ADC lookups)
-    e = emb.filter(F.expr(FINITE_EMB_COND)).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    qarr = _pq_query_arr(e, spark.table(f"{table}_cb"))
-    scored = (codes.crossJoin(F.broadcast(qarr))
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .withColumn("approx", F.expr(_PQ_ADC_EXPR)))
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.desc("approx"), F.asc("vec_id")))
-    out = (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-           .filter(F.col("rank") <= TOPK_NEIGHBORS)
-           .select("query_id", F.col("vec_id").alias("cand_id"),
-                   ieee_round(F.col("approx"), 6).alias("approx_dot"),
-                   "rank"))
+    qarr = _pq_query_arr(_vectors(emb), spark.table(f"{table}_cb"))
+    out = _adc_topk(codes, qarr)
     if gate:
         # fail-loud PK audit on the raw column-pruned id scan, never
         # the (possibly cached) wide scan — the r08/r09 gate lesson
@@ -1422,51 +1401,30 @@ def q_sim_pq_persisted_recall(spark: SparkSession,
     one-shot) bought, measured THROUGH the table the production stack
     serves from, not through the in-query training path. Shares the
     exact brute-force ground truth with every other recall audit."""
-    exact = q_cosine_topk(spark, sf_dir).select("query_id", "cand_id")
-    pq = (q_pq_topk(spark, sf_dir)
-          .select("query_id", "cand_id").withColumn("_p", F.lit(1)))
-    srv = (q_pq_persisted_topk(spark, sf_dir)
-           .select("query_id", "cand_id").withColumn("_s", F.lit(1)))
-    n = F.count(F.lit(1))
-    hp = F.coalesce(F.sum("_p"), F.lit(0)).cast("long")
-    hs = F.coalesce(F.sum("_s"), F.lit(0)).cast("long")
-    return (exact.join(pq, on=["query_id", "cand_id"], how="left")
-            .join(srv, on=["query_id", "cand_id"], how="left")
-            .agg(n.alias("n_exact"),
-                 hp.alias("n_pq"),
-                 hs.alias("n_served"),
-                 ieee_round(F.try_divide(hp.cast("double"), n), 4)
-                 .alias("recall_pq"),
-                 ieee_round(F.try_divide(hs.cast("double"), n), 4)
-                 .alias("recall_served")))
+    return _ann_recall(
+        spark, sf_dir,
+        ("n_pq", "recall_pq", q_pq_topk(spark, sf_dir)),
+        ("n_served", "recall_served", q_pq_persisted_topk(spark, sf_dir)))
 
 
 PQ_RERANK_C = 30   # ADC shortlist size the exact re-rank scores
 
 
 def _exact_refine(spark: SparkSession, sf_dir: str,
-                  shortlist: DataFrame) -> DataFrame:
-    """Exact-cosine re-rank of a (query_id, cand_id) shortlist to
-    TOPK_NEIGHBORS — the refinement stage shared by ``q_pq_rerank``
-    and ``q_ivfpq_topk`` (one definition, so a tiebreak or rounding
-    change can't drift between the funnels). The shortlist re-enters
-    the embeddings scan as a broadcast: |Q|·C raw-vector reads, no
-    corpus shuffle."""
-    e = load_finite_embeddings(spark, sf_dir)
-    q = (e.filter(F.col("vec_id") < N_QUERY_VECS)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("q_emb")))
-    cv = e.select(F.col("vec_id").alias("cand_id"),
-                  F.col("embedding").alias("c_emb"))
+                  adc: DataFrame) -> DataFrame:
+    """Exact-cosine re-rank of an ADC-scored stream's top PQ_RERANK_C
+    shortlist per query to TOPK_NEIGHBORS — the refinement stage
+    shared by ``q_pq_rerank`` and ``q_ivfpq_topk`` (one definition, so
+    a tiebreak or rounding change can't drift between the funnels).
+    The shortlist re-enters the embeddings scan as a broadcast: |Q|·C
+    raw-vector reads, no corpus shuffle."""
+    shortlist = (_top_per_query(adc, "approx", "vec_id", PQ_RERANK_C)
+                 .select("query_id", F.col("vec_id").alias("cand_id")))
+    q, cv = _query_cand(spark, sf_dir)
     rr = (cv.join(F.broadcast(shortlist), on="cand_id")
           .join(F.broadcast(q), on="query_id")
           .withColumn("cosine", cosine_expr("q_emb", "c_emb")))
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.desc("cosine"), F.asc("cand_id")))
-    return (rr.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= TOPK_NEIGHBORS)
-            .select("query_id", "cand_id",
-                    ieee_round(F.col("cosine"), 6).alias("cosine"), "rank"))
+    return _cosine_ranked(rr)
 
 
 # the oracle twin of _exact_refine: assumes CTEs `e` (gated vectors)
@@ -1508,15 +1466,8 @@ def q_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_PQ_QUERY_MEMO``."""
     def build():
         codes, qarr, cent = _pq_parts_cent(spark, sf_dir)
-        scored = (codes.crossJoin(F.broadcast(qarr))
-                  .filter(F.col("vec_id") != F.col("query_id"))
-                  .withColumn("approx", F.expr(_PQ_ADC_EXPR)))
-        wc = (Window.partitionBy("query_id")
-              .orderBy(F.desc("approx"), F.asc("vec_id")))
-        cands = (scored.withColumn("crank", F.row_number().over(wc))
-                 .filter(F.col("crank") <= PQ_RERANK_C)
-                 .select("query_id", F.col("vec_id").alias("cand_id")))
-        return _exact_refine(spark, sf_dir, cands), [(_PQ_CENT_LIVE, cent)]
+        return (_exact_refine(spark, sf_dir, _adc_scored(codes, qarr)),
+                [(_PQ_CENT_LIVE, cent)])
 
     return _PQ_QUERY_MEMO.plan(
         ("rerank", sf_dir), spark,
@@ -1596,16 +1547,8 @@ def q_sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     index in the repo carries an honest, driver-adjudicated recall
     row. PQ with one-shot codebooks trades the most accuracy for the
     most compression; this row is where that trade is VISIBLE."""
-    exact = q_cosine_topk(spark, sf_dir).select("query_id", "cand_id")
-    found = (q_pq_topk(spark, sf_dir)
-             .select("query_id", "cand_id").withColumn("_hit", F.lit(1)))
-    hits = F.coalesce(F.sum("_hit"), F.lit(0)).cast("long")
-    return (exact.join(found, on=["query_id", "cand_id"], how="left")
-            .agg(F.count(F.lit(1)).alias("n_exact"),
-                 hits.alias("n_found"),
-                 ieee_round(F.try_divide(hits.cast("double"),
-                                         F.count(F.lit(1))), 4)
-                 .alias("recall")))
+    return _ann_recall(spark, sf_dir,
+                       ("n_found", "recall", q_pq_topk(spark, sf_dir)))
 
 
 ORACLE_SIM_PQ_RECALL = f"""
@@ -1627,21 +1570,10 @@ def q_sim_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what touching |Q|·PQ_RERANK_C raw vectors buys). Shares
     the exact brute-force top-k as ground truth with the other recall
     audits."""
-    exact = q_cosine_topk(spark, sf_dir).select("query_id", "cand_id")
-    pq = (q_pq_topk(spark, sf_dir)
-          .select("query_id", "cand_id").withColumn("_p", F.lit(1)))
-    rr = (q_pq_rerank(spark, sf_dir)
-          .select("query_id", "cand_id").withColumn("_r", F.lit(1)))
-    n = F.count(F.lit(1))
-    hp = F.coalesce(F.sum("_p"), F.lit(0)).cast("long")
-    hr = F.coalesce(F.sum("_r"), F.lit(0)).cast("long")
-    return (exact.join(pq, on=["query_id", "cand_id"], how="left")
-            .join(rr, on=["query_id", "cand_id"], how="left")
-            .agg(n.alias("n_exact"), hp.alias("n_pq"), hr.alias("n_rerank"),
-                 ieee_round(F.try_divide(hp.cast("double"), n), 4)
-                 .alias("recall_pq"),
-                 ieee_round(F.try_divide(hr.cast("double"), n), 4)
-                 .alias("recall_rerank")))
+    return _ann_recall(
+        spark, sf_dir,
+        ("n_pq", "recall_pq", q_pq_topk(spark, sf_dir)),
+        ("n_rerank", "recall_rerank", q_pq_rerank(spark, sf_dir)))
 
 
 ORACLE_SIM_PQ_RERANK_RECALL = f"""
@@ -1768,7 +1700,7 @@ def _pq_trained_codebook(spark: SparkSession, sf_dir: str,
     codebook (so trained vs stride is exactly "what the iterations
     bought"). The reshape at
     the end concatenates each cid's PQ_M sub-centroids back into one
-    EMB_DIM vector — the (cid, cv) contract ``_pq_parts`` encodes
+    EMB_DIM vector — the (cid, cv) contract ``_pq_parts_cent`` encodes
     against, where subspace m only ever reads its own slice.
 
     Scale shape: per iteration, assignment is a map-side broadcast
@@ -1822,22 +1754,13 @@ def _pq_trained_chain(spark: SparkSession, sf_dir: str,
     see its docstring for the algorithm and scale shape). Returns the
     final codebook and the per-iteration pinned handles."""
     if e is None:
-        e = load_finite_embeddings(spark, sf_dir).select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v"))
+        e = _vectors(load_table(spark, sf_dir, "embeddings"))
     train = e
     if sample is not None:
         train = (e.orderBy(F.md5(F.col("vec_id").cast("string")),
                            "vec_id")
                  .limit(sample))
-    first_k = (train.orderBy("vec_id").limit(PQ_K)
-               .select(F.col("vec_id").alias("cvid"),
-                       F.col("v").alias("cv")))
-    ids = first_k.select(F.col("cvid").alias("oid"))
-    dense = (first_k.join(F.broadcast(ids), F.col("oid") <= F.col("cvid"))
-             .groupBy("cvid")
-             .agg(F.first("cv").alias("cv"),
-                  (F.count(F.lit(1)) - 1).cast("int").alias("cid")))
-    cent = dense.select("cid", F.expr(
+    cent = _pq_oneshot_codebook(train).select("cid", F.expr(
         f"inline(transform(sequence(0, {PQ_M - 1}), m -> "
         f"struct(m AS m, slice(cv, m * {PQ_SUB} + 1, {PQ_SUB}) AS cv)))"))
     sub = train.select("vec_id", F.expr(
@@ -1876,23 +1799,10 @@ def q_sim_pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     query tables have identical shapes; only centroid values moved).
     Shares the exact brute-force top-k ground truth with every other
     recall audit."""
-    exact = q_cosine_topk(spark, sf_dir).select("query_id", "cand_id")
-    pq = (q_pq_topk(spark, sf_dir)
-          .select("query_id", "cand_id").withColumn("_p", F.lit(1)))
-    tr = (q_pq_trained_topk(spark, sf_dir)
-          .select("query_id", "cand_id").withColumn("_t", F.lit(1)))
-    n = F.count(F.lit(1))
-    hp = F.coalesce(F.sum("_p"), F.lit(0)).cast("long")
-    ht = F.coalesce(F.sum("_t"), F.lit(0)).cast("long")
-    return (exact.join(pq, on=["query_id", "cand_id"], how="left")
-            .join(tr, on=["query_id", "cand_id"], how="left")
-            .agg(n.alias("n_exact"),
-                 hp.alias("n_pq"),
-                 ht.alias("n_trained"),
-                 ieee_round(F.try_divide(hp.cast("double"), n), 4)
-                 .alias("recall_pq"),
-                 ieee_round(F.try_divide(ht.cast("double"), n), 4)
-                 .alias("recall_trained")))
+    return _ann_recall(
+        spark, sf_dir,
+        ("n_pq", "recall_pq", q_pq_topk(spark, sf_dir)),
+        ("n_trained", "recall_trained", q_pq_trained_topk(spark, sf_dir)))
 
 
 def q_pq_sampled_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2045,28 +1955,15 @@ def q_mrl_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shortlist is WindowGroupLimit-bounded before any full-width
     work. Recall@k vs exact brute force is its own checked row
     (``q_sim_mrl_recall``)."""
-    e = load_finite_embeddings(spark, sf_dir)
-    q = (e.filter(F.col("vec_id") < N_QUERY_VECS)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("q_emb")))
-    cand = e.select(F.col("vec_id").alias("cand_id"),
-                    F.col("embedding").alias("c_emb"))
+    q, cand = _query_cand(spark, sf_dir)
     pref = (cand.crossJoin(F.broadcast(q))
             .filter(F.col("cand_id") != F.col("query_id"))
             .withColumn("pcos", cosine_expr(
                 f"slice(q_emb, 1, {MRL_DIM})",
                 f"slice(c_emb, 1, {MRL_DIM})")))
-    wc = (Window.partitionBy("query_id")
-          .orderBy(F.desc("pcos"), F.asc("cand_id")))
-    shortlist = (pref.withColumn("crank", F.row_number().over(wc))
-                 .filter(F.col("crank") <= MRL_CAND))
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.desc("cosine"), F.asc("cand_id")))
-    return (shortlist.withColumn("cosine", cosine_expr("q_emb", "c_emb"))
-            .withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= TOPK_NEIGHBORS)
-            .select("query_id", "cand_id",
-                    ieee_round(F.col("cosine"), 6).alias("cosine"), "rank"))
+    shortlist = _top_per_query(pref, "pcos", "cand_id", MRL_CAND)
+    return _cosine_ranked(
+        shortlist.withColumn("cosine", cosine_expr("q_emb", "c_emb")))
 
 
 ORACLE_MRL_TOPK = f"""
@@ -2106,16 +2003,8 @@ def q_sim_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute force — the honest-audit row of the MRL path, same contract
     as the LSH/IVF/PQ recall audits: how much ranking quality the
     MRL_DIM-of-EMB_DIM first pass gives up after full-dim rerank."""
-    exact = q_cosine_topk(spark, sf_dir).select("query_id", "cand_id")
-    found = (q_mrl_topk(spark, sf_dir)
-             .select("query_id", "cand_id").withColumn("_hit", F.lit(1)))
-    hits = F.coalesce(F.sum("_hit"), F.lit(0)).cast("long")
-    return (exact.join(found, on=["query_id", "cand_id"], how="left")
-            .agg(F.count(F.lit(1)).alias("n_exact"),
-                 hits.alias("n_found"),
-                 ieee_round(F.try_divide(hits.cast("double"),
-                                         F.count(F.lit(1))), 4)
-                 .alias("recall")))
+    return _ann_recall(spark, sf_dir,
+                       ("n_found", "recall", q_mrl_topk(spark, sf_dir)))
 
 
 ORACLE_SIM_MRL_RECALL = f"""
@@ -2139,9 +2028,12 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     NPROBE cells, PQ ADC ranks ONLY those candidates from their 4-bit
     codes (raw vectors untouched), and the top PQ_RERANK_C shortlist
     is re-scored with exact cosine. Every stage reuses the machinery
-    of its standalone query (``_ivf_cells``, ``_pq_parts``,
+    of its standalone query (``_ivf_cells``, ``_pq_parts_cent``,
     ``q_pq_rerank``'s refinement), so the composed index inherits each
     stage's determinism and the whole funnel carries one SQL oracle.
+    Its ADC step joins the code table to the probed-cell candidate
+    pairs on their keys instead of crossing every query
+    (``_adc_scored``), and shares the ``_PQ_ADC_EXPR`` score.
 
     Scale shape: candidate generation is an equi-join on cell id
     (probed-cells fraction of the corpus per query — never corpus²);
@@ -2149,7 +2041,7 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw-vector reads are |Q|·PQ_RERANK_C broadcast-pruned lookups.
     vec_id PK precondition inherited from the PQ encoder (raises
     diagnosably; resolve at ingest)."""
-    codes, qarr = _pq_parts(spark, sf_dir)
+    codes, qarr, _ = _pq_parts_cent(spark, sf_dir)
     index, probes = _ivf_cells(spark, sf_dir)
     cands = (index.select(F.col("cand_id").alias("vec_id"), "cell")
              .join(F.broadcast(probes.select("query_id", "cell")),
@@ -2159,12 +2051,7 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     adc = (codes.join(cands, on="vec_id")
            .join(F.broadcast(qarr), on="query_id")
            .withColumn("approx", F.expr(_PQ_ADC_EXPR)))
-    wc = (Window.partitionBy("query_id")
-          .orderBy(F.desc("approx"), F.asc("vec_id")))
-    shortlist = (adc.withColumn("crank", F.row_number().over(wc))
-                 .filter(F.col("crank") <= PQ_RERANK_C)
-                 .select("query_id", F.col("vec_id").alias("cand_id")))
-    return _exact_refine(spark, sf_dir, shortlist)
+    return _exact_refine(spark, sf_dir, adc)
 
 
 ORACLE_IVFPQ_TOPK = f"""
@@ -2216,16 +2103,8 @@ def q_sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the UNION of the cell-pruning loss measured by sim_ivf_recall and
     the code-quantization loss measured by sim_pq_rerank_recall; this
     row is where the combined trade is visible)."""
-    exact = q_cosine_topk(spark, sf_dir).select("query_id", "cand_id")
-    found = (q_ivfpq_topk(spark, sf_dir)
-             .select("query_id", "cand_id").withColumn("_hit", F.lit(1)))
-    hits = F.coalesce(F.sum("_hit"), F.lit(0)).cast("long")
-    return (exact.join(found, on=["query_id", "cand_id"], how="left")
-            .agg(F.count(F.lit(1)).alias("n_exact"),
-                 hits.alias("n_found"),
-                 ieee_round(F.try_divide(hits.cast("double"),
-                                         F.count(F.lit(1))), 4)
-                 .alias("recall")))
+    return _ann_recall(spark, sf_dir,
+                       ("n_found", "recall", q_ivfpq_topk(spark, sf_dir)))
 
 
 ORACLE_SIM_IVFPQ_RECALL = f"""

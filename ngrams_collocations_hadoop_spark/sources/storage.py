@@ -60,10 +60,6 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
      .saveAsTable(table))
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry demonstration of the zero-exchange co-located join:
     orders and customer are persisted bucketed+sorted on the customer
@@ -86,8 +82,8 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_mktsegment"),
         "ncs_b_customer", ["c_custkey"], 8)
-    j = read_table(spark, "ncs_b_orders").hint("merge").join(
-        read_table(spark, "ncs_b_customer"),
+    j = spark.table("ncs_b_orders").hint("merge").join(
+        spark.table("ncs_b_customer"),
         F.col("o_custkey") == F.col("c_custkey"))
     return (j.groupBy("c_mktsegment")
             .agg(F.count(F.lit(1)).alias("n_orders"),

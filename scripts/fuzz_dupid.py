@@ -35,7 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # - the PQ/ADC family: the positional codebook cannot be totalized —
 #   every composer of the PQ encoder inherits the same gate (the
 #   shortlist/rerank forms and the IVF-PQ funnel raise the identical
-#   pinned error through the shared _pq_parts aggregate);
+#   pinned error through the shared _pq_encode aggregate);
 # - the former DOCUMENTED-precondition family, upgraded r08 (VERDICT
 #   r07 #5) to the in-query ``require_unique_ids`` gate: every
 #   consumer of the raw per-row LSH pair helper (their shared DuckDB
@@ -53,7 +53,7 @@ EXPECT_RAISE = {
     "sim_pq_topk", "sim_pq_recall",
     "sim_pq_rerank", "sim_pq_rerank_recall",
     "sim_ivfpq_topk", "sim_ivfpq_recall",
-    # the trained-codebook variant encodes through the same _pq_parts
+    # the trained-codebook variant encodes through the same _pq_encode
     # aggregate, so it inherits the identical pinned gate — as does
     # the sampled-training form (r09)
     "sim_pq_trained_topk", "sim_pq_trained_recall",

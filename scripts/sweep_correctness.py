@@ -5,11 +5,16 @@ compare rows / schema / EXACT canonical value text (floats rounded to 6
 then stringified — the driver hashes the rounded text, so atol-passes
 that would hash-mismatch are reported as HASHFLAP here).
 
-Usage: python scripts/sweep_correctness.py [sf_dir] [name ...]
+Usage: python scripts/sweep_correctness.py [sf_dir] [pattern ...]
+
+Each pattern is a query name or an fnmatch pattern over the registry
+names (``'sim_*' dedup_lsh_recall``); with none, every query runs.
+Matches run in registry order.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import os
 import sys
 import time
@@ -44,7 +49,12 @@ def main() -> None:
     from ngrams_collocations_hadoop_spark.session import get_spark
     from ngrams_collocations_hadoop_spark.sources.tables import TABLE_NAMES
 
-    names = sys.argv[2:] or list(QUERIES)
+    patterns = sys.argv[2:] or ["*"]
+    unmatched = [p for p in patterns if not fnmatch.filter(QUERIES, p)]
+    if unmatched:
+        sys.exit(f"no registry query matches {unmatched}")
+    names = [n for n in QUERIES
+             if any(fnmatch.fnmatchcase(n, p) for p in patterns)]
     # no console progress bars: their carriage returns splice into the
     # PASS/FAIL lines, breaking line-anchored grep over the log
     spark = get_spark(app_name="sweep", extra_conf={

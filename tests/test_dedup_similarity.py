@@ -693,18 +693,14 @@ def test_pq_rerank_is_exact_over_the_adc_shortlist(spark):
     the recall-audit row must show the refinement never LOSES recall
     vs plain PQ top-k on the fixture (recall_rerank >= recall_pq — the
     step's whole point; equality allowed)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from ngrams_collocations_hadoop_spark.operators import similarity as sim
     from .conftest import SF_SMALL
 
-    wc = (Window.partitionBy("query_id")
-          .orderBy(F.desc("approx"), F.asc("vec_id")))
+    codes, qarr, _ = sim._pq_parts_cent(spark, SF_SMALL)
     shortlist = {(r.query_id, r.vec_id)
-                 for r in sim._pq_scored(spark, SF_SMALL)
-                 .withColumn("crank", F.row_number().over(wc))
-                 .filter(F.col("crank") <= sim.PQ_RERANK_C)
+                 for r in sim._top_per_query(
+                     sim._adc_scored(codes, qarr), "approx", "vec_id",
+                     sim.PQ_RERANK_C)
                  .select("query_id", "vec_id").collect()}
     out = sim.q_pq_rerank(spark, SF_SMALL).collect()
     per_q = {}

@@ -18,3 +18,59 @@ def test_oracle_keys_subset_of_queries():
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_differential(spark, name):
     assert_query_matches_oracle(spark, name, "/root/testdata/sf0.001")
+
+
+_TOPK = "query_id:bigint,cand_id:bigint,cosine:double,rank:bigint"
+_ADC_TOPK = "query_id:bigint,cand_id:bigint,approx_dot:double,rank:bigint"
+_RECALL = "n_exact:bigint,n_found:bigint,recall:double"
+
+
+def _recall_pair(side: str) -> str:
+    return (f"n_exact:bigint,n_pq:bigint,n_{side}:bigint,"
+            f"recall_pq:double,recall_{side}:double")
+
+
+# Output column names in order, with their types, of the queries built
+# on the shared per-query top-k, ADC scorer and recall audit. The
+# oracle comparison sorts columns by name, so only this pin notices a
+# reordered row.
+SCHEMAS = {
+    "sim_cosine_topk": _TOPK,
+    "sim_cosine_topk_filtered": _TOPK,
+    "sim_cosine_topk_lsh": _TOPK,
+    "sim_cosine_topk_ivf": _TOPK,
+    "sim_cosine_topk_quantized": ("query_id:bigint,cand_id:bigint,"
+                                  "q_cosine:double,cosine:double,"
+                                  "rank:bigint"),
+    "sim_mrl_topk": _TOPK,
+    "sim_pq_topk": _ADC_TOPK,
+    "sim_pq_rerank": _TOPK,
+    "sim_pq_trained_topk": _ADC_TOPK,
+    "sim_pq_sampled_topk": _ADC_TOPK,
+    "sim_pq_persisted_topk": _ADC_TOPK,
+    "sim_ivfpq_topk": _TOPK,
+    "sim_lsh_recall": _RECALL,
+    "sim_ivf_recall": _RECALL,
+    "sim_pq_recall": _RECALL,
+    "sim_pq_rerank_recall": _recall_pair("rerank"),
+    "sim_pq_trained_recall": _recall_pair("trained"),
+    "sim_pq_persisted_recall": _recall_pair("served"),
+    "sim_mrl_recall": _RECALL,
+    "sim_ivfpq_recall": _RECALL,
+    "dedup_lsh_recall": _RECALL,
+    "sim_kmeans_step": ("cluster_id:bigint,pos:bigint,n_members:bigint,"
+                        "centroid_val:double"),
+    "dedup_semantic": "vec_id:bigint,cluster_id:bigint,keep:boolean",
+    "rel_bucketed_join": ("c_mktsegment:string,n_orders:bigint,"
+                          "sum_price:double"),
+    "dedup_persisted_lsh_match": ("doc_new:bigint,doc_match:bigint,"
+                                  "jaccard:double"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SCHEMAS))
+def test_output_schema(spark, name):
+    """Schema only: ``.schema`` analyzes the plan and runs no job of
+    its own (a builder's own eager index build aside)."""
+    schema = QUERIES[name](spark, "/root/testdata/sf0.001").schema
+    assert schema.simpleString() == f"struct<{SCHEMAS[name]}>"

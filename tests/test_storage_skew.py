@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from ngrams_collocations_hadoop_spark.operators.skew import salted_join
 from ngrams_collocations_hadoop_spark.plans.checks import physical_plan
 from ngrams_collocations_hadoop_spark.sources.storage import (
-    read_table, write_bucketed, write_partitioned,
+    write_bucketed, write_partitioned,
 )
 from ngrams_collocations_hadoop_spark.sources.tables import load_table
 
@@ -41,8 +41,8 @@ def test_bucketed_join_has_no_exchange(spark):
                    "b_orders", ["o_orderkey"], 8)
     write_bucketed(li.select("l_orderkey", "l_quantity"),
                    "b_lineitem", ["l_orderkey"], 8)
-    j = read_table(spark, "b_orders").join(
-        read_table(spark, "b_lineitem"),
+    j = spark.table("b_orders").join(
+        spark.table("b_lineitem"),
         F.col("o_orderkey") == F.col("l_orderkey"))
     plan = physical_plan(j)
     assert "Exchange hashpartitioning" not in plan, plan
