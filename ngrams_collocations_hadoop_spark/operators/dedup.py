@@ -370,25 +370,36 @@ def _perms_values_sql() -> str:
                      for p in range(MINHASH_PERMS))
 
 
-# Every stage of the LSH pipeline, mirrored relationally: token hash →
-# per-permutation min (groupBy) → ordered signature list → band keys →
-# band self-join + signature-agreement prefilter → exact-Jaccard
-# verify. Same constants, same integer arithmetic, same md5.
-_MINHASH_LSH_PAIRS_SQL = f"""
+def _lsh_pairs_sql(source: str = "documents", per_row: bool = False
+                   ) -> str:
+    """Every stage of the LSH pipeline over the ``source`` relation,
+    mirrored relationally as CTEs ending in ``lsh_pairs(doc_a, doc_b,
+    jaccard)``: token hash -> per-permutation min (groupBy) -> ordered
+    signature list -> band keys -> band self-join + signature-agreement
+    prefilter -> exact-Jaccard verify. Same constants, same integer
+    arithmetic, same md5.
+
+    Signatures are keyed by doc_id, or with ``per_row`` by each
+    (doc_id, toks) row: Spark signs per row, so under duplicate ids
+    each text keeps its own signature instead of the union of the
+    id's texts. On a corpus satisfying the doc_id PK both keyings give
+    the same pairs."""
+    key = "doc_id, toks" if per_row else "doc_id"
+    return f"""
 d AS (
     SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
-    FROM documents),
-tok AS (SELECT doc_id, unnest(toks) AS t FROM d),
+    FROM {source}),
+tok AS (SELECT {key}, unnest(toks) AS t FROM d),
 th AS (
-    SELECT doc_id,
+    SELECT {key},
            ('0x' || substring(md5(t), 1, 8))::BIGINT AS h
     FROM tok),
-perms(p, a, b) AS (VALUES {{PERMS}}),
+perms(p, a, b) AS (VALUES {_perms_values_sql()}),
 sig_cell AS (
-    SELECT doc_id, p, min((a * h + b) % {MINHASH_MOD}) AS v
-    FROM th CROSS JOIN perms GROUP BY doc_id, p),
+    SELECT {key}, p, min((a * h + b) % {MINHASH_MOD}) AS v
+    FROM th CROSS JOIN perms GROUP BY {key}, p),
 sigs AS (
-    SELECT doc_id, list(v ORDER BY p) AS sig FROM sig_cell GROUP BY doc_id),
+    SELECT doc_id, list(v ORDER BY p) AS sig FROM sig_cell GROUP BY {key}),
 bands AS (
     SELECT doc_id, sig, b AS band_id,
            list_reduce(list_prepend(0::BIGINT,
@@ -412,62 +423,16 @@ lsh_pairs AS (
     FROM cand
     JOIN d da ON da.doc_id = cand.doc_a
     JOIN d db ON db.doc_id = cand.doc_b)
-""".replace("{PERMS}", _perms_values_sql())
+"""
 
-# The registry query's DEDICATED oracle (not the shared fragment):
-# signatures are computed per (doc_id, toks) ROW — Spark's signature
-# is a per-row expression, so under duplicate ids each text keeps its
-# own signature instead of the GROUP BY doc_id union the shared
-# fragment computes — and the final SELECT aggregates the verified
-# pair rows to max(jaccard), mirroring q_dedup_minhash_lsh's total
-# form. On a PK-satisfying corpus both changes are identities, so the
-# shared fragment's composed consumers are unaffected.
-_MINHASH_LSH_ROW_PAIRS_SQL = f"""
-d AS (
-    SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
-    FROM documents),
-tok AS (SELECT doc_id, toks, unnest(toks) AS t FROM d),
-th AS (
-    SELECT doc_id, toks,
-           ('0x' || substring(md5(t), 1, 8))::BIGINT AS h
-    FROM tok),
-perms(p, a, b) AS (VALUES {{PERMS}}),
-sig_cell AS (
-    SELECT doc_id, toks, p, min((a * h + b) % {MINHASH_MOD}) AS v
-    FROM th CROSS JOIN perms GROUP BY doc_id, toks, p),
-sigs AS (
-    SELECT doc_id, list(v ORDER BY p) AS sig
-    FROM sig_cell GROUP BY doc_id, toks),
-bands AS (
-    SELECT doc_id, sig, b AS band_id,
-           list_reduce(list_prepend(0::BIGINT,
-               sig[(b * {LSH_ROWS} + 1):(b * {LSH_ROWS} + {LSH_ROWS})]),
-               (acc, x) -> (acc * {BAND_HASH_PRIME} + x)
-                           % {MINHASH_MOD}) AS band_hash
-    FROM sigs, unnest(range(0, {LSH_BANDS})) AS r(b)),
-cand AS (
-    SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-    FROM bands x JOIN bands y
-      ON x.band_id = y.band_id AND x.band_hash = y.band_hash
-     AND x.doc_id < y.doc_id
-    WHERE len(list_filter(range(1, {MINHASH_PERMS} + 1),
-                          i -> x.sig[i] = y.sig[i]))
-          >= {int(SIG_ESTIMATE_CUTOFF * MINHASH_PERMS)}),
-lsh_row_pairs AS (
-    SELECT doc_a, doc_b,
-           len(list_intersect(da.toks, db.toks))::DOUBLE
-             / (len(da.toks) + len(db.toks)
-                - len(list_intersect(da.toks, db.toks))) AS jaccard
-    FROM cand
-    JOIN d da ON da.doc_id = cand.doc_a
-    JOIN d db ON db.doc_id = cand.doc_b)
-""".replace("{PERMS}", _perms_values_sql())
 
+# The registry query signs per row and aggregates the verified pair
+# rows to max(jaccard), mirroring q_dedup_minhash_lsh's total form.
 ORACLE_DEDUP_MINHASH_LSH = f"""
-WITH {_MINHASH_LSH_ROW_PAIRS_SQL}
+WITH {_lsh_pairs_sql(per_row=True)}
 SELECT doc_a, doc_b,
-       max(CASE WHEN abs((jaccard)) < 4e9 THEN floor((jaccard) * 1e6 + 0.5E0) / 1e6 ELSE (jaccard) END) AS jaccard
-FROM lsh_row_pairs WHERE jaccard >= {JACCARD_THRESHOLD}
+       max({ieee_round_sql('jaccard')}) AS jaccard
+FROM lsh_pairs WHERE jaccard >= {JACCARD_THRESHOLD}
 GROUP BY 1, 2
 """
 
@@ -872,18 +837,21 @@ def q_dedup_persisted_lsh_match(spark: SparkSession, sf_dir: str
 
 # The incremental output is exactly the full pair list restricted to
 # pairs touching the new slice, re-projected so the new id comes first
-# (for new×new pairs, the full list's doc_a < doc_b ordering is kept).
-ORACLE_DEDUP_INCREMENTAL_LSH = f"""
-WITH {_MINHASH_LSH_PAIRS_SQL}
-SELECT CASE WHEN doc_a % {NEW_BATCH_MOD} = 0 THEN doc_a ELSE doc_b END
+# (for new×new pairs, the full list's doc_a < doc_b ordering is kept):
+# the projection over an ``_lsh_pairs_sql`` fragment's ``lsh_pairs``.
+_NEW_FIRST_SQL = f"""SELECT CASE WHEN doc_a % {NEW_BATCH_MOD} = 0 THEN doc_a ELSE doc_b END
            AS doc_new,
        CASE WHEN doc_a % {NEW_BATCH_MOD} = 0 THEN doc_b ELSE doc_a END
            AS doc_match,
-       CASE WHEN abs((jaccard)) < 4e9 THEN floor((jaccard) * 1e6 + 0.5E0) / 1e6 ELSE (jaccard) END AS jaccard
+       {ieee_round_sql('jaccard')} AS jaccard
 FROM lsh_pairs
 WHERE jaccard >= {JACCARD_THRESHOLD}
   AND (doc_a % {NEW_BATCH_MOD} = 0 OR doc_b % {NEW_BATCH_MOD} = 0)
 """
+
+ORACLE_DEDUP_INCREMENTAL_LSH = f"""
+WITH {_lsh_pairs_sql()}
+{_NEW_FIRST_SQL}"""
 
 # The persisted-index lifecycle produces the same pair set as the
 # in-query incremental match — the index contents are identical, only
@@ -1074,21 +1042,75 @@ WHERE cosine >= {COSINE_DUP_THRESHOLD}
 """
 
 
+# --- the near-dup graph: one edge relation per source --------------------
+# Every graph operator reads directed ``(src, dst)`` edges, src < dst,
+# from one of two sources: the exact-Jaccard pairs (quadratic in a
+# block; the oracle baseline) or the MinHash-LSH verified pairs (the
+# scale path). The oracles read the same relation as an ``edges(src,
+# dst)`` CTE from ``_EXACT_EDGES_SQL`` or ``_lsh_edges_sql``.
+
+def _edges(pairs: DataFrame) -> DataFrame:
+    """A (doc_a, doc_b) pair list as the graph's (src, dst) edges."""
+    return pairs.select(F.col("doc_a").alias("src"),
+                        F.col("doc_b").alias("dst"))
+
+
+def _exact_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _edges(q_dedup_ngram_jaccard(spark, sf_dir))
+
+
+def _lsh_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _edges(_minhash_lsh_pair_rows(spark, sf_dir))
+
+
+_EXACT_EDGES_SQL = f"""blocked AS (
+    SELECT doc_id, lang, n_chars // 100 AS len_bucket,
+           list_distinct(string_split(text, ' ')) AS toks
+    FROM documents),
+edges AS (
+    SELECT a.doc_id AS src, b.doc_id AS dst
+    FROM blocked a JOIN blocked b
+      ON a.lang = b.lang AND a.len_bucket = b.len_bucket
+     AND a.doc_id < b.doc_id
+    WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
+            / len(list_distinct(list_concat(a.toks, b.toks)))
+          >= {JACCARD_THRESHOLD})"""
+
+
+def _lsh_edges_sql(keep: str = "", materialized: bool = False) -> str:
+    """The LSH pairs and their ``edges`` CTE. ``keep`` adds conditions
+    to the edge filter; ``materialized`` keeps DuckDB from inlining the
+    LSH pipeline into each of several readers of ``edges``."""
+    mat = "MATERIALIZED " if materialized else ""
+    return f"""{_lsh_pairs_sql()},
+edges AS {mat}(
+    SELECT doc_a AS src, doc_b AS dst FROM lsh_pairs
+    WHERE jaccard >= {JACCARD_THRESHOLD}{keep})"""
+
+
+def _bi_sql(materialized: bool = False) -> str:
+    """``bi(n, m)``: every edge in both directions, the SQL twin of
+    ``_both_ways``."""
+    mat = "MATERIALIZED " if materialized else ""
+    return f"""bi AS {mat}(
+    SELECT src AS n, dst AS m FROM edges
+    UNION ALL SELECT dst, src FROM edges)"""
+
+
 # --- shared scaffold of the iterative graph operators -------------------
 
 EDGES_PER_PARTITION = 500_000   # iterative-loop shuffle sizing target
 JUMP_HOPS = 3                   # pointer jumps per round (path compression)
 
 
-def _graph_edges(edges: DataFrame, src: str, dst: str
-                 ) -> tuple[DataFrame, int]:
-    """Setup shared by the iterative graph operators (components, star
-    contraction, label propagation, PageRank, k-core). Returns
-    ``(e, parts)``: the checkpointed DIRECTED edge list ``e`` as
-    (n, m), and the shuffle width ``parts`` that a sized loop places in
-    its own plan through ``_sized`` ahead of its per-round aggregations
-    (and with ``coalesce(parts)`` on its edge view). PageRank and k-core
-    do not size their loops.
+def _graph_edges(edges: DataFrame) -> tuple[DataFrame, int]:
+    """Setup shared by the graph operators (components, star
+    contraction, label propagation, PageRank, k-core, Adamic-Adar,
+    clustering coefficient). Returns ``(e, parts)``: the checkpointed
+    (src, dst) edge list ``e``, and the shuffle width ``parts`` that a
+    sized loop places in its own plan through ``_sized`` ahead of its
+    per-round aggregations (and with ``coalesce(parts)`` on its edge
+    view). The other operators do not size their plans.
 
     Loops derive their bidirectional view with ``_both_ways(e)`` over
     the checkpoint, never over the raw ``edges``: a
@@ -1109,7 +1131,7 @@ def _graph_edges(edges: DataFrame, src: str, dst: str
     session conf, so concurrent callers on one session never see each
     other's width."""
     obs = Observation()
-    e = (edges.select(F.col(src).alias("n"), F.col(dst).alias("m"))
+    e = (edges.select("src", "dst")
          .observe(obs, F.count(F.lit(1)).alias("n_edges"))
          .localCheckpoint(eager=True))
     parts = int(max(2, min(
@@ -1143,8 +1165,11 @@ def _sized(df: DataFrame, parts: int, *keys: str) -> DataFrame:
 
 
 def _both_ways(e: DataFrame) -> DataFrame:
-    """Every (n, m) edge row plus its reverse (m, n)."""
-    return e.union(e.select(F.col("m").alias("n"), F.col("n").alias("m")))
+    """The adjacency rows (n, m) of the (src, dst) edges: every edge
+    in both directions."""
+    return (e.select(F.col("src").alias("n"), F.col("dst").alias("m"))
+            .union(e.select(F.col("dst").alias("n"),
+                            F.col("src").alias("m"))))
 
 
 def _bounded_rounds(op: str, max_rounds: int):
@@ -1158,8 +1183,7 @@ def _bounded_rounds(op: str, max_rounds: int):
 
 # --- dedup clusters: connected components over near-dup pairs -----------
 
-def connected_components(edges: DataFrame, src: str = "src",
-                         dst: str = "dst", max_rounds: int = 25
+def connected_components(edges: DataFrame, max_rounds: int = 25
                          ) -> tuple[DataFrame, int]:
     """Connected components by min-label propagation WITH pointer
     jumping: every node starts as its own label; each round a node
@@ -1194,7 +1218,7 @@ def connected_components(edges: DataFrame, src: str = "src",
     with component = min node id reachable, and rounds is the number
     of rounds this call ran.
     """
-    e, parts = _graph_edges(edges, src, dst)
+    e, parts = _graph_edges(edges)
     bi = _both_ways(e).coalesce(parts)
     label_type = bi.schema["n"].dataType
     for rounds in _bounded_rounds("connected_components", max_rounds):
@@ -1267,8 +1291,7 @@ def connected_components(edges: DataFrame, src: str = "src",
                           F.col("label").alias("component")), rounds)
 
 
-def connected_components_star(edges: DataFrame, src: str = "src",
-                              dst: str = "dst", max_rounds: int = 50
+def connected_components_star(edges: DataFrame, max_rounds: int = 50
                               ) -> tuple[DataFrame, int]:
     """Connected components by alternating large-star / small-star
     contraction (the MapReduce-native formulation from the public
@@ -1295,8 +1318,7 @@ def connected_components_star(edges: DataFrame, src: str = "src",
     id), pinned by an equivalence test; same setup, edge-count shuffle
     sizing and max-rounds guard. Returns ``(components, rounds)`` like
     ``connected_components``."""
-    e, parts = _graph_edges(edges.filter(F.col(src) != F.col(dst)),
-                            src, dst)
+    e, parts = _graph_edges(edges.filter(F.col("src") != F.col("dst")))
     for rounds in _bounded_rounds("connected_components_star", max_rounds):
         # large-star on the bidirectional view
         bi = _both_ways(e)
@@ -1313,11 +1335,12 @@ def connected_components_star(edges: DataFrame, src: str = "src",
         smins = (_sized(onted, parts, "n").groupBy("n")
                  .agg(F.min("m").alias("p")))
         small = _sized(onted.join(smins, on="n")
-                       .select(F.col("m").alias("n"), F.col("p").alias("m"))
-                       .filter(F.col("n") != F.col("m"))
-                       .unionByName(smins.select("n",
-                                                 F.col("p").alias("m"))),
-                       parts, "n").distinct()
+                       .select(F.col("m").alias("src"),
+                               F.col("p").alias("dst"))
+                       .filter(F.col("src") != F.col("dst"))
+                       .unionByName(smins.select(F.col("n").alias("src"),
+                                                 F.col("p").alias("dst"))),
+                       parts, "src").distinct()
         e = small.localCheckpoint(eager=True)
         # exact star-forest test — BOTH properties are required:
         # (a) no target is also a child (no chains), AND (b) every
@@ -1330,29 +1353,25 @@ def connected_components_star(edges: DataFrame, src: str = "src",
         # 143/20,000 random graphs hit it; the fixtures never did).
         # One more round merges the parents, so only the test was
         # wrong, not the contraction.
-        nonstar = (_sized(e.select("m"), parts, "m").distinct()
-                   .join(_sized(e.select(F.col("n").alias("m")),
-                                parts, "m").distinct(), on="m")
+        nonstar = (_sized(e.select("dst"), parts, "dst").distinct()
+                   .join(_sized(e.select(F.col("src").alias("dst")),
+                                parts, "dst").distinct(), on="dst")
                    .count()
-                   + _sized(e, parts, "n").groupBy("n").count()
+                   + _sized(e, parts, "src").groupBy("src").count()
                       .filter(F.col("count") > 1).count())
         if nonstar == 0:
             break
-    children = e.select(F.col("n").alias("node"),
-                        F.col("m").alias("component"))
-    roots = (e.select(F.col("m").alias("node")).distinct()
-             .join(e.select(F.col("n").alias("node")).distinct(),
+    children = e.select(F.col("src").alias("node"),
+                        F.col("dst").alias("component"))
+    roots = (e.select(F.col("dst").alias("node")).distinct()
+             .join(e.select(F.col("src").alias("node")).distinct(),
                    on="node", how="left_anti")
              .withColumn("component", F.col("node")))
     return children.unionByName(roots), rounds
 
 
-def _components_over(edges: DataFrame, engine=None) -> DataFrame:
-    """(doc_a, doc_b) pair list → (doc_id, component_id,
-    component_size). Shared tail of both cluster queries."""
-    comp, _ = (engine or connected_components)(
-        edges.select(F.col("doc_a").alias("src"),
-                     F.col("doc_b").alias("dst")))
+def _component_sizes(comp: DataFrame) -> DataFrame:
+    """(node, component) -> (doc_id, component_id, component_size)."""
     w_size = Window.partitionBy("component")
     return (comp.withColumn(
                 "component_size",
@@ -1362,12 +1381,20 @@ def _components_over(edges: DataFrame, engine=None) -> DataFrame:
                     "component_size"))
 
 
+def _components_over(edges: DataFrame, engine=None) -> DataFrame:
+    """(src, dst) edges -> (doc_id, component_id, component_size): the
+    tail of every cluster query (default engine:
+    ``connected_components``)."""
+    comp, _ = (engine or connected_components)(edges)
+    return _component_sizes(comp)
+
+
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters: connected components over the exact-Jaccard
     pair list (the deterministic, oracle-able edge source), plus each
     cluster's size. This is the step that turns pairwise dedup output
     into keep-one-per-cluster decisions in a real pipeline."""
-    return _components_over(q_dedup_ngram_jaccard(spark, sf_dir))
+    return _components_over(_exact_edges(spark, sf_dir))
 
 
 def q_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1375,7 +1402,7 @@ def q_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     huge-high-diameter-graph alternative adjudicated against the SAME
     oracle as ``dedup_components`` (identical fixpoint: min reachable
     id), so both distributed algorithms carry driver-checked rows."""
-    return _components_over(q_dedup_ngram_jaccard(spark, sf_dir),
+    return _components_over(_exact_edges(spark, sf_dir),
                             engine=connected_components_star)
 
 
@@ -1388,27 +1415,38 @@ def q_dedup_components_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     components) is the one you actually run at scale. With the
     md5+affine LSH now SQL-reproducible, this query has a full oracle
     too: the recursive-CTE clustering over the LSH-pairs SQL."""
-    return _components_over(_minhash_lsh_pair_rows(spark, sf_dir))
+    return _components_over(_lsh_edges(spark, sf_dir))
 
 
-ORACLE_DEDUP_COMPONENTS_LSH = f"""
-WITH RECURSIVE {_MINHASH_LSH_PAIRS_SQL},
-edges AS (
-    SELECT doc_a AS src, doc_b AS dst FROM lsh_pairs
-    WHERE jaccard >= {JACCARD_THRESHOLD}),
-bi AS (
-    SELECT src AS n, dst AS m FROM edges
-    UNION ALL SELECT dst, src FROM edges),
+# The components oracle body over an ``edges`` CTE: ``reach``
+# holds every node r reachable from n, a component is the min reachable
+# id, and _COMPONENT_SIZES_SQL adds each component's size.
+_REACH_SQL = f"""{_bi_sql()},
 reach(n, r) AS (
     SELECT DISTINCT n, n FROM bi
     UNION
-    SELECT bi.n, reach.r FROM bi JOIN reach ON bi.m = reach.n),
+    SELECT bi.n, reach.r FROM bi JOIN reach ON bi.m = reach.n)"""
+
+_COMPONENTS_SQL = f"""{_REACH_SQL},
 comp AS (
-    SELECT n AS doc_id, min(r) AS component_id FROM reach GROUP BY n)
-SELECT doc_id, component_id,
+    SELECT n AS doc_id, min(r) AS component_id FROM reach GROUP BY n)"""
+
+_COMPONENT_SIZES_SQL = """SELECT doc_id, component_id,
        CAST(count(*) OVER (PARTITION BY component_id) AS BIGINT)
            AS component_size
-FROM comp
+FROM comp"""
+
+ORACLE_DEDUP_COMPONENTS = f"""
+WITH RECURSIVE
+{_EXACT_EDGES_SQL},
+{_COMPONENTS_SQL}
+{_COMPONENT_SIZES_SQL}
+"""
+
+ORACLE_DEDUP_COMPONENTS_LSH = f"""
+WITH RECURSIVE {_lsh_edges_sql()},
+{_COMPONENTS_SQL}
+{_COMPONENT_SIZES_SQL}
 """
 
 
@@ -1458,24 +1496,27 @@ def q_dedup_components_incremental(spark: SparkSession,
     the candidate stream that produced it."""
     pairs = _INC_CC_LIVE.pin(_minhash_lsh_pair_rows(spark, sf_dir), spark,
                              corpus_state(sf_dir, spark))
-    new_a = F.col("doc_a") % NEW_BATCH_MOD == 0
-    new_b = F.col("doc_b") % NEW_BATCH_MOD == 0
-    old_pairs = pairs.filter(~new_a & ~new_b)
-    old_comp = _components_over(old_pairs).select("doc_id", "component_id")
-    star = (old_comp.filter(F.col("doc_id") != F.col("component_id"))
+    old_edges, new_edges = _batch_split(_edges(pairs))
+    star = _star_edges(_components_over(old_edges))
+    return (_components_over(star.unionByName(new_edges))
+            .filter(F.col("doc_id") % NEW_BATCH_MOD == 0))
+
+
+def _batch_split(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(pre-batch, batch)``: the edges with neither endpoint in the
+    ingest batch (doc_id % NEW_BATCH_MOD == 0), and the edges touching
+    it."""
+    new_src = F.col("src") % NEW_BATCH_MOD == 0
+    new_dst = F.col("dst") % NEW_BATCH_MOD == 0
+    return edges.filter(~new_src & ~new_dst), edges.filter(new_src | new_dst)
+
+
+def _star_edges(comp: DataFrame) -> DataFrame:
+    """Clusters (doc_id, component_id) contracted to (src, dst) star
+    edges, member -> component label (diameter 1 by construction)."""
+    return (comp.filter(F.col("doc_id") != F.col("component_id"))
             .select(F.col("doc_id").alias("src"),
                     F.col("component_id").alias("dst")))
-    new_edges = (pairs.filter(new_a | new_b)
-                 .select(F.col("doc_a").alias("src"),
-                         F.col("doc_b").alias("dst")))
-    comp, _ = connected_components(star.unionByName(new_edges))
-    w_size = Window.partitionBy("component")
-    return (comp.withColumn("component_size",
-                            F.count(F.lit(1)).over(w_size).cast("long"))
-            .filter(F.col("node") % NEW_BATCH_MOD == 0)
-            .select(F.col("node").alias("doc_id"),
-                    F.col("component").alias("component_id"),
-                    "component_size"))
 
 
 COMPONENTS_TABLE = "ncs_components"   # suffixed per corpus state
@@ -1506,10 +1547,8 @@ def build_components_table(spark: SparkSession, sf_dir: str,
     from ..sources.storage import drop_table_and_location
 
     table = table or components_table(sf_dir, spark)
-    pairs = _minhash_lsh_pair_rows(spark, sf_dir)
-    old_pairs = pairs.filter((F.col("doc_a") % NEW_BATCH_MOD != 0)
-                             & (F.col("doc_b") % NEW_BATCH_MOD != 0))
-    comp = _components_over(old_pairs).select("doc_id", "component_id")
+    old_edges, _ = _batch_split(_lsh_edges(spark, sf_dir))
+    comp = _components_over(old_edges).select("doc_id", "component_id")
     drop_table_and_location(spark, table)
     (comp.write.mode("overwrite").format("parquet").saveAsTable(table))
     return table
@@ -1541,10 +1580,7 @@ def update_components_table(spark: SparkSession, sf_dir: str,
     whole pending batch; default is the full-batch index/in-DAG
     logic below."""
     table = table or components_table(sf_dir, spark)
-    old_comp = spark.table(table)
-    star = (old_comp.filter(F.col("doc_id") != F.col("component_id"))
-            .select(F.col("doc_id").alias("src"),
-                    F.col("component_id").alias("dst")))
+    star = _star_edges(spark.table(table))
     # batch pairs: PREFER the persisted band index when this corpus
     # state has one — the match-only job reads the bucketed table with
     # zero exchange on the index side, so the whole update becomes
@@ -1575,13 +1611,7 @@ def update_components_table(spark: SparkSession, sf_dir: str,
     batch = (batch_pairs
              .select(F.col("doc_new").alias("src"),
                      F.col("doc_match").alias("dst")))
-    comp, _ = connected_components(star.unionByName(batch))
-    w_size = Window.partitionBy("component")
-    return (comp.withColumn("component_size",
-                            F.count(F.lit(1)).over(w_size).cast("long"))
-            .select(F.col("node").alias("doc_id"),
-                    F.col("component").alias("component_id"),
-                    "component_size"))
+    return _components_over(star.unionByName(batch))
 
 
 def q_dedup_components_update(spark: SparkSession,
@@ -1639,49 +1669,17 @@ def refresh_components_table(spark: SparkSession, sf_dir: str,
 
 
 ORACLE_DEDUP_COMPONENTS_INCREMENTAL = f"""
-WITH RECURSIVE {_MINHASH_LSH_PAIRS_SQL},
-edges AS (
-    SELECT doc_a AS src, doc_b AS dst FROM lsh_pairs
-    WHERE jaccard >= {JACCARD_THRESHOLD}),
-bi AS (
-    SELECT src AS n, dst AS m FROM edges
-    UNION ALL SELECT dst, src FROM edges),
-reach(n, r) AS (
-    SELECT DISTINCT n, n FROM bi
-    UNION
-    SELECT bi.n, reach.r FROM bi JOIN reach ON bi.m = reach.n),
-comp AS (
-    SELECT n AS doc_id, min(r) AS component_id FROM reach GROUP BY n)
+WITH RECURSIVE {_lsh_edges_sql()},
+{_COMPONENTS_SQL}
 SELECT doc_id, component_id, component_size FROM (
-    SELECT doc_id, component_id,
-           CAST(count(*) OVER (PARTITION BY component_id) AS BIGINT)
-               AS component_size
-    FROM comp)
+    {_COMPONENT_SIZES_SQL})
 WHERE doc_id % {NEW_BATCH_MOD} = 0
 """
 
 
-# the amortized update emits the FULL post-ingest membership — same
-# CTE pipeline as the incremental oracle, unfiltered
-ORACLE_DEDUP_COMPONENTS_UPDATE = f"""
-WITH RECURSIVE {_MINHASH_LSH_PAIRS_SQL},
-edges AS (
-    SELECT doc_a AS src, doc_b AS dst FROM lsh_pairs
-    WHERE jaccard >= {JACCARD_THRESHOLD}),
-bi AS (
-    SELECT src AS n, dst AS m FROM edges
-    UNION ALL SELECT dst, src FROM edges),
-reach(n, r) AS (
-    SELECT DISTINCT n, n FROM bi
-    UNION
-    SELECT bi.n, reach.r FROM bi JOIN reach ON bi.m = reach.n),
-comp AS (
-    SELECT n AS doc_id, min(r) AS component_id FROM reach GROUP BY n)
-SELECT doc_id, component_id,
-       CAST(count(*) OVER (PARTITION BY component_id) AS BIGINT)
-           AS component_size
-FROM comp
-"""
+# the amortized update emits the FULL post-ingest membership — the
+# incremental oracle unfiltered
+ORACLE_DEDUP_COMPONENTS_UPDATE = ORACLE_DEDUP_COMPONENTS_LSH
 
 
 # --- checked recall for the approximate paths ----------------------------
@@ -1731,28 +1729,16 @@ def recall_audit(exact: DataFrame, keys: list[str],
 
 
 ORACLE_DEDUP_LSH_RECALL = f"""
-WITH {_MINHASH_LSH_PAIRS_SQL},
-db AS (
-    SELECT doc_id, lang, n_chars // 100 AS len_bucket, toks
-    FROM (SELECT doc_id, lang, n_chars,
-                 list_distinct(string_split(text, ' ')) AS toks
-          FROM documents)),
-exact_pairs AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM db a JOIN db b
-      ON a.lang = b.lang AND a.len_bucket = b.len_bucket
-     AND a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
-            / len(list_distinct(list_concat(a.toks, b.toks)))
-          >= {JACCARD_THRESHOLD}),
+WITH {_lsh_pairs_sql()},
+{_EXACT_EDGES_SQL},
 found AS (
     SELECT doc_a, doc_b FROM lsh_pairs
     WHERE jaccard >= {JACCARD_THRESHOLD})
 SELECT CAST(count(*) AS BIGINT) AS n_exact,
        CAST(count(f.doc_a) AS BIGINT) AS n_found,
-       CASE WHEN abs((count(f.doc_a)::DOUBLE / count(*))) < 4e9 THEN floor((count(f.doc_a)::DOUBLE / count(*)) * 1e4 + 0.5E0) / 1e4 ELSE (count(f.doc_a)::DOUBLE / count(*)) END AS recall
-FROM exact_pairs x
-LEFT JOIN found f ON x.doc_a = f.doc_a AND x.doc_b = f.doc_b
+       {ieee_round_sql('count(f.doc_a)::DOUBLE / count(*)', 4)} AS recall
+FROM edges x
+LEFT JOIN found f ON x.src = f.doc_a AND x.dst = f.doc_b
 """
 
 
@@ -1805,41 +1791,11 @@ SELECT TRUE AS lossless,
 """
 
 
-ORACLE_DEDUP_COMPONENTS = f"""
-WITH RECURSIVE
-d AS (
-    SELECT doc_id, lang, n_chars // 100 AS len_bucket,
-           list_distinct(string_split(text, ' ')) AS toks
-    FROM documents),
-edges AS (
-    SELECT a.doc_id AS src, b.doc_id AS dst
-    FROM d a JOIN d b
-      ON a.lang = b.lang AND a.len_bucket = b.len_bucket
-     AND a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
-            / len(list_distinct(list_concat(a.toks, b.toks)))
-          >= {JACCARD_THRESHOLD}),
-bi AS (
-    SELECT src AS n, dst AS m FROM edges
-    UNION ALL SELECT dst, src FROM edges),
-reach(n, r) AS (
-    SELECT DISTINCT n, n FROM bi
-    UNION
-    SELECT bi.n, reach.r FROM bi JOIN reach ON bi.m = reach.n),
-comp AS (
-    SELECT n AS doc_id, min(r) AS component_id FROM reach GROUP BY n)
-SELECT doc_id, component_id,
-       CAST(count(*) OVER (PARTITION BY component_id) AS BIGINT)
-           AS component_size
-FROM comp
-"""
-
-
 # --- keep-one-per-cluster: the dedup decision applied --------------------
 
-def _keep_one_over(docs: DataFrame, comp: DataFrame) -> DataFrame:
-    """Shared tail: drop every clustered document except its cluster
-    keeper (min doc_id = the component id); count survivors per lang.
+def _keep_one(docs: DataFrame, comp: DataFrame) -> DataFrame:
+    """``docs`` without the clustered documents other than each
+    cluster's keeper (min doc_id = the component id).
 
     No broadcast hint on the dropped side: on a real crawl corpus
     near-dup members are commonly 30-50% of ALL documents, so
@@ -1849,8 +1805,14 @@ def _keep_one_over(docs: DataFrame, comp: DataFrame) -> DataFrame:
     small, so nothing is lost in the small-cluster regime."""
     dropped = comp.filter(
         F.col("doc_id") != F.col("component_id")).select("doc_id")
-    return (docs.join(dropped, on="doc_id", how="left_anti")
-            .groupBy("lang")
+    return docs.join(dropped, on="doc_id", how="left_anti")
+
+
+def _keep_one_per_lang(spark: SparkSession, sf_dir: str,
+                       comp: DataFrame) -> DataFrame:
+    """Surviving documents per lang after keep-one over ``comp``."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
+    return (_keep_one(docs, comp).groupBy("lang")
             .agg(F.count(F.lit(1)).alias("n_docs")))
 
 
@@ -1858,8 +1820,8 @@ def q_dedup_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end of the dedup pipeline, over the exact-Jaccard clusters
     (the oracle-able edge source). Non-clustered documents survive
     untouched."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    return _keep_one_over(docs, q_dedup_components(spark, sf_dir))
+    return _keep_one_per_lang(spark, sf_dir,
+                              q_dedup_components(spark, sf_dir))
 
 
 def q_dedup_keep_one_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1867,59 +1829,31 @@ def q_dedup_keep_one_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     source you actually run at 100 TB (band equi-join, no quadratic
     scan). Identical decision tail to ``q_dedup_keep_one``; full DuckDB
     oracle via the recursive-CTE clustering over the LSH-pairs SQL."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    return _keep_one_over(docs, q_dedup_components_lsh(spark, sf_dir))
+    return _keep_one_per_lang(spark, sf_dir,
+                              q_dedup_components_lsh(spark, sf_dir))
 
 
-ORACLE_DEDUP_KEEP_ONE_LSH = f"""
-WITH RECURSIVE {_MINHASH_LSH_PAIRS_SQL},
-edges AS (
-    SELECT doc_a AS src, doc_b AS dst FROM lsh_pairs
-    WHERE jaccard >= {JACCARD_THRESHOLD}),
-bi AS (
-    SELECT src AS n, dst AS m FROM edges
-    UNION ALL SELECT dst, src FROM edges),
-reach(n, r) AS (
-    SELECT DISTINCT n, n FROM bi
-    UNION
-    SELECT bi.n, reach.r FROM bi JOIN reach ON bi.m = reach.n),
+# keep-one over ``reach``: every clustered node but its component's
+# minimum is dropped
+_DROPPED_SQL = f"""{_REACH_SQL},
 dropped AS (
-    SELECT n AS doc_id FROM reach GROUP BY n HAVING n <> min(r))
+    SELECT n AS doc_id FROM reach GROUP BY n HAVING n <> min(r))"""
+
+_KEEP_ONE_SQL = f"""{_DROPPED_SQL}
 SELECT lang, CAST(count(*) AS BIGINT) AS n_docs
 FROM documents
 WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
 GROUP BY lang
 """
 
+ORACLE_DEDUP_KEEP_ONE_LSH = f"""
+WITH RECURSIVE {_lsh_edges_sql()},
+{_KEEP_ONE_SQL}"""
 
 ORACLE_DEDUP_KEEP_ONE = f"""
 WITH RECURSIVE
-d AS (
-    SELECT doc_id, lang, n_chars // 100 AS len_bucket,
-           list_distinct(string_split(text, ' ')) AS toks
-    FROM documents),
-edges AS (
-    SELECT a.doc_id AS src, b.doc_id AS dst
-    FROM d a JOIN d b
-      ON a.lang = b.lang AND a.len_bucket = b.len_bucket
-     AND a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
-            / len(list_distinct(list_concat(a.toks, b.toks)))
-          >= {JACCARD_THRESHOLD}),
-bi AS (
-    SELECT src AS n, dst AS m FROM edges
-    UNION ALL SELECT dst, src FROM edges),
-reach(n, r) AS (
-    SELECT DISTINCT n, n FROM bi
-    UNION
-    SELECT bi.n, reach.r FROM bi JOIN reach ON bi.m = reach.n),
-dropped AS (
-    SELECT n AS doc_id FROM reach GROUP BY n HAVING n <> min(r))
-SELECT lang, CAST(count(*) AS BIGINT) AS n_docs
-FROM documents
-WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
-GROUP BY lang
-"""
+{_EXACT_EDGES_SQL},
+{_KEEP_ONE_SQL}"""
 
 
 # --- PageRank over the dup graph (iterative, still oracle-checkable) ----
@@ -1931,8 +1865,7 @@ PAGERANK_ITERS = 8
 PAGERANK_DAMPING = 0.85
 
 
-def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
-             iters: int = PAGERANK_ITERS) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int = PAGERANK_ITERS) -> DataFrame:
     """Fixed-iteration PageRank on the undirected graph with INTEGER
     micro-unit rank state (``ru`` = rank·1e6, BIGINT). The per-round
     neighbor sum is the hazard: summing float rank/deg contributions
@@ -1954,7 +1887,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     Scale shape: one shuffle per iteration (contribution groupBy), the
     same iterative skeleton as connected_components — lineage truncated
     per round, round count fixed (not data-dependent)."""
-    e, _ = _graph_edges(edges, src, dst)
+    e, _ = _graph_edges(edges)
     bi = _both_ways(e)
     deg = bi.groupBy("n").agg(F.count(F.lit(1)).alias("deg"))
     state = deg.withColumn("ru", F.expr("CAST(1000000 AS BIGINT)")) \
@@ -1978,15 +1911,17 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                         F.expr("CAST(ru AS DOUBLE) / 1e6").alias("rank"))
 
 
+def _doc_pagerank(edges: DataFrame) -> DataFrame:
+    return pagerank(edges).select(
+        F.col("n").alias("doc_id"), F.col("rank").alias("pagerank"))
+
+
 def q_dedup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the exact-Jaccard near-dup graph: rank centrality
     inside duplicate clusters — the principled 'which copy is the
     canonical one' signal (most-connected member), vs. the arbitrary
     min-doc_id keeper."""
-    edges = q_dedup_ngram_jaccard(spark, sf_dir) \
-        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    return pagerank(edges).select(
-        F.col("n").alias("doc_id"), F.col("rank").alias("pagerank"))
+    return _doc_pagerank(_exact_edges(spark, sf_dir))
 
 
 def q_dedup_pagerank_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1995,20 +1930,10 @@ def q_dedup_pagerank_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge source you run at 100 TB (band equi-join candidates, no
     quadratic scan). Full oracle: the pagerank recursive CTE over the
     LSH-pairs SQL."""
-    edges = _minhash_lsh_pair_rows(spark, sf_dir) \
-        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    return pagerank(edges).select(
-        F.col("n").alias("doc_id"), F.col("rank").alias("pagerank"))
+    return _doc_pagerank(_lsh_edges(spark, sf_dir))
 
 
-ORACLE_DEDUP_PAGERANK_LSH = f"""
-WITH RECURSIVE {_MINHASH_LSH_PAIRS_SQL},
-edges AS (
-    SELECT doc_a AS src, doc_b AS dst FROM lsh_pairs
-    WHERE jaccard >= {JACCARD_THRESHOLD}),
-bi AS (
-    SELECT src AS n, dst AS m FROM edges
-    UNION ALL SELECT dst, src FROM edges),
+_PAGERANK_SQL = f"""{_bi_sql()},
 deg AS (SELECT n, count(*)::BIGINT AS deg FROM bi GROUP BY n),
 pr(iter, n, ru) AS (
     SELECT 0, n, CAST(1000000 AS BIGINT) FROM deg
@@ -2025,100 +1950,64 @@ SELECT n AS doc_id, CAST(ru AS DOUBLE) / 1e6 AS pagerank
 FROM pr WHERE iter = {PAGERANK_ITERS}
 """
 
+ORACLE_DEDUP_PAGERANK_LSH = f"""
+WITH RECURSIVE {_lsh_edges_sql()},
+{_PAGERANK_SQL}"""
 
 ORACLE_DEDUP_PAGERANK = f"""
 WITH RECURSIVE
-d AS (
-    SELECT doc_id, lang, n_chars // 100 AS len_bucket,
-           list_distinct(string_split(text, ' ')) AS toks
-    FROM documents),
-edges AS (
-    SELECT a.doc_id AS src, b.doc_id AS dst
-    FROM d a JOIN d b
-      ON a.lang = b.lang AND a.len_bucket = b.len_bucket
-     AND a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
-            / len(list_distinct(list_concat(a.toks, b.toks)))
-          >= {JACCARD_THRESHOLD}),
-bi AS (
-    SELECT src AS n, dst AS m FROM edges
-    UNION ALL SELECT dst, src FROM edges),
-deg AS (SELECT n, count(*)::BIGINT AS deg FROM bi GROUP BY n),
-pr(iter, n, ru) AS (
-    SELECT 0, n, CAST(1000000 AS BIGINT) FROM deg
-    UNION ALL
-    SELECT pr.iter + 1, bi.n,
-           CAST(floor(150000.0E0 + {PAGERANK_DAMPING}
-                * (CAST(sum(CAST(CAST(floor(CAST(pr.ru AS DOUBLE) * 1e6
-                     / dg.deg) AS BIGINT) AS HUGEINT)) AS DOUBLE) / 1e6)
-                + 0.5E0) AS BIGINT)
-    FROM pr JOIN bi ON bi.m = pr.n JOIN deg dg ON dg.n = pr.n
-    WHERE pr.iter < {PAGERANK_ITERS}
-    GROUP BY bi.n, pr.iter)
-SELECT n AS doc_id, CAST(ru AS DOUBLE) / 1e6 AS pagerank
-FROM pr WHERE iter = {PAGERANK_ITERS}
-"""
+{_EXACT_EDGES_SQL},
+{_PAGERANK_SQL}"""
 
 
 # --- triangle enumeration over the near-dup graph -----------------------
+
+def _triangles(edges: DataFrame) -> DataFrame:
+    """(a, b, c) once per triangle a < b < c of the oriented (src < dst)
+    edges: the standard two-join enumeration, edges ab ⋈ bc on b, then
+    ⋈ ac on (a, c). Two shuffles; at scale you'd pre-filter to nodes
+    with degree ≥ 2 and orient by degree (the standard compact-forward
+    optimization) — same plan shape, smaller intermediate."""
+    ab = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    bc = edges.select(F.col("src").alias("b"), F.col("dst").alias("c"))
+    ac = edges.select(F.col("src").alias("a"), F.col("dst").alias("c"))
+    return ab.join(bc, on="b").join(ac, on=["a", "c"]) \
+        .select("a", "b", "c")
+
 
 def q_dedup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangles in the exact-Jaccard near-dup graph — the densest
     structures connected components cannot see (a component says
     "linked somehow"; a triangle says "mutually near-identical", the
     signal for collapsing a whole group to one representative without
-    transitive-chain false merges).
-
-    Standard two-join enumeration over the oriented edge list
-    (doc_a < doc_b everywhere, so each triangle a<b<c is produced
-    exactly once): edges ab ⋈ bc on b, then ⋈ ac on (a, c). Two
-    shuffles; at scale you'd pre-filter to nodes with degree ≥ 2 and
-    orient by degree (the standard compact-forward optimization) —
-    same plan shape, smaller intermediate."""
-    e = q_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    ab = e.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    bc = e.select(F.col("doc_a").alias("b"), F.col("doc_b").alias("c"))
-    ac = e.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("c"))
-    return ab.join(bc, on="b").join(ac, on=["a", "c"]) \
-        .select("a", "b", "c")
-
-
-ORACLE_DEDUP_TRIANGLES = f"""
-WITH edges AS (
-    SELECT doc_a, doc_b FROM ({ORACLE_DEDUP_NGRAM_JACCARD})),
-ab AS (SELECT doc_a AS a, doc_b AS b FROM edges),
-bc AS (SELECT doc_a AS b, doc_b AS c FROM edges),
-ac AS (SELECT doc_a AS a, doc_b AS c FROM edges)
-SELECT ab.a, ab.b, bc.c
-FROM ab JOIN bc ON ab.b = bc.b
-        JOIN ac ON ab.a = ac.a AND bc.c = ac.c
-"""
+    transitive-chain false merges)."""
+    return _triangles(_exact_edges(spark, sf_dir))
 
 
 def q_dedup_triangles_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle enumeration over the MinHash-LSH near-dup graph — the
-    100 TB edge source composed with the same oriented two-join
-    (``q_dedup_minhash_lsh`` emits doc_a < doc_b, so each triangle
-    a<b<c is produced exactly once, as in ``q_dedup_triangles``)."""
-    e = _minhash_lsh_pair_rows(spark, sf_dir).select("doc_a", "doc_b")
-    ab = e.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    bc = e.select(F.col("doc_a").alias("b"), F.col("doc_b").alias("c"))
-    ac = e.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("c"))
-    return ab.join(bc, on="b").join(ac, on=["a", "c"]) \
-        .select("a", "b", "c")
+    100 TB edge source composed with the same oriented two-join (the
+    LSH pairs have doc_a < doc_b, so each triangle a<b<c is produced
+    exactly once, as in ``q_dedup_triangles``)."""
+    return _triangles(_lsh_edges(spark, sf_dir))
 
+
+# the SQL twin of ``_triangles`` over the ``edges`` CTE
+_TRIANGLES_SQL = """tri AS (
+    SELECT ab.src AS a, ab.dst AS b, bc.dst AS c
+    FROM edges ab JOIN edges bc ON ab.dst = bc.src
+    JOIN edges ac ON ab.src = ac.src AND bc.dst = ac.dst)"""
+
+ORACLE_DEDUP_TRIANGLES = f"""
+WITH {_EXACT_EDGES_SQL},
+{_TRIANGLES_SQL}
+SELECT a, b, c FROM tri
+"""
 
 ORACLE_DEDUP_TRIANGLES_LSH = f"""
-WITH {_MINHASH_LSH_PAIRS_SQL},
-edges AS (
-    SELECT doc_a, doc_b FROM lsh_pairs
-    WHERE jaccard >= {JACCARD_THRESHOLD}),
-ab AS (SELECT doc_a AS a, doc_b AS b FROM edges),
-bc AS (SELECT doc_a AS b, doc_b AS c FROM edges),
-ac AS (SELECT doc_a AS a, doc_b AS c FROM edges)
-SELECT ab.a, ab.b, bc.c
-FROM ab JOIN bc ON ab.b = bc.b
-        JOIN ac ON ab.a = ac.a AND bc.c = ac.c
+WITH {_lsh_edges_sql()},
+{_TRIANGLES_SQL}
+SELECT a, b, c FROM tri
 """
 
 
@@ -2220,15 +2109,14 @@ HAVING count(*) > 1
 # --- label-propagation communities over the near-dup graph --------------
 
 LP_ITERS = 4            # fixed synchronous rounds — deterministic output
-# argmax key encodes (count DESC, label ASC) as one exact integer:
-# cnt * 2^32 - lbl. Labels are doc_ids < 2^32 in any fixture/probe, and
-# counts are bounded by degree, so the key fits BIGINT exactly in both
-# engines — no struct-ordered arg_min needed (DuckDB lacks it).
-LP_KEY = 1 << 32
+# The oracle's argmax key encodes (count DESC, label ASC) as one exact
+# HUGEINT, cnt * 2^64 - lbl: the gap between two counts outweighs any
+# difference of two BIGINT labels. DuckDB's arg_max has no struct
+# ordering; the Spark side orders by the struct (-cnt, lbl) instead.
+LP_KEY = 1 << 64
 
 
-def label_propagation(edges: DataFrame, src: str = "src",
-                      dst: str = "dst", iters: int = LP_ITERS) -> DataFrame:
+def label_propagation(edges: DataFrame, iters: int = LP_ITERS) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007): every node
     starts with its own label; each round a node adopts the most
     frequent label among its neighbors (deterministic tiebreak: min
@@ -2251,7 +2139,7 @@ def label_propagation(edges: DataFrame, src: str = "src",
     is pure overhead. Where ``_sized`` sizes, one repartition on n
     serves both aggregations, which key on n.
     """
-    e, parts = _graph_edges(edges, src, dst)
+    e, parts = _graph_edges(edges)
     bi = _both_ways(e).coalesce(parts)
     state = (bi.select("n").distinct()
              .withColumn("lbl", F.col("n")).localCheckpoint(eager=True))
@@ -2261,7 +2149,7 @@ def label_propagation(edges: DataFrame, src: str = "src",
         cnt = (_sized(nbr, parts, "n").groupBy("n", "lbl")
                .agg(F.count(F.lit(1)).alias("cnt")))
         state = (cnt.groupBy("n")
-                 .agg(F.expr(f"max_by(lbl, cnt * {LP_KEY}L - lbl)")
+                 .agg(F.min_by("lbl", F.struct(-F.col("cnt"), "lbl"))
                       .alias("lbl"))
                  .localCheckpoint(eager=True))
     return state
@@ -2271,9 +2159,7 @@ def q_dedup_communities_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label-propagation communities over the MinHash-LSH near-dup
     graph — the 100 TB edge source (band equi-join candidates), the
     community granularity for canonical-copy selection."""
-    edges = _minhash_lsh_pair_rows(spark, sf_dir) \
-        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    return label_propagation(edges).select(
+    return label_propagation(_lsh_edges(spark, sf_dir)).select(
         F.col("n").alias("doc_id"), F.col("lbl").alias("community"))
 
 
@@ -2287,22 +2173,17 @@ def _lp_oracle_iterations(iters: int = LP_ITERS) -> str:
             f"cnt{i} AS (SELECT bi.n, l.lbl, count(*) AS cnt "
             f"FROM bi JOIN lab{i-1} l ON l.n = bi.m GROUP BY bi.n, l.lbl)")
         parts.append(
-            f"lab{i} AS (SELECT n, arg_max(lbl, cnt * {LP_KEY} - lbl) "
-            f"AS lbl FROM cnt{i} GROUP BY n)")
+            f"lab{i} AS (SELECT n, arg_max(lbl, cnt::HUGEINT * {LP_KEY} "
+            f"- lbl) AS lbl FROM cnt{i} GROUP BY n)")
     return ",\n".join(parts)
 
 
+# bi is read by every unrolled iteration; without MATERIALIZED DuckDB
+# inlines the whole LSH pipeline into each one (measured 170 s -> 3 s
+# at sf0.1). Mirrors the Spark side's checkpointed edges.
 ORACLE_DEDUP_COMMUNITIES_LSH = f"""
-WITH {_MINHASH_LSH_PAIRS_SQL},
-edges AS (
-    SELECT doc_a AS src, doc_b AS dst FROM lsh_pairs
-    WHERE jaccard >= {JACCARD_THRESHOLD}),
-bi AS MATERIALIZED (
-    -- bi is read by every unrolled iteration; without the hint DuckDB
-    -- inlines the whole LSH pipeline into each one (measured 170 s ->
-    -- 3 s at sf0.1). Mirrors the Spark side's localCheckpoint of bi.
-    SELECT src AS n, dst AS m FROM edges
-    UNION ALL SELECT dst, src FROM edges),
+WITH {_lsh_edges_sql()},
+{_bi_sql(materialized=True)},
 {_lp_oracle_iterations()}
 SELECT n AS doc_id, lbl AS community FROM lab{LP_ITERS}
 """
@@ -2328,34 +2209,30 @@ def q_dedup_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     here has none. Determinism: each 1/ln term is floor-quantized to
     integer 1e-12 units and summed exactly; a wedge center has deg ≥ 2,
     so ln(deg) > 0 always."""
-    edges = _minhash_lsh_pair_rows(spark, sf_dir) \
-        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    return adamic_adar(edges)
+    return adamic_adar(_lsh_edges(spark, sf_dir))
 
 
 def adamic_adar(edges: DataFrame) -> DataFrame:
     """AA scores for all non-edge pairs with ≥1 common neighbor, given
-    an undirected edge list (a < b). See q_dedup_link_prediction for
-    the shape discussion."""
-    # Materialize the edge source FIRST: it fans out into deg, both
-    # wedge sides, and the final anti-join — a lazy source (the full
-    # LSH pipeline for q_dedup_link_prediction) would otherwise be
-    # recomputed ~4x in one job (the measured 2x-inside-checkpoint
-    # hazard from connected_components, squared here).
-    edges = edges.localCheckpoint(eager=True)
-    bi = edges.union(edges.select(F.col("b").alias("a"),
-                                  F.col("a").alias("b")))
-    deg = bi.groupBy(F.col("a").alias("z")).agg(F.count(F.lit(1)).alias("deg"))
-    l = bi.select(F.col("a").alias("z"), F.col("b").alias("u"))
-    r = bi.select(F.col("a").alias("z"), F.col("b").alias("v"))
+    oriented (src < dst) edges. See q_dedup_link_prediction for the
+    shape discussion."""
+    # The checkpoint materializes the edge source FIRST: it fans out
+    # into deg, both wedge sides, and the final anti-join — a lazy
+    # source (the full LSH pipeline for q_dedup_link_prediction) would
+    # otherwise be recomputed ~4x in one job.
+    e, _ = _graph_edges(edges)
+    bi = _both_ways(e)
+    deg = bi.groupBy(F.col("n").alias("z")).agg(F.count(F.lit(1)).alias("deg"))
+    l = bi.select(F.col("n").alias("z"), F.col("m").alias("u"))
+    r = bi.select(F.col("n").alias("z"), F.col("m").alias("v"))
     wedges = (l.join(r, "z").filter(F.col("u") < F.col("v"))
               .join(deg, "z"))
     scored = (wedges.groupBy("u", "v")
               .agg(F.count(F.lit(1)).alias("n_common"),
                    F.sum(F.floor(F.lit(1e12) / F.log("deg"))
                          .cast("decimal(38,0)")).alias("aa_int")))
-    return (scored.join(edges, on=[(scored.u == edges.a)
-                                   & (scored.v == edges.b)], how="left_anti")
+    return (scored.join(e, on=[(scored.u == e.src) & (scored.v == e.dst)],
+                        how="left_anti")
             .select(F.col("u").alias("doc_a"), F.col("v").alias("doc_b"),
                     "n_common",
                     F.expr("floor((CAST(aa_int AS DOUBLE) + 500000) "
@@ -2364,16 +2241,13 @@ def adamic_adar(edges: DataFrame) -> DataFrame:
 
 
 ORACLE_DEDUP_LINK_PREDICTION = f"""
-WITH {_MINHASH_LSH_PAIRS_SQL},
-edges AS (
-    SELECT doc_a AS a, doc_b AS b FROM lsh_pairs
-    WHERE jaccard >= {JACCARD_THRESHOLD}),
-bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges),
-deg AS (SELECT a AS z, count(*) AS deg FROM bi GROUP BY a),
+WITH {_lsh_edges_sql()},
+{_bi_sql()},
+deg AS (SELECT n AS z, count(*) AS deg FROM bi GROUP BY n),
 wedges AS (
-    SELECT l.b AS u, r.b AS v, d.deg
-    FROM bi l JOIN bi r ON l.a = r.a AND l.b < r.b
-    JOIN deg d ON d.z = l.a),
+    SELECT l.m AS u, r.m AS v, d.deg
+    FROM bi l JOIN bi r ON l.n = r.n AND l.m < r.m
+    JOIN deg d ON d.z = l.n),
 scored AS (
     SELECT u, v, count(*) AS n_common,
            sum(CAST(floor(1e12 / ln(deg)) AS HUGEINT)) AS aa_int
@@ -2382,7 +2256,7 @@ SELECT u AS doc_a, v AS doc_b, n_common,
        floor((CAST(aa_int AS DOUBLE) + 500000) / 1000000) / 1e6
            AS aa_score
 FROM scored s
-WHERE NOT EXISTS (SELECT 1 FROM edges e WHERE e.a = s.u AND e.b = s.v)
+WHERE NOT EXISTS (SELECT 1 FROM edges e WHERE e.src = s.u AND e.dst = s.v)
 """
 
 
@@ -2406,7 +2280,7 @@ def k_core(edges: DataFrame, k: int = KCORE_K,
     (checkpointed, shrinking) node set plus a degree aggregation —
     O(rounds) passes over edges, no lineage growth, node set always
     the small side. Returns (n, core_degree) for surviving nodes."""
-    e, _ = _graph_edges(edges, "a", "b")
+    e, _ = _graph_edges(edges)
     bi = _both_ways(e)
     nodes = bi.select("n").distinct().localCheckpoint()
     for _ in range(rounds):
@@ -2430,19 +2304,14 @@ def q_dedup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     treatment (one canonical kept, rest dropped wholesale) rather than
     pairwise dedup. Composes the scale edge source with the peeling
     loop; oracle = the same rounds unrolled over the LSH-pairs SQL."""
-    edges = _minhash_lsh_pair_rows(spark, sf_dir) \
-        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    return k_core(edges).select(F.col("n").alias("doc_id"), "core_degree")
+    return k_core(_lsh_edges(spark, sf_dir)).select(
+        F.col("n").alias("doc_id"), "core_degree")
 
 
 def _kcore_oracle() -> str:
     head = f"""
-WITH {_MINHASH_LSH_PAIRS_SQL},
-edges AS (
-    SELECT doc_a AS a, doc_b AS b FROM lsh_pairs
-    WHERE jaccard >= {JACCARD_THRESHOLD}),
-bi AS MATERIALIZED (SELECT a AS n, b AS m FROM edges
-       UNION ALL SELECT b, a FROM edges),
+WITH {_lsh_edges_sql()},
+{_bi_sql(materialized=True)},
 n0 AS MATERIALIZED (SELECT DISTINCT n FROM bi)"""
     body = ""
     prev = "n0"
@@ -2484,23 +2353,17 @@ def q_dedup_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     key. All counts are integers; cc is one derived division — no
     float accumulation. Nodes with deg < 2 are excluded (cc
     undefined)."""
-    e = (_minhash_lsh_pair_rows(spark, sf_dir)
-         .select("doc_a", "doc_b").localCheckpoint())
-    return clustering_coefficient(e)
+    return clustering_coefficient(_lsh_edges(spark, sf_dir))
 
 
-def clustering_coefficient(e: DataFrame) -> DataFrame:
-    """cc per node of an oriented (doc_a < doc_b) edge list; see
+def clustering_coefficient(edges: DataFrame) -> DataFrame:
+    """cc per node of oriented (src < dst) edges; see
     q_dedup_clustering_coeff for the shape discussion."""
-    ab = e.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    bc = e.select(F.col("doc_a").alias("b"), F.col("doc_b").alias("c"))
-    ac = e.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("c"))
-    tri = ab.join(bc, on="b").join(ac, on=["a", "c"])
-    tcount = (tri.select(F.explode(F.array("a", "b", "c")).alias("n"))
+    e, _ = _graph_edges(edges)
+    tcount = (_triangles(e)
+              .select(F.explode(F.array("a", "b", "c")).alias("n"))
               .groupBy("n").agg(F.count(F.lit(1)).alias("t")))
-    deg = (e.select(F.col("doc_a").alias("n"))
-           .union(e.select(F.col("doc_b").alias("n")))
-           .groupBy("n").agg(F.count(F.lit(1)).alias("deg")))
+    deg = _both_ways(e).groupBy("n").agg(F.count(F.lit(1)).alias("deg"))
     return (deg.filter(F.col("deg") >= 2)
             .join(tcount, on="n", how="left")
             .select(F.col("n").alias("doc_id"),
@@ -2513,16 +2376,8 @@ def clustering_coefficient(e: DataFrame) -> DataFrame:
 
 
 ORACLE_DEDUP_CLUSTERING_COEFF = f"""
-WITH {_MINHASH_LSH_PAIRS_SQL},
-e AS MATERIALIZED (
-    SELECT doc_a, doc_b FROM lsh_pairs
-    WHERE jaccard >= {JACCARD_THRESHOLD}),
-tri AS (
-    SELECT ab.a, ab.b, bc.c
-    FROM (SELECT doc_a AS a, doc_b AS b FROM e) ab
-    JOIN (SELECT doc_a AS b, doc_b AS c FROM e) bc ON ab.b = bc.b
-    JOIN (SELECT doc_a AS a, doc_b AS c FROM e) ac
-      ON ab.a = ac.a AND bc.c = ac.c),
+WITH {_lsh_edges_sql(materialized=True)},
+{_TRIANGLES_SQL},
 tc AS (
     SELECT n, count(*) AS t FROM (
         SELECT a AS n FROM tri UNION ALL SELECT b FROM tri
@@ -2530,11 +2385,11 @@ tc AS (
     GROUP BY n),
 deg AS (
     SELECT n, count(*) AS deg FROM (
-        SELECT doc_a AS n FROM e UNION ALL SELECT doc_b FROM e)
+        SELECT src AS n FROM edges UNION ALL SELECT dst FROM edges)
     GROUP BY n)
 SELECT deg.n AS doc_id, CAST(deg AS BIGINT) AS degree,
        CAST(coalesce(t, 0) AS BIGINT) AS triangles,
-       CASE WHEN abs((coalesce(t, 0) * 2 / CAST(deg * (deg - 1) AS DOUBLE))) < 4e9 THEN floor((coalesce(t, 0) * 2 / CAST(deg * (deg - 1) AS DOUBLE)) * 1e6 + 0.5E0) / 1e6 ELSE (coalesce(t, 0) * 2 / CAST(deg * (deg - 1) AS DOUBLE)) END
+       {ieee_round_sql('coalesce(t, 0) * 2 / CAST(deg * (deg - 1) AS DOUBLE)')}
            AS clustering_coeff
 FROM deg LEFT JOIN tc ON deg.n = tc.n
 WHERE deg >= 2

@@ -24,8 +24,12 @@ from ..sources.tables import load_table
 from ..functions.exact import ieee_round, ieee_round_sql, uavg
 from .dedup import (
     JACCARD_THRESHOLD,
-    _MINHASH_LSH_PAIRS_SQL,
+    _DROPPED_SQL,
     _components_over,
+    _edges,
+    _keep_one,
+    _lsh_edges_sql,
+    _lsh_pairs_sql,
     _minhash_lsh_pair_rows,
 )
 from .textstats import _CORE_STOP_LIST
@@ -93,10 +97,7 @@ def q_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
                    on="doc_a", how="left_semi")
              .join(ids.withColumnRenamed("doc_id", "doc_b"),
                    on="doc_b", how="left_semi"))
-    comp = _components_over(pairs)
-    dropped = comp.filter(
-        F.col("doc_id") != F.col("component_id")).select("doc_id")
-    kept = surv.join(dropped, on="doc_id", how="left_anti")
+    kept = _keep_one(surv, _components_over(_edges(pairs)))
     w = (Window.partitionBy("lang").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     cum = F.sum("n_tokens").over(w)
@@ -108,9 +109,13 @@ def q_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
                  (F.max("bin_id") + 1).cast("long").alias("n_bins")))
 
 
+# dedup runs among the quality survivors q: both endpoints must survive
+_SURVIVOR_EDGES = """
+      AND doc_a IN (SELECT doc_id FROM q)
+      AND doc_b IN (SELECT doc_id FROM q)"""
+
 ORACLE_TRAINING_PREP = f"""
-WITH RECURSIVE {_MINHASH_LSH_PAIRS_SQL},
-dq AS (SELECT doc_id, lang, string_split(text, ' ') AS tokens, text
+WITH RECURSIVE dq AS (SELECT doc_id, lang, string_split(text, ' ') AS tokens, text
        FROM documents),
 q AS (
     SELECT doc_id, lang, CAST(len(tokens) AS BIGINT) AS n_tokens
@@ -118,21 +123,8 @@ q AS (
         SELECT doc_id, lang, tokens,
                {ieee_round_sql(_SCORE_SQL, 6)} AS score
         FROM dq)
-    WHERE score >= {QUALITY_THRESHOLD}),
-edges AS (
-    SELECT doc_a AS src, doc_b AS dst FROM lsh_pairs
-    WHERE jaccard >= {JACCARD_THRESHOLD}
-      AND doc_a IN (SELECT doc_id FROM q)
-      AND doc_b IN (SELECT doc_id FROM q)),
-bi AS (
-    SELECT src AS n, dst AS m FROM edges
-    UNION ALL SELECT dst, src FROM edges),
-reach(n, r) AS (
-    SELECT DISTINCT n, n FROM bi
-    UNION
-    SELECT bi.n, reach.r FROM bi JOIN reach ON bi.m = reach.n),
-dropped AS (
-    SELECT n AS doc_id FROM reach GROUP BY n HAVING n <> min(r)),
+    WHERE score >= {QUALITY_THRESHOLD}),{_lsh_edges_sql(_SURVIVOR_EDGES)},
+{_DROPPED_SQL},
 kept AS (
     SELECT * FROM q WHERE doc_id NOT IN (SELECT doc_id FROM dropped)),
 packed AS (
@@ -286,7 +278,7 @@ def _oracle_ingest() -> str:
     # (DuckDB forbids a CTE shadowing the table it reads, so the CTE
     # needs its own name; the word `documents` appears in the body
     # only as a table reference, asserted by the rebase count below).
-    inner = f"""{_MINHASH_LSH_PAIRS_SQL},
+    inner = f"""{_lsh_pairs_sql()},
 dq AS (SELECT doc_id, lang, string_split(text, ' ') AS tokens, text
        FROM documents),
 q AS (

@@ -1336,14 +1336,12 @@ def q_stream_lsh_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_stream_lsh_ingest() -> str:
     from ..functions.exact import ieee_round_sql
-    from ..operators.dedup import (_MINHASH_LSH_PAIRS_SQL,
-                                   JACCARD_THRESHOLD, NEW_BATCH_MOD)
+    from ..operators.dedup import (_NEW_FIRST_SQL, NEW_BATCH_MOD,
+                                   _lsh_pairs_sql)
     from ..operators.pipeline import QUALITY_THRESHOLD, _SCORE_SQL
 
-    # the incremental-LSH pair fragment over the INGESTED corpus:
-    # pre-batch docs plus only the quality-surviving batch docs
-    pairs = _MINHASH_LSH_PAIRS_SQL.replace("FROM documents",
-                                           "FROM corpus", 1)
+    # the incremental-LSH oracle over the INGESTED corpus: pre-batch
+    # docs plus only the quality-surviving batch docs
     return f"""
 WITH dq AS (SELECT doc_id, lang, string_split(text, ' ') AS tokens, text
             FROM documents),
@@ -1356,16 +1354,8 @@ corpus AS (
     UNION ALL
     SELECT d.* FROM documents d JOIN qsurv USING (doc_id)
     WHERE d.doc_id % {NEW_BATCH_MOD} = 0),
-{pairs}
-SELECT CASE WHEN doc_a % {NEW_BATCH_MOD} = 0 THEN doc_a ELSE doc_b END
-           AS doc_new,
-       CASE WHEN doc_a % {NEW_BATCH_MOD} = 0 THEN doc_b ELSE doc_a END
-           AS doc_match,
-       {ieee_round_sql('jaccard')} AS jaccard
-FROM lsh_pairs
-WHERE jaccard >= {JACCARD_THRESHOLD}
-  AND (doc_a % {NEW_BATCH_MOD} = 0 OR doc_b % {NEW_BATCH_MOD} = 0)
-"""
+{_lsh_pairs_sql("corpus")}
+{_NEW_FIRST_SQL}"""
 
 
 ORACLE_STREAM_LSH_INGEST = _oracle_stream_lsh_ingest()
@@ -1399,7 +1389,7 @@ def q_stream_components_maintain(spark: SparkSession,
     pinned PK error before any stream starts."""
     import tempfile
 
-    from ..operators.dedup import (append_lsh_index,
+    from ..operators.dedup import (_component_sizes, append_lsh_index,
                                    build_components_table,
                                    build_lsh_index, components_table,
                                    match_index_pairs_for_tick,
@@ -1439,8 +1429,6 @@ def q_stream_components_maintain(spark: SparkSession,
      .trigger(availableNow=True)
      .start().awaitTermination())
     spark.catalog.refreshTable(cc_table)
-    w = Window.partitionBy("component_id")
-    return (spark.table(cc_table)
-            .withColumn("component_size",
-                        F.count(F.lit(1)).over(w).cast("long"))
-            .select("doc_id", "component_id", "component_size"))
+    return _component_sizes(spark.table(cc_table).select(
+        F.col("doc_id").alias("node"),
+        F.col("component_id").alias("component")))

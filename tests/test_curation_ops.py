@@ -167,6 +167,29 @@ def test_label_propagation_disjoint_cliques(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 20: 10, 30: 10}
 
 
+def test_label_propagation_majority_over_wide_labels(spark):
+    """The majority label wins for labels of any BIGINT size, on both
+    engines. With B = 2^33, after round 1 node B+100's neighbors carry
+    labels B, B and 6, so round 2 must give it B (2 votes against 1).
+    A key of cnt * 2^32 - lbl ranked 6 first once labels reach 2^32."""
+    import duckdb
+
+    from ngrams_collocations_hadoop_spark.operators.dedup import (
+        _bi_sql, _lp_oracle_iterations, label_propagation)
+
+    big = 1 << 33
+    pairs = [(big + 1, big), (big + 2, big), (big + 100, big + 1),
+             (big + 100, big + 2), (big + 100, 5), (5, 6)]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    got = {r.n: r.lbl for r in label_propagation(edges, iters=2).collect()}
+    assert got[big + 100] == big
+    rows = ", ".join(f"({a}::BIGINT, {b}::BIGINT)" for a, b in pairs)
+    oracle = duckdb.connect().execute(
+        f"WITH edges(src, dst) AS (VALUES {rows}),\n{_bi_sql()},\n"
+        f"{_lp_oracle_iterations(2)}\nSELECT n, lbl FROM lab2").fetchall()
+    assert dict(oracle) == got
+
+
 def test_label_propagation_refines_components(spark):
     """On the sf0.001 LSH graph every community must sit INSIDE one
     connected component (LP refines CC, never merges across it)."""

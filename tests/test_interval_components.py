@@ -210,7 +210,7 @@ def test_adamic_adar_crafted_graph(spark):
 
     from ngrams_collocations_hadoop_spark.operators.dedup import adamic_adar
 
-    path = spark.sql("SELECT col1 AS a, col2 AS b FROM VALUES (1L, 2L), "
+    path = spark.sql("SELECT col1 AS src, col2 AS dst FROM VALUES (1L, 2L), "
                      "(2L, 3L)")
     out = {(r.doc_a, r.doc_b): (r.n_common, r.aa_score)
            for r in adamic_adar(path).collect()}
@@ -218,7 +218,7 @@ def test_adamic_adar_crafted_graph(spark):
     assert out[(1, 3)][0] == 1
     assert abs(out[(1, 3)][1] - 1 / math.log(2)) < 1e-6
 
-    sq = spark.sql("SELECT col1 AS a, col2 AS b FROM VALUES (1L, 2L), "
+    sq = spark.sql("SELECT col1 AS src, col2 AS dst FROM VALUES (1L, 2L), "
                    "(2L, 3L), (3L, 4L), (1L, 4L), (1L, 3L)")
     out = {(r.doc_a, r.doc_b): (r.n_common, r.aa_score)
            for r in adamic_adar(sq).collect()}
@@ -235,7 +235,7 @@ def test_kcore_peels_chain_keeps_clique(spark):
     from ngrams_collocations_hadoop_spark.operators.dedup import k_core
 
     edges = spark.sql(
-        "SELECT col1 AS a, col2 AS b FROM VALUES "
+        "SELECT col1 AS src, col2 AS dst FROM VALUES "
         "(1L,2L),(1L,3L),(1L,4L),(2L,3L),(2L,4L),(3L,4L),"  # K4
         "(4L,5L),(5L,6L),(6L,7L)")                           # chain
     out = {r.n: r.core_degree for r in k_core(edges, k=3).collect()}
@@ -257,19 +257,19 @@ def test_clustering_coefficient_known_graphs(spark):
         clustering_coefficient,
     )
 
-    tri = spark.sql("SELECT col1 AS doc_a, col2 AS doc_b FROM VALUES "
+    tri = spark.sql("SELECT col1 AS src, col2 AS dst FROM VALUES "
                     "(1L,2L),(2L,3L),(1L,3L)")
     out = {r.doc_id: r.clustering_coeff
            for r in clustering_coefficient(tri).collect()}
     assert out == {1: 1.0, 2: 1.0, 3: 1.0}
 
-    path = spark.sql("SELECT col1 AS doc_a, col2 AS doc_b FROM VALUES "
+    path = spark.sql("SELECT col1 AS src, col2 AS dst FROM VALUES "
                      "(1L,2L),(2L,3L)")
     out = {r.doc_id: r.clustering_coeff
            for r in clustering_coefficient(path).collect()}
     assert out == {2: 0.0}
 
-    sq = spark.sql("SELECT col1 AS doc_a, col2 AS doc_b FROM VALUES "
+    sq = spark.sql("SELECT col1 AS src, col2 AS dst FROM VALUES "
                    "(1L,2L),(2L,3L),(3L,4L),(1L,4L),(1L,3L)")
     out = {r.doc_id: r.clustering_coeff
            for r in clustering_coefficient(sq).collect()}

@@ -23,6 +23,10 @@ def test_differential(spark, name):
 _TOPK = "query_id:bigint,cand_id:bigint,cosine:double,rank:bigint"
 _ADC_TOPK = "query_id:bigint,cand_id:bigint,approx_dot:double,rank:bigint"
 _RECALL = "n_exact:bigint,n_found:bigint,recall:double"
+_COMPONENTS = "doc_id:bigint,component_id:bigint,component_size:bigint"
+_KEEP_ONE = "lang:string,n_docs:bigint"
+_PAGERANK = "doc_id:bigint,pagerank:double"
+_TRIANGLES = "a:bigint,b:bigint,c:bigint"
 
 
 def _recall_pair(side: str) -> str:
@@ -31,7 +35,8 @@ def _recall_pair(side: str) -> str:
 
 
 # Output column names in order, with their types, of the queries built
-# on the shared per-query top-k, ADC scorer and recall audit. The
+# on the shared per-query top-k, ADC scorer and recall audit, and of
+# the near-dup graph queries built on the shared edge relation. The
 # oracle comparison sorts columns by name, so only this pin notices a
 # reordered row.
 SCHEMAS = {
@@ -65,6 +70,25 @@ SCHEMAS = {
                           "sum_price:double"),
     "dedup_persisted_lsh_match": ("doc_new:bigint,doc_match:bigint,"
                                   "jaccard:double"),
+    "dedup_components": _COMPONENTS,
+    "dedup_components_star": _COMPONENTS,
+    "dedup_components_lsh": _COMPONENTS,
+    "dedup_components_incremental": _COMPONENTS,
+    "dedup_components_update": _COMPONENTS,
+    "dedup_keep_one": _KEEP_ONE,
+    "dedup_keep_one_lsh": _KEEP_ONE,
+    "dedup_pagerank": _PAGERANK,
+    "dedup_pagerank_lsh": _PAGERANK,
+    "dedup_triangles": _TRIANGLES,
+    "dedup_triangles_lsh": _TRIANGLES,
+    "dedup_clustering_coeff": ("doc_id:bigint,degree:bigint,"
+                               "triangles:bigint,clustering_coeff:double"),
+    "dedup_kcore": "doc_id:bigint,core_degree:bigint",
+    "dedup_communities_lsh": "doc_id:bigint,community:bigint",
+    "dedup_link_prediction": ("doc_a:bigint,doc_b:bigint,n_common:bigint,"
+                              "aa_score:double"),
+    "pipeline_training_prep": ("lang:string,n_docs:bigint,n_tokens:bigint,"
+                               "n_bins:bigint"),
 }
 
 
