@@ -517,9 +517,13 @@ def _batch_index_candidates(spark: SparkSession, new_side: DataFrame,
     """The one LSH band join: equi-join the new side's band rows on the
     index side's, keep the pairs ``keep`` admits, run the
     signature-agreement prefilter INSIDE the join, and dedup the pairs
-    across bands. The survivors are repartitioned round-robin for the
-    verify joins: AQE sizes partitions by shuffle BYTES, and id-pair
-    rows are so small it would funnel them into one or two tasks."""
+    across bands. The dedup reads ONE exchange, a hash repartition on
+    the pair into ``defaultParallelism`` partitions, which both clusters
+    the pairs for the dedup and spreads them over the verify tasks. The
+    count is explicit because AQE sizes partitions by shuffle BYTES, and
+    id-pair rows are so small it would funnel them into one or two
+    tasks; the survivor stream is already prefiltered, so the dedup
+    loses nothing by running after the exchange instead of map-side."""
     sig_match = F.expr(
         "aggregate(zip_with(sig_a, sig_b, "
         "(x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), 0, (a, x) -> a + x) "
@@ -528,8 +532,9 @@ def _batch_index_candidates(spark: SparkSession, new_side: DataFrame,
         new_side.join(index_side, on=["band_id", "band_hash"])
         .filter(keep & sig_match)
         .select("doc_new", "doc_match")
+        .repartition(spark.sparkContext.defaultParallelism,
+                     "doc_new", "doc_match")
         .dropDuplicates(["doc_new", "doc_match"])
-        .repartition(spark.sparkContext.defaultParallelism)
     )
 
 
@@ -648,40 +653,51 @@ def build_lsh_index(spark: SparkSession, sf_dir: str,
     return table
 
 
+def _bucket_layout(spark: SparkSession, table: str
+                   ) -> tuple[int, list[str]]:
+    """(bucket count, column names in order) of a bucketed table, from
+    the session catalog's table metadata: one lookup, no query."""
+    state = spark._jsparkSession.sessionState()
+    meta = state.catalog().getTableMetadata(
+        state.sqlParser().parseTableIdentifier(table))
+    spec = meta.bucketSpec()
+    if spec.isEmpty():
+        raise ValueError(f"table {table} has no bucket spec")
+    return spec.get().numBuckets(), list(meta.schema().fieldNames())
+
+
 def table_num_buckets(spark: SparkSession, table: str) -> int:
     """The bucket count recorded in a table's catalog bucket spec —
-    the single source of truth the append path reads so it can never
-    disagree with the build that created the table."""
-    for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
-        if r.col_name.strip() == "Num Buckets":
-            return int(r.data_type)
-    raise ValueError(f"table {table} has no bucket spec")
+    the single source of truth the append and the match read, so
+    neither can disagree with the build that created the table."""
+    return _bucket_layout(spark, table)[0]
 
 
 def append_lsh_index(spark: SparkSession, table: str,
                      batch_docs: DataFrame) -> None:
     """The APPEND job: insert an ingest batch's band rows into the
     existing bucketed index as ADDITIONAL bucket files — cost is
-    batch-proportional (the corpus is never rewritten). Appended files
-    honor the table's OWN bucket spec (count read from the catalog,
-    same murmur3-pmod hash — a build with a scaled count and this
-    append can't disagree; ADVICE r06), so the index side STILL joins
-    with zero exchange; what degrades is the one-file-per-bucket
-    sorted-scan property — the merge join adds a bucket-local Sort
-    (no shuffle) until a compaction (``build_lsh_index`` re-run, the
-    standard LSM-style story) restores it. Append-then-match ≡
-    rebuild-then-match and the post-compaction layout/plan restoration
-    are pinned in tests/test_dedup_similarity.py + test_plans.py."""
-    n_buckets = table_num_buckets(spark, table)
+    batch-proportional (the corpus is never rewritten). The rows go in
+    through ``insertInto``, so the write takes the table's OWN bucket
+    and sort spec from the catalog (same murmur3-pmod hash — a build
+    with a scaled count and this append can't disagree; ADVICE r06);
+    ``insertInto`` matches columns by position, so the rows are
+    selected in the table's column order. The index side therefore
+    STILL joins with zero exchange; what degrades is the
+    one-file-per-bucket sorted-scan property — the merge join adds a
+    bucket-local Sort (no shuffle) until a compaction
+    (``build_lsh_index`` re-run, the standard LSM-style story) restores
+    it. Append-then-match ≡ rebuild-then-match and the post-compaction
+    layout/plan restoration are pinned in
+    tests/test_dedup_similarity.py + test_plans.py."""
+    n_buckets, columns = _bucket_layout(spark, table)
     bands = _banded_signatures(
         _tokens(batch_docs).select("doc_id", "toks"))
     # One new file per bucket per append: repartition on the bucket
     # columns with the table's bucket count, exactly as the build does.
-    (bands.repartition(n_buckets, "band_id", "band_hash")
-     .write.mode("append").format("parquet")
-     .bucketBy(n_buckets, "band_id", "band_hash")
-     .sortBy("band_id", "band_hash")
-     .saveAsTable(table))
+    (bands.select(*columns)
+     .repartition(n_buckets, "band_id", "band_hash")
+     .write.insertInto(table))
 
 
 def match_lsh_index(spark: SparkSession, sf_dir: str,
@@ -691,9 +707,10 @@ def match_lsh_index(spark: SparkSession, sf_dir: str,
     lifecycle: band-join the ingest batch (doc_id % NEW_BATCH_MOD == 0)
     against an EXISTING persisted index with NO exchange on the index
     side — only the batch (tiny) shuffles into the index's bucket
-    layout, and the merge join reads the bucket files directly.
-    Plan-asserted: exactly one hashpartitioning exchange mentions
-    band_id (the batch side; tests/test_plans.py). The batch's own
+    layout, once per corpus state, and the merge join reads the bucket
+    files directly. Plan-asserted (tests/test_plans.py): the one
+    band_id exchange is the batch's, inside its pinned relation, and a
+    warm match executes none. The batch's own
     bands are expected to be in the index (post-append state), so
     new×new pairs come out of the same join, deduped by the lo<hi
     keep rule — output is IDENTICAL to ``q_dedup_incremental_lsh``'s,
@@ -707,21 +724,29 @@ def match_lsh_index(spark: SparkSession, sf_dir: str,
     gated — ad-hoc runs on unaudited corpora fail loud.
 
     The BATCH side (token handle, batch band rows, verify lookups, PK
-    verdict) depends only on the documents input, so the default scan
-    serves it from ``_MATCH_BATCH_MEMO`` (keyed on ``sf_dir``, guarded
-    by the documents state) and audits once per corpus state. The
-    INDEX side (table read, band join, verify) is rebuilt per call: a
-    DataFrame over the catalog table keeps the file listing it was
-    analyzed with, so after a table refresh a memoized one would miss
-    the appended new×new pairs, or read files a compaction removed."""
+    verdict) depends only on the documents input and the index's
+    bucket count, so the default scan serves it from
+    ``_MATCH_BATCH_MEMO`` (keyed on ``sf_dir``, guarded by the
+    documents state and the table's catalog bucket count) and audits
+    once per corpus state. Its band rows are pinned already laid out
+    like the index's buckets (``_match_batch_side``), so a warm match
+    signs nothing and its merge join reads the batch as an
+    ``InMemoryTableScan``: no exchange on either side, no batch sort.
+    The INDEX side (table read, band join, verify) is rebuilt per
+    call: a DataFrame over the catalog table keeps the file listing it
+    was analyzed with, so after a table refresh a memoized one would
+    miss the appended new×new pairs, or read files a compaction
+    removed."""
     table = table or lsh_index_table(sf_dir, spark)
+    n_buckets = table_num_buckets(spark, table)
     if docs is None:
         (new_side, lookups, verdict), _ = _MATCH_BATCH_MEMO.plan(
             sf_dir, spark, corpus_state(sf_dir, spark),
-            lambda: _match_batch_side(spark, sf_dir))
+            lambda: _match_batch_side(spark, sf_dir, n_buckets),
+            layout=n_buckets)
     else:
         (new_side, lookups, verdict), _ = _match_batch_side(
-            spark, sf_dir, docs)
+            spark, sf_dir, n_buckets, docs)
     prefiltered = _batch_index_candidates(
         spark, new_side, _band_side(spark.table(table), "index"),
         _new_first())
@@ -731,25 +756,45 @@ def match_lsh_index(spark: SparkSession, sf_dir: str,
     return out if verdict is None else attach_verdict(out, verdict)
 
 
-# match_lsh_index's batch sides, one per corpus path (policy in
-# plans/cache.py)
+# match_lsh_index's batch sides, one per corpus path, and the batch
+# band rows they pin, one per distinct plan (policy in plans/cache.py)
 _MATCH_BATCH_MEMO = StateCache(max_entries=4)
+_BATCH_BANDS_LIVE = StateCache(max_entries=4)
 
 
-def _match_batch_side(spark: SparkSession, sf_dir: str,
+def _match_batch_side(spark: SparkSession, sf_dir: str, n_buckets: int,
                       docs: DataFrame | None = None) -> tuple[tuple, list]:
     """``((new_side, lookups, verdict), pins)``: the batch's merge-hinted
     band rows, the verify lookups and, on the default scan, the PK
-    verdict; the pins are the token handle and the verdict."""
+    verdict; the pins are the token handle, the band rows and the
+    verdict.
+
+    The band rows are pinned per corpus state in the layout of an index
+    with ``n_buckets`` buckets: hash-partitioned on (band_id,
+    band_hash) into ``n_buckets`` partitions (the same murmur3-pmod
+    hash as the bucket files) and sorted within each. The cached
+    relation reports that partitioning and ordering while
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is
+    off (Spark's default), so the merge join needs no exchange and no
+    sort on the batch side, and the batch is signed once per corpus
+    state, not once per match. Until its first materialization the
+    scan reports no partitioning, so a cold match's initial plan
+    re-shuffles the batch; AQE drops that exchange once the cache
+    stage has run. With the conf on, the join may shuffle the batch
+    again on every call: slower, same rows."""
     toks = _doc_tokens(spark, sf_dir, docs)
-    new_side = _band_side(_banded_signatures(
-        toks.filter(F.col("doc_id") % NEW_BATCH_MOD == 0)), "new")
-    pins = [(_TOK_LIVE, toks)]
+    bands = _BATCH_BANDS_LIVE.pin(
+        _band_side(_banded_signatures(
+            toks.filter(F.col("doc_id") % NEW_BATCH_MOD == 0)), "new")
+        .repartition(n_buckets, "band_id", "band_hash")
+        .sortWithinPartitions("band_id", "band_hash"),
+        spark, corpus_state(sf_dir, spark))
+    pins = [(_TOK_LIVE, toks), (_BATCH_BANDS_LIVE, bands)]
     verdict = None
     if docs is None:
         verdict = _doc_id_verdict(spark, sf_dir, "the LSH index match")
         pins.append((_PK_VERDICT_LIVE, verdict))
-    return (new_side.hint("merge"), _verify_lookups(toks), verdict), pins
+    return (bands.hint("merge"), _verify_lookups(toks), verdict), pins
 
 
 def match_index_pairs_for_tick(spark: SparkSession, table: str,
@@ -1444,7 +1489,7 @@ WITH RECURSIVE
 """
 
 ORACLE_DEDUP_COMPONENTS_LSH = f"""
-WITH RECURSIVE {_lsh_edges_sql()},
+WITH RECURSIVE {_lsh_edges_sql(materialized=True)},
 {_COMPONENTS_SQL}
 {_COMPONENT_SIZES_SQL}
 """
@@ -1669,7 +1714,7 @@ def refresh_components_table(spark: SparkSession, sf_dir: str,
 
 
 ORACLE_DEDUP_COMPONENTS_INCREMENTAL = f"""
-WITH RECURSIVE {_lsh_edges_sql()},
+WITH RECURSIVE {_lsh_edges_sql(materialized=True)},
 {_COMPONENTS_SQL}
 SELECT doc_id, component_id, component_size FROM (
     {_COMPONENT_SIZES_SQL})
@@ -1847,7 +1892,7 @@ GROUP BY lang
 """
 
 ORACLE_DEDUP_KEEP_ONE_LSH = f"""
-WITH RECURSIVE {_lsh_edges_sql()},
+WITH RECURSIVE {_lsh_edges_sql(materialized=True)},
 {_KEEP_ONE_SQL}"""
 
 ORACLE_DEDUP_KEEP_ONE = f"""

@@ -123,7 +123,7 @@ q AS (
         SELECT doc_id, lang, tokens,
                {ieee_round_sql(_SCORE_SQL, 6)} AS score
         FROM dq)
-    WHERE score >= {QUALITY_THRESHOLD}),{_lsh_edges_sql(_SURVIVOR_EDGES)},
+    WHERE score >= {QUALITY_THRESHOLD}),{_lsh_edges_sql(_SURVIVOR_EDGES, materialized=True)},
 {_DROPPED_SQL},
 kept AS (
     SELECT * FROM q WHERE doc_id NOT IN (SELECT doc_id FROM dropped)),

@@ -28,9 +28,12 @@ state-keyed table names.
 
 Users: the plan memos ``_COLLOC_MEMO``, ``_PQ_QUERY_MEMO``,
 ``_PQ_CB_MEMO`` and ``dedup._MATCH_BATCH_MEMO`` (the LSH match's
-batch side); the pinned handles ``_TOK_LIVE``, ``_INC_CC_LIVE``,
-``_PQ_CENT_LIVE``, ``_PQ_TRAIN_LIVE`` and ``tables._PK_VERDICT_LIVE``
-(one-row PK verdicts: one audit per corpus state per session).
+batch side, guarded on the index's bucket count too); the pinned
+handles ``_TOK_LIVE``, ``_INC_CC_LIVE``, ``_PQ_CENT_LIVE``,
+``_PQ_TRAIN_LIVE``, ``dedup._BATCH_BANDS_LIVE`` (the match batch's
+band rows, stored in the index's bucket layout: one signing per
+corpus state) and ``tables._PK_VERDICT_LIVE`` (one-row PK verdicts:
+one audit per corpus state per session).
 
 One guard decides every hit: the same session object, the same
 ``applicationId`` (a stopped-and-recreated context must never get
@@ -138,25 +141,29 @@ class StateCache:
         return [e.df for e in list(self._entries.values())]
 
     def plan(self, key, spark: SparkSession, state: object,
-             build: Callable[[], tuple[DataFrame, list]]
-             ) -> tuple[DataFrame, list]:
+             build: Callable[[], tuple[DataFrame, list]],
+             layout: object = None) -> tuple[DataFrame, list]:
         """``(df, pins)`` for ``key``: the stored pair on a guard hit
-        (its pins re-pinned), else ``build()``'s, stored."""
+        (its pins re-pinned), else ``build()``'s, stored. A ``layout``
+        (a parameter the plan was built for, read from outside the
+        input) joins the guarded state as ``(state, layout)``; the pins
+        are re-pinned under ``state`` alone, as they were pinned."""
         app = _app_id(spark)
         if state is None or app is None:
             return build()
+        guarded = state if layout is None else (state, layout)
         with self._lock:
             ent = self._entries.pop(key, None)
             if ent is not None:
                 self._entries[key] = ent
-        if ent is not None and _holds(ent, spark, app, state):
+        if ent is not None and _holds(ent, spark, app, guarded):
             for owner, h in ent.pins:
                 owner.pin(h, spark, state)
             return ent.df, ent.pins
         df, pins = build()
         with self._lock:
             self._entries.pop(key, None)
-            self._entries[key] = _Entry(spark, app, state, df, pins)
+            self._entries[key] = _Entry(spark, app, guarded, df, pins)
             self._trim(app)
         return df, pins
 

@@ -550,11 +550,13 @@ def test_lsh_compaction_contract(spark):
     re-run) must restore (a) exactly one file per bucket, (b) the
     duplicate-free row set (= the appended table's distinct band
     rows), and (c) the match plan's sorted-scan propagation — the
-    bucket-local Sort the append introduced is gone (Sort count back
-    to 1, the batch side's own merge-join sort)."""
+    bucket-local Sort the append introduced is gone (the query runs no
+    Sort; the batch side's merge-join sort is paid once, in its pinned
+    relation)."""
     from pyspark.sql import functions as F
 
     from .conftest import SF_SMALL
+    from .test_plans import assert_batch_side_pinned
     from ngrams_collocations_hadoop_spark.operators import dedup as D
     from ngrams_collocations_hadoop_spark.plans.checks import physical_plan
     from ngrams_collocations_hadoop_spark.sources.tables import load_table
@@ -579,9 +581,9 @@ def test_lsh_compaction_contract(spark):
     # the appended table's distinct row set
     assert spark.table(compacted).count() == appended_distinct
     # (c) sorted-scan propagation restored: no bucket-local Sort on
-    # the index side (1 Sort = the freshly-shuffled batch side's)
-    plan = physical_plan(D.match_lsh_index(spark, SF_SMALL, compacted))
-    assert plan.count("Sort ") == 1, plan
+    # the index side (the batch side's sort runs in its pinned relation)
+    df = D.match_lsh_index(spark, SF_SMALL, compacted)
+    assert assert_batch_side_pinned(df) == 0, physical_plan(df)
 
 
 def test_lsh_bucket_policy_on_directory_corpus(tmp_path):
@@ -1492,6 +1494,37 @@ def test_match_lsh_warm_call_reuses_batch_side(spark, monkeypatch):
     monkeypatch.undo()
     got = sorted(tuple(r) for r in second.collect())
     assert got == sorted(tuple(r) for r in first.collect()) and got
+
+
+def test_match_lsh_rows_hold_when_cached_plans_may_repartition(spark):
+    """The pinned batch skips its merge-join exchange only because a
+    cached relation keeps its stored plan's partitioning, which holds
+    while ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
+    is off (Spark's default). A session with it on may get the
+    exchange back, but must get the same rows."""
+    import pandas as pd
+
+    from .conftest import SF_SMALL
+    from .util_diff import canon, duck_con
+    from ngrams_collocations_hadoop_spark.operators import dedup as D
+
+    conf = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    table = _full_index(spark)
+    before = spark.conf.get(conf)
+    D._MATCH_BATCH_MEMO.clear()
+    D._BATCH_BANDS_LIVE.clear()
+    spark.conf.set(conf, "true")
+    try:
+        got = [D.match_lsh_index(spark, SF_SMALL, table).toPandas()
+               for _ in range(2)]
+    finally:
+        spark.conf.set(conf, before)
+        D._MATCH_BATCH_MEMO.clear()
+        D._BATCH_BANDS_LIVE.clear()
+    want = canon(duck_con(SF_SMALL).execute(
+        D.ORACLE_DEDUP_PERSISTED_LSH).df())
+    for df in got:
+        pd.testing.assert_frame_equal(canon(df), want, check_dtype=False)
 
 
 def test_match_lsh_memo_misses_after_inplace_rewrite(spark, tmp_path):
